@@ -481,8 +481,8 @@ def mondrian_kanon(df: DataFrame, qis: Sequence[str], k: int, max_depth: int = 1
         # tree stays O(|qis|) at every depth (a flat WHEN chain was
         # tried first and blew up codegen at deep levels: i22's level-9
         # ~300-branch CASE tripled its wall).  Lookup semantics mirror
-        # the join exactly: element_at yields NULL for non-splitting
-        # pids, which keeps their pid unchanged.
+        # the join exactly: try_element_at yields NULL for non-splitting
+        # pids on every ANSI setting, which keeps their pid unchanged.
         pid = F.col("mondrian_pid")
         med_map = F.create_map(
             *[
@@ -498,8 +498,8 @@ def mondrian_kanon(df: DataFrame, qis: Sequence[str], k: int, max_depth: int = 1
                 for x in (F.lit(p).cast("long"), F.lit(d))
             ]
         )
-        med = F.element_at(med_map, pid)
-        dim = F.element_at(dim_map, pid)
+        med = F.try_element_at(med_map, pid)
+        dim = F.try_element_at(dim_map, pid)
         gt = F.lit(False)
         for q in qis:
             gt = gt | ((dim == q) & (F.col(q).cast("double") > med))

@@ -51,16 +51,6 @@ def hash64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def hash31_fast(col: Column) -> Column:
-    """xxhash64-based 31-bit hash — the PRODUCTION alternative to
-    hash31_md5 (codegen-friendly, no md5 + hex-parse cost) for
-    deployments that do not need the DuckDB oracle replay.  Not used by
-    any registered query: the oracle-checked MinHash core deliberately
-    uses hash31_md5, and swapping this in there would break the
-    structural j3/j23/k10 oracles (they replay the md5 hashes)."""
-    return F.pmod(F.xxhash64(col), F.lit(_MERSENNE))
-
-
 def hash31_md5(col: Column) -> Column:
     """DuckDB-replicable 31-bit hash: 60 bits of md5 hex folded mod the
     Mersenne prime — DuckDB computes the identical value as
@@ -171,21 +161,6 @@ def minhash_signature_grouped(sh: DataFrame, n_perms: int = _MINHASH_PERMS) -> D
         for p, (a, b) in enumerate(_perm_constants(n_perms))
     ]
     return ex.groupBy("doc_id").agg(*aggs)
-
-
-def band_keys(sig: Column, bands: int = _MINHASH_BANDS) -> Column:
-    """LSH banding: hash each contiguous run of the signature; docs
-    agreeing on ANY band become candidates."""
-    r = _MINHASH_PERMS // bands
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[sig[b * r + i] for i in range(r)]).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
 
 
 def banded_signatures(sh: DataFrame) -> DataFrame:
@@ -2862,11 +2837,14 @@ def maximal_dup_spans_chars_multipass(
     ``derive_dup_span_passes`` — the measured-constant model from the
     completed sf100 run.  No silent default budget: guessing the disk
     wrong defeats the entire point of the bounded form, so "auto"
-    without a budget raises ``ValueError``."""
-    import os
-    import shutil
+    without a budget raises ``ValueError``.
 
-    from ma_anonymization_etl_spark.sources.io import scratch_dir
+    Covered positions and spans land under ``scratch``: by default a
+    new directory per invocation (``sources.io.fresh_scratch_dir``); a
+    caller's path must not exist yet and is never deleted."""
+    import os
+
+    from ma_anonymization_etl_spark.sources.io import fresh_scratch_dir
 
     if passes == "auto":
         budget = disk_budget_bytes
@@ -2889,10 +2867,8 @@ def maximal_dup_spans_chars_multipass(
     from pyspark.sql import Window
 
     spark = docs.sparkSession
-    out = scratch or os.path.join(
-        scratch_dir(spark, "j56_multipass"), "covered"
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    work = fresh_scratch_dir(spark, "j56_multipass", scratch)
+    out = os.path.join(work, "covered")
     for p in range(passes):
         occ_p = (
             _char_occ(docs, cgram, id_col, text_col)
@@ -2924,8 +2900,7 @@ def maximal_dup_spans_chars_multipass(
     # round 12), and docs partition independently across ranges, so
     # the per-range span union is trivially identical.
     covered = spark.read.parquet(out)
-    spans_out = os.path.join(os.path.dirname(out), "spans")
-    shutil.rmtree(spans_out, ignore_errors=True)
+    spans_out = os.path.join(work, "spans")
     for p in range(passes):
         sp = _spans_from_covered(
             covered.filter(F.pmod(F.col("doc_id"), F.lit(passes)) == p),
@@ -4978,11 +4953,15 @@ def set_similarity_join(
     assume_distinct: bool = False,
     prebuilt: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """EXACT Jaccard set-similarity self-join via PREFIX FILTERING
+    """Jaccard set-similarity self-join via PREFIX FILTERING
     (AllPairs/PPJoin family — Bayardo et al., WWW'07; Xiao et al.,
-    WWW'08): all pairs with J(A,B) >= tau, no false negatives, no
-    hashing error.  j3's MinHash-LSH trades a recall tail for speed;
-    this is the path for dedup contracts that must be exact.
+    WWW'08): all pairs with J(A,B) >= tau.  The filters drop no
+    qualifying pair; the verify counts |A∩B| over 64-bit token hashes,
+    so a pair's count is off only when two distinct tokens of A ∪ B
+    collide in xxhash64 — ~3e-16 per pair at |A∪B| ~ 10², bound
+    written at ``_hashed_token_arrays``.  j3's MinHash-LSH trades a
+    recall tail for speed; this is the path for dedup contracts that
+    must be exact up to that bound.
 
     ``toks`` is an exploded (id, token) table; duplicates are removed.
     Returns (a_id, b_id, jaccard ROUND 6) with a_id < b_id.
@@ -5629,8 +5608,10 @@ def containment_join(
     positional: bool = True,
     df_cap: int | None = None,
 ) -> DataFrame:
-    """EXACT directed CONTAINMENT self-join: ordered pairs (A, B),
-    A ≠ B, with |A∩B| / |A| >= c — "A is (nearly) contained in B".
+    """Directed CONTAINMENT self-join: ordered pairs (A, B), A ≠ B,
+    with |A∩B| / |A| >= c — "A is (nearly) contained in B".  Exact up
+    to the 64-bit token-hash collision bound written at
+    ``_hashed_token_arrays`` (the verify intersects xxhash64 arrays).
     Jaccard (j50) misses asymmetric duplication by construction: a
     paragraph quoted inside a 100× longer page has Jaccard ≈ 0.01 but
     containment 1.0; quote/boilerplate/subset detection needs this

@@ -540,23 +540,22 @@ def pair_verify_f32_screen_multipass(
     the _copurchase_edges discipline): at above-cutover scale the pair
     list is the largest bounded object here, and the first probe run
     measured the default deserialized storage OOM-ing the heap while
-    every pass streams it exactly once anyway."""
-    import os
-    import shutil
+    every pass streams it exactly once anyway.
 
+    Survivors land in ``scratch``: by default a new directory per
+    invocation (``sources.io.fresh_scratch_dir``), so the frame a
+    call returns keeps reading its own files; a caller's path must not
+    exist yet and is never deleted."""
     from pyspark import StorageLevel
 
-    from ma_anonymization_etl_spark.sources.io import scratch_dir
+    from ma_anonymization_etl_spark.sources.io import fresh_scratch_dir
 
     if passes < 2:
         return pair_verify_f32_screen(
             cand, corpus, tau, broadcast_lookups=False, eps=eps
         )
     spark = cand.sparkSession
-    out = scratch or os.path.join(
-        scratch_dir(spark, "pair_verify_multipass"), "screened"
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    out = fresh_scratch_dir(spark, "pair_verify_multipass", scratch)
     cand = cand.localCheckpoint(
         eager=True, storageLevel=StorageLevel.DISK_ONLY
     )

@@ -65,6 +65,22 @@ def scratch_dir(spark: SparkSession, *parts: str) -> str:
     return d
 
 
+def fresh_scratch_dir(spark: SparkSession, name: str, scratch: str | None = None) -> str:
+    """A path that one invocation's side output owns alone: a new
+    directory under ``scratch_dir(spark, name)``, or the caller's
+    ``scratch``, which must not exist yet.  A caller's path is refused,
+    never emptied, so no call deletes data it did not write, and two
+    calls in one session never read each other's files."""
+    import os
+    import uuid
+
+    if scratch is None:
+        return os.path.join(scratch_dir(spark, name), uuid.uuid4().hex)
+    if os.path.exists(scratch):
+        raise ValueError(f"scratch path {scratch!r} already exists; pass a new one")
+    return scratch
+
+
 def stage_key(sf_dir: str) -> str:
     """Collision-resistant conf-key suffix for a staged sf_dir: the
     readable sanitized path plus an 8-hex digest of the raw string

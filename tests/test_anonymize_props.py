@@ -172,6 +172,27 @@ def test_mondrian_k_guarantee(spark, customer):
     assert bad == 0
 
 
+def test_mondrian_pids_same_on_every_ansi_setting(spark, customer):
+    # The split lookup misses for every pid that does not split; the miss
+    # must read as NULL (pid unchanged) whatever spark.sql.ansi.enabled is.
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    pids = {}
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            out = A.mondrian_kanon(
+                customer.select("c_custkey", "c_nationkey", "c_acctbal"),
+                ["c_acctbal", "c_nationkey"], k=25,
+            )
+            pids[ansi] = sorted(
+                (r["c_custkey"], r["mondrian_pid"])
+                for r in out.select("c_custkey", "mondrian_pid").collect())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert pids["true"] == pids["false"]
+    assert len({p for _, p in pids["true"]}) > 1  # it actually split
+
+
 def test_mondrian_relaxed_k_and_sizes(spark, customer):
     k = 25
     df = customer.select("c_custkey", "c_nationkey", "c_acctbal")

@@ -2368,6 +2368,40 @@ def test_j56d_multipass_bit_identical(spark):
         assert got == base, f"passes={passes} changed the release"
 
 
+def test_j56d_multipass_invocations_keep_their_own_scratch(spark, tmp_path):
+    """Each multipass span inventory reads its own scratch: the first
+    call's frame, collected after a second call on other docs, still
+    releases the first corpus's spans.  A caller's existing scratch
+    directory is refused and left as it was."""
+    import pytest
+
+    from ma_anonymization_etl_spark.operators.llm import (
+        maximal_dup_spans_chars,
+        maximal_dup_spans_chars_multipass,
+    )
+
+    def release(df):
+        return sorted((r.doc_id, r.span_start, r.span_len) for r in df.collect())
+
+    a = spark.createDataFrame([(0, "x" * 30 + "q" * 40), (1, "x" * 30 + "z" * 45)],
+                              "doc_id long, text string")
+    b = spark.createDataFrame([(7, "k" * 60), (8, "m" * 25 + "k" * 35)],
+                              "doc_id long, text string")
+    expect = [release(maximal_dup_spans_chars(d, cgram=20, min_span=25)) for d in (a, b)]
+    assert all(expect) and expect[0] != expect[1]
+    outs = [maximal_dup_spans_chars_multipass(d, cgram=20, min_span=25, passes=2)
+            for d in (a, b)]
+    assert [release(o) for o in outs] == expect
+
+    mine = tmp_path / "mine"
+    mine.mkdir()
+    (mine / "keep.txt").write_text("caller data")
+    with pytest.raises(ValueError, match="already exists"):
+        maximal_dup_spans_chars_multipass(a, cgram=20, min_span=25, passes=2,
+                                          scratch=str(mine))
+    assert (mine / "keep.txt").read_text() == "caller data"
+
+
 def test_j56d_auto_passes_derivation(spark, monkeypatch):
     """The byte-rational passes="auto" path (round-12 continuation):
     the pass count must follow the written peak-disk model with the
@@ -2590,6 +2624,45 @@ def test_j9d_multipass_verify_release_identical(spark):
             ).collect()
         }
         assert got == base, f"passes={passes}: multipass drifted"
+
+
+def test_j9d_multipass_invocations_release_their_own_pairs(spark, tmp_path):
+    """Two multipass verifies in one session write separate scratch
+    directories: each returned frame, read only after both calls ran,
+    releases its own pair set.  A caller's existing scratch directory is
+    refused and left as it was."""
+    import pytest
+
+    from ma_anonymization_etl_spark.operators.similarity import (
+        _J9B_TAU,
+        _j9b_corpus_cand,
+        pair_verify_f32_screen,
+        pair_verify_f32_screen_multipass,
+    )
+
+    corpus, cand, _ = _j9b_corpus_cand(spark, SF_SMOKE)
+    halves = [cand.filter(F.col("a_id") % 2 == i) for i in (0, 1)]
+    expect = [
+        {(r.a_id, r.b_id) for r in pair_verify_f32_screen(
+            c, corpus, _J9B_TAU, broadcast_lookups=True).collect()}
+        for c in halves
+    ]
+    assert all(expect) and expect[0] != expect[1]
+    outs = [pair_verify_f32_screen_multipass(c, corpus, _J9B_TAU, passes=2)
+            for c in halves]
+    assert [{(r.a_id, r.b_id) for r in o.collect()} for o in outs] == expect
+
+    mine = tmp_path / "mine"
+    mine.mkdir()
+    (mine / "keep.txt").write_text("caller data")
+    with pytest.raises(ValueError, match="already exists"):
+        pair_verify_f32_screen_multipass(
+            cand, corpus, _J9B_TAU, passes=2, scratch=str(mine))
+    assert (mine / "keep.txt").read_text() == "caller data"
+    fresh = tmp_path / "fresh"
+    got = pair_verify_f32_screen_multipass(
+        halves[0], corpus, _J9B_TAU, passes=2, scratch=str(fresh))
+    assert {(r.a_id, r.b_id) for r in got.collect()} == expect[0]
 
 
 def test_j54c_bm25f_single_field_reduction_and_title_boost(spark):
