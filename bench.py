@@ -40,10 +40,9 @@ HEADLINE = [
     "j6_tf_idf",
     "j8_sim_topk",
     "j10_knn_classify",
-    # Production-path twins and the LSH-composed pair search: j8/j10
-    # keep the sequential fold for bit-exact oracle parity; j21/j10b are
-    # the Arrow-matmul plans a 100 TB deployment would run, and belong
-    # in the headline so the bench reflects the real path.
+    # j21/j10b run j8/j10's sequential fold under their own names (one
+    # engine per oracle contract); they stay so the headline set and
+    # its history stay comparable.  Then the LSH-composed pair search.
     "j21_sim_topk_vectorized",
     "j10b_knn_vectorized",
     "j9b_sim_pair_lsh",
@@ -100,9 +99,8 @@ HEADLINE = [
     "j60c_fuzzy_dedup_capped",
     "j64_knn_label_ann",
     # round-12 addition (BASELINE.md round-12 continuation note): the
-    # Arrow-reranked knn_label twin next to its exact sibling — the
-    # j21/j10b precedent (the production path belongs in the headline;
-    # read the pair together).  Earlier subtotals stay comparable.
+    # Arrow-reranked knn_label twin next to its exact sibling (read the
+    # pair together).  Earlier subtotals stay comparable.
     "j64b_knn_label_ann_fast",
 ]
 

@@ -245,10 +245,15 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         spark.sparkContext.setLogLevel("ERROR")
     try:
         out = run_route(spark, route)
-        n = out.count()
-        print(f"route ok: {n} rows -> {route.get('output', {}).get('path', '(no sink)')}")
+        sink = route.get("output")
+        # With a sink the route has already run once; read its parquet
+        # back (footer row counts) rather than re-executing the lineage.
+        # A dynamic-overwrite sink counts every partition it holds.
+        res = spark.read.parquet(sink["path"]) if sink else out
+        n = res.count()
+        print(f"route ok: {n} rows -> {sink['path'] if sink else '(no sink)'}")
         if args.show:
-            for row in out.limit(args.show).collect():
+            for row in res.limit(args.show).collect():
                 print(row)
         return 0
     finally:

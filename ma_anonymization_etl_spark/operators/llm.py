@@ -3027,7 +3027,7 @@ def j56c_maximal_dup_spans_skewguard(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 # j56d shares j56b's oracle VERBATIM (identical twin corpus, identical
-# release definition — the j44/j44b precedent): the forms differ only
+# release definition — the j64/j64b precedent): the forms differ only
 # in shuffle STAGING, and the gram ranges partition the key space, so
 # a drift between them turns this row red at every gate SF.
 @register("j56d_dup_spans_multipass", oracle=_J56B_ORACLE)

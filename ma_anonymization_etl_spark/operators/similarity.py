@@ -31,17 +31,17 @@ def _sql_cos(a: str, b: str) -> str:
     )
 
 
-@register(
-    "j8_sim_topk",
-    oracle=f"""
+_J8_ORACLE = f"""
 WITH q AS (SELECT {_SQL_E} AS qe FROM embeddings WHERE vec_id = 0)
 SELECT vec_id, ROUND({_sql_cos(_SQL_E, 'qe')}, 5) AS cos_sim
 FROM embeddings, q
 WHERE vec_id <> 0
 ORDER BY cos_sim DESC, vec_id
 LIMIT 10
-""",
-)
+"""
+
+
+@register("j8_sim_topk", oracle=_J8_ORACLE)
 def j8_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """j8: brute-force cosine top-k for one query vector (vec_id 0) —
     broadcast the query, fold per row, TakeOrderedAndProject for the
@@ -610,8 +610,8 @@ def j9d_sim_pair_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate because Spark evaluates higher-order-function lambdas
     interpretively; at sf10's 9.3M candidates that is the wall-clock
     bulk.  BLAS-bound numpy over Arrow batches is the same FLOPs at a
-    fraction of the constant — j8 vs j21 / j10 vs j10b, applied to the
-    pair-search verify.  Measured side by side in BASELINE.md round 8.
+    fraction of the constant, applied to the pair-search verify.
+    Measured side by side in BASELINE.md round 8.
 
     Scale shape: identical to j9b until the verify; the verify is
     ``pair_verify_f32_screen`` — float32-shuffled lookups (HALF the
@@ -811,9 +811,7 @@ def j9e_pair_verify_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "j10_knn_classify",
-    oracle=f"""
+_J10_ORACLE = f"""
 WITH e AS (SELECT vec_id, label, {_SQL_E} AS v FROM embeddings),
 q AS (SELECT * FROM e WHERE vec_id < 20),
 scored AS (
@@ -831,8 +829,10 @@ SELECT query_id, label AS predicted_label, n_votes FROM (
                                ORDER BY n_votes DESC, label) AS r
   FROM votes
 ) WHERE r = 1
-""",
-)
+"""
+
+
+@register("j10_knn_classify", oracle=_J10_ORACLE)
 def j10_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """j10: 5-NN majority-label classification for the first 20 vectors
     — rank neighbours per query, vote, tie-break on smaller label."""
@@ -1866,138 +1866,21 @@ def j17_sim_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select("vec_id", F.concat(*bits).alias("bucket"))
 
 
-@register(
-    "j21_sim_topk_vectorized",
-    # The perf twin reproduces j8 exactly (equality pinned in tests), so
-    # it carries j8's oracle — the numpy path is hash-checked too.
-    oracle=f"""
-WITH q AS (SELECT {_SQL_E} AS qe FROM embeddings WHERE vec_id = 0)
-SELECT vec_id, ROUND({_sql_cos(_SQL_E, 'qe')}, 5) AS cos_sim
-FROM embeddings, q
-WHERE vec_id <> 0
-ORDER BY cos_sim DESC, vec_id
-LIMIT 10
-""",
-)
+@register("j21_sim_topk_vectorized", oracle=_J8_ORACLE)
 def j21_sim_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """j21: Arrow-vectorized brute-force cosine top-k via mapInPandas +
-    numpy matmul — the PERFORMANCE twin of j8 (whose sequential
-    F.aggregate fold is kept for bit-exact DuckDB parity).  Per Arrow
-    batch: stack to a matrix, one BLAS matvec, argpartition local top-k;
-    the global TakeOrderedAndProject sees only (batches × k) rows.
-    This is the dense-scoring shape for 100 TB: ~memory-bandwidth-bound
-    per executor, no shuffle until the tiny per-batch winners.
-    Equality with j8 (after ROUND 5) is pinned in tests."""
-    import numpy as np
-    import pandas as pd
-
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qrow = e.filter(F.col("vec_id") == 0).select("embedding").first()
-    q = np.asarray(qrow["embedding"], dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    bq = spark.sparkContext.broadcast(qn)
-
-    def score(batches):
-        qv = bq.value
-        for pdf in batches:
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            cos = (m @ qv) / np.linalg.norm(m, axis=1)
-            k = min(10, len(cos))
-            idx = np.argpartition(-cos, k - 1)[:k]
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy()[idx], "cos_sim": np.round(cos[idx], 5)}
-            )
-
-    scored = e.filter(F.col("vec_id") != 0).mapInPandas(
-        score, "vec_id BIGINT, cos_sim DOUBLE"
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(10)
+    """j21: j8's contract and engine under a second registered name.
+    No Arrow/BLAS form: its equality with the fold would rest on
+    ROUND(5) hiding last-ulp differences, unargued at a boundary."""
+    return j8_sim_topk(spark, sf_dir)
 
 
-@register(
-    "j10b_knn_vectorized",
-    # The perf twin reproduces j10 exactly (equality pinned in tests), so
-    # it carries j10's oracle — the numpy path is hash-checked too.
-    oracle=f"""
-WITH e AS (SELECT vec_id, label, {_SQL_E} AS v FROM embeddings),
-q AS (SELECT * FROM e WHERE vec_id < 20),
-scored AS (
-  SELECT q.vec_id AS query_id, e.label,
-         ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                            ORDER BY {_sql_cos('q.v', 'e.v')} DESC, e.vec_id) AS rn
-  FROM q JOIN e ON e.vec_id <> q.vec_id
-),
-votes AS (
-  SELECT query_id, label, COUNT(*) AS n_votes
-  FROM scored WHERE rn <= 5 GROUP BY query_id, label
-)
-SELECT query_id, label AS predicted_label, n_votes FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY n_votes DESC, label) AS r
-  FROM votes
-) WHERE r = 1
-""",
-)
+@register("j10b_knn_vectorized", oracle=_J10_ORACLE)
 def j10b_knn_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """j10b: Arrow-vectorized 5-NN classification — the PERFORMANCE twin
-    of j10 (whose sequential F.aggregate cosine fold is kept for
-    bit-exact DuckDB parity).  The 20 query vectors broadcast as one
-    normalized numpy matrix; each Arrow batch does a single
-    (20 × batch) BLAS matmul and emits only its local top-5 per query
-    ((cos desc, vec_id) lexsort — j10's exact neighbour order), so the
-    JVM-side global rank + majority vote sees just (batches × 20 × 5)
-    rows.  This is the KNN shape for 100 TB: the O(Q×N) scoring is
-    embarrassingly parallel and memory-bandwidth-bound per executor,
-    with no shuffle until the tiny per-batch winners.  Label equality
-    with j10 is pinned in tests/test_llm_props.py."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    qrows = e.filter(F.col("vec_id") < 20).select("vec_id", "embedding").collect()
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
-    qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
-    bq = spark.sparkContext.broadcast((qids, qmat))
-
-    def topk(batches):
-        ids, qn = bq.value
-        for pdf in batches:
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
-            cos = qn @ m.T  # queries × batch
-            vids = pdf["vec_id"].to_numpy()
-            labels = pdf["label"].to_numpy()
-            qcol, vcol, lcol, ccol = [], [], [], []
-            for qi, qid in enumerate(ids):
-                cand = np.flatnonzero(vids != qid)
-                order = cand[np.lexsort((vids[cand], -cos[qi, cand]))][:5]
-                qcol.extend([qid] * len(order))
-                vcol.extend(vids[order])
-                lcol.extend(labels[order])
-                ccol.extend(cos[qi, order])
-            yield pd.DataFrame(
-                {"query_id": qcol, "vec_id": vcol, "label": lcol, "cos_sim": ccol}
-            )
-
-    local = e.mapInPandas(
-        topk, "query_id BIGINT, vec_id BIGINT, label INT, cos_sim DOUBLE"
-    )
-    w_nn = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    votes = (
-        local.withColumn("rn", F.row_number().over(w_nn))
-        .filter(F.col("rn") <= 5)
-        .groupBy("query_id", "label")
-        .agg(F.count("*").alias("n_votes"))
-    )
-    w_win = Window.partitionBy("query_id").orderBy(F.col("n_votes").desc(), F.col("label"))
-    return (
-        votes.withColumn("r", F.row_number().over(w_win))
-        .filter(F.col("r") == 1)
-        .select("query_id", F.col("label").alias("predicted_label"), "n_votes")
-    )
+    """j10b: j10's contract and engine under a second registered name.
+    An Arrow/BLAS ranking must re-adjudicate the rank-k boundary with
+    the exact fold (as ``knn_label_multiprobe_fast`` does): colinear
+    copies of a query tie up to the last ulps and flip the top-5."""
+    return j10_knn_classify(spark, sf_dir)
 
 
 def _j25_oracle() -> str:
@@ -2247,8 +2130,7 @@ def _km_recompute(assign: DataFrame) -> DataFrame:
 def _km_fit(corpus: DataFrame, k: int = _KM_K):
     """Run the deterministic Lloyd loop; returns (final_assign, cents).
     The corpus is checkpointed on entry: three assignments and two
-    recomputes would otherwise each re-derive its full lineage (for
-    j44 that is load + cast + sin-perturbation + union, ~5 times).
+    recomputes would otherwise each re-derive its full lineage.
     NOT spread (io.spread_small_scan was measured a LOSS here, round
     12): the Lloyd loop runs many small rounds, so widening a tiny
     checkpointed corpus to session parallelism multiplies per-round
@@ -2365,27 +2247,11 @@ LEFT JOIN (SELECT cl, COUNT(*) AS nd FROM dropped GROUP BY cl) d ON d.cl = m.cl
 """
 
 
-@register("j44_semantic_dedup", oracle=_J44_ORACLE)
-def j44_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """j44 (extension): SemDeDup — semantic near-dup removal bounded by
-    k-means cells (arXiv:2303.09540's shape).  The corpus is the j9b
-    fixture (every vector plus a deterministic sin-jittered copy,
-    cos ~= 0.997, because the base corpus is isotropic with no organic
-    pair above 0.6); j43's deterministic Lloyd loop assigns cells; the
-    exact-cosine pair scan runs ONLY within a cell, and a member is
-    dropped when a lower-id cell-mate sits above tau=0.9 (the greedy
-    min-id survivor rule).  Output: per-cluster member/dropped/kept
-    accounting.
-
-    100 TB shape: this is the semantic complement of j9b's LSH route —
-    clustering caps the candidate set at sum(cell^2) with k sized so
-    cells stay ~10k vectors (k ~= N/10k).  After ONE shuffle on cell
-    id, each cell runs locally as an Arrow-batched grouped map: a BLAS
-    gram matrix generates candidates (10k x 10k x 64 = one dgemm), and
-    only the surviving candidates are re-verified with the exact
-    sequential float64 fold, so the output is bit-identical to the
-    declarative/oracle arithmetic while the hot loop stays in BLAS.
-    No all-pairs stage exists at any scale."""
+def _j44_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """j44's (vec_id, v) corpus: the j9b fixture, every vector plus
+    a deterministic sin-jittered copy at id + _J9B_OFF (cos ~= 0.997),
+    because the base corpus is isotropic with no organic pair above
+    0.6.  The oracle's ``e`` CTE replays it."""
     e0 = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("orig_id"), as_double(F.col("embedding")).alias("v")
     )
@@ -2396,20 +2262,53 @@ def j44_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: x * (F.lit(1.0) + F.lit(0.1) * F.sin(F.col("orig_id") + x * F.lit(1000.0))),
         ).alias("v"),
     )
-    corpus = e0.select(F.col("orig_id").alias("vec_id"), "v").unionByName(pert)
-    # one metadata-cheap count derives k (bounded driver scalar, the
-    # j38 discipline); integer ceil, replayed by the oracle's kd CTE
-    n = corpus.count()
+    return e0.select(F.col("orig_id").alias("vec_id"), "v").unionByName(pert)
+
+
+def _semdedup_assign(corpus: DataFrame, n: int) -> DataFrame:
+    """SemDeDup's cluster assignment (vec_id, cl, v) over an ``n``-row
+    (vec_id, v) corpus: derived k (integer ceil, replayed by j44's
+    ``kd`` CTE) and the Arrow/BLAS Lloyd ``_km_fit_arrow``."""
     k = max(_KM_K, (n + _J44_CELL_TARGET - 1) // _J44_CELL_TARGET)
-    assign, _ = _km_fit(corpus, k=k)
-    return semdedup_release(assign)
+    return _km_fit_arrow(corpus, k=k)[0]
+
+
+@register("j44_semantic_dedup", oracle=_J44_ORACLE)
+def j44_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """j44 (extension): SemDeDup — semantic near-dup removal bounded by
+    k-means cells (arXiv:2303.09540's shape).  The corpus is
+    ``_j44_corpus``; the Arrow/BLAS Lloyd loop (``_km_fit_arrow``,
+    j43's deterministic seeds and rounds) assigns cells; the
+    exact-cosine pair scan runs ONLY within a cell, and a member is
+    dropped when a lower-id cell-mate sits above tau=0.9 (the greedy
+    min-id survivor rule).  Output: per-cluster member/dropped/kept
+    accounting.
+
+    The assignment equals the oracle's declarative replay: BLAS
+    near-ties are re-adjudicated by the exact fold and the recompute
+    sums integers (both pinned against ``_km_fit`` in tests).  Also
+    the engine of the ``semantic_dedup_drop`` route step.
+
+    100 TB shape: this is the semantic complement of j9b's LSH route —
+    clustering caps the candidate set at sum(cell^2) with k sized so
+    cells stay ~10k vectors (k ~= N/10k).  After ONE shuffle on cell
+    id, each cell runs locally as an Arrow-batched grouped map: a BLAS
+    gram matrix generates candidates (10k x 10k x 64 = one dgemm), and
+    only the surviving candidates are re-verified with the exact
+    sequential float64 fold, so the output is bit-identical to the
+    declarative/oracle arithmetic while the hot loop stays in BLAS.
+    No all-pairs stage exists at any scale."""
+    corpus = _j44_corpus(spark, sf_dir)
+    # one metadata-cheap count derives k (bounded driver scalar, the
+    # j38 discipline)
+    return semdedup_release(_semdedup_assign(corpus, corpus.count()))
 
 
 def semdedup_dropped(assign: DataFrame) -> DataFrame:
     """SemDeDup's DROP LIST over a cluster assignment (vec_id, cl, v):
     (cl, vec_id) for every member with a LOWER-id cell-mate at
     cos >= tau (the greedy min-id survivor rule) — the cell-bounded
-    BLAS-candidates / exact-verify two-step shared by j44/j44b's
+    BLAS-candidates / exact-verify two-step shared by j44's
     accounting release and the ``semantic_dedup_drop`` route step."""
 
     def cell_pairs(pdf):
@@ -2449,10 +2348,9 @@ def semdedup_dropped(assign: DataFrame) -> DataFrame:
 
 def semdedup_release(assign: DataFrame) -> DataFrame:
     """SemDeDup's cell-bounded pair scan + accounting over a cluster
-    ASSIGNMENT table (vec_id, cl, v) — the release half shared by j44
-    (declarative Lloyd) and j44b (Arrow-matmul Lloyd), so the twins
-    cannot drift.  See j44's docstring for the BLAS-candidates /
-    exact-verify two-step (now in ``semdedup_dropped``)."""
+    ASSIGNMENT table (vec_id, cl, v) — j44's release half.  See j44's
+    docstring for the BLAS-candidates / exact-verify two-step (in
+    ``semdedup_dropped``)."""
     assign = assign.localCheckpoint(eager=False)  # pair scan reads it twice
     dropped = semdedup_dropped(assign)
     members = assign.groupBy("cl").agg(F.count("*").alias("n_members"))
@@ -2473,17 +2371,15 @@ def semantic_drop_ids(corpus: DataFrame) -> DataFrame:
     return the DataFrame of vec_ids a semantic dedup would DROP —
     members with a lower-id near-identical (cos >= 0.9) mate in their
     k-means cell.  Derived k (cells target ~10k vectors, the j44
-    discipline), Arrow/BLAS Lloyd assignment (j44b's engine), exact
-    verify.  Lowest-id survivor; everything else identical to the
-    gate-attested j44/j44b pair semantics.  An EMPTY corpus (every
+    discipline), Arrow/BLAS Lloyd assignment, exact verify — j44's
+    engine.  Lowest-id survivor; everything else identical to the
+    gate-attested j44 pair semantics.  An EMPTY corpus (every
     working row filtered out upstream, or none with an embedding) is a
     no-op — no vectors, no drops — rather than a seed-set crash."""
     n = corpus.count()
     if n == 0:
         return corpus.sparkSession.createDataFrame([], "vec_id BIGINT")
-    k = max(_KM_K, (n + _J44_CELL_TARGET - 1) // _J44_CELL_TARGET)
-    assign, _ = _km_fit_arrow(corpus, k=k)
-    return semdedup_dropped(assign).select("vec_id")
+    return semdedup_dropped(_semdedup_assign(corpus, n)).select("vec_id")
 
 
 def _knn_label_candidates(queries: DataFrame, corpus: DataFrame) -> DataFrame:
@@ -2786,7 +2682,7 @@ def j64b_knn_label_ann_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-k boundary re-adjudicated with the bit-exact fold), so it
     carries j64's exhaustive oracle verbatim: the release is
     decision-identical by the engine's written eps argument, and the
-    gate attests the fast path end-to-end (the j10b/j9d precedent)."""
+    gate attests the fast path end-to-end (the j9d precedent)."""
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     )
@@ -2853,7 +2749,7 @@ def _km_assign_arrow(corpus: DataFrame, cent_rows: list) -> DataFrame:
 
 
 def _km_recompute_arrow(assign: DataFrame) -> DataFrame:
-    """``_km_recompute`` with Arrow-batched int64 PARTIALS — the j44b
+    """``_km_recompute`` with Arrow-batched int64 PARTIALS — j44's
     constant cut (VERDICT r11 item 3).  The declarative recompute
     posexplodes every vector: a 64·N-row (cl, pos, x) shuffle PER
     ROUND is the dominant recompute cost, not the arithmetic.  Here
@@ -2918,8 +2814,8 @@ def _km_recompute_arrow(assign: DataFrame) -> DataFrame:
 def _km_fit_arrow(corpus: DataFrame, k: int = _KM_K):
     """``_km_fit`` with the Arrow assignment AND the Arrow partial-sum
     recompute (``_km_recompute_arrow`` — bit-identical integer totals,
-    see its docstring; the declarative ``_km_recompute`` remains the
-    referee twin on j44's path), centroids collected to the driver
+    see its docstring; the declarative ``_km_recompute`` stays j43's
+    engine and the test referee), centroids collected to the driver
     between rounds (k×64 doubles — the classic distributed-Lloyd
     layout; at k ~ 1e6 this becomes a broadcast variable, same
     shape).  NOT spread — same measured reason as ``_km_fit``
@@ -2941,36 +2837,12 @@ def _km_fit_arrow(corpus: DataFrame, k: int = _KM_K):
     return _km_assign_arrow(corpus, cents.collect()), cents
 
 
-# j44b shares j44's oracle VERBATIM (same derived-k replay, same
-# release definition): the twins differ only in assignment engine, and
-# the near-tie exact re-adjudication makes that difference invisible
-# to the release — which every gate run then re-attests.
 @register("j44b_semdedup_fast", oracle=_J44_ORACLE)
 def j44b_semdedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """j44b (extension): j44's PRODUCTION twin — same derived-k
-    SemDeDup release computed with the Arrow/BLAS Lloyd assignment
-    (``_km_fit_arrow``) instead of the declarative N·k aggregate
-    folds, which the round-9 decade measured as j44's super-linear
-    term (exp 1.31: assignment cost N·k = N²/cell_target).  The
-    release is decision-identical by the near-tie exact re-adjudication
-    (see ``_km_assign_arrow``); a property test pins j44b == j44 at
-    the gate SFs, and the oracle is attached right below by reusing
-    j44's registered SQL (derived-k replay included)."""
-    e0 = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("orig_id"), as_double(F.col("embedding")).alias("v")
-    )
-    pert = e0.select(
-        (F.col("orig_id") + _J9B_OFF).alias("vec_id"),
-        F.transform(
-            F.col("v"),
-            lambda x: x * (F.lit(1.0) + F.lit(0.1) * F.sin(F.col("orig_id") + x * F.lit(1000.0))),
-        ).alias("v"),
-    )
-    corpus = e0.select(F.col("orig_id").alias("vec_id"), "v").unionByName(pert)
-    n = corpus.count()
-    k = max(_KM_K, (n + _J44_CELL_TARGET - 1) // _J44_CELL_TARGET)
-    assign, _ = _km_fit_arrow(corpus, k=k)
-    return semdedup_release(assign)
+    """j44b (extension): j44's contract and engine under a second
+    registered name."""
+    corpus = _j44_corpus(spark, sf_dir)
+    return semdedup_release(_semdedup_assign(corpus, corpus.count()))
 
 
 # --- j43b: convergence-driven Lloyd (production twin of j43) -----------------

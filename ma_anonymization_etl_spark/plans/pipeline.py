@@ -15,6 +15,7 @@ order and never reorders them itself.
 
 from __future__ import annotations
 
+import inspect
 from typing import Any, Mapping, Sequence
 
 from pyspark.sql import DataFrame
@@ -217,7 +218,7 @@ def _step_semantic_dedup_drop(
     absent from ``aux`` and aux rows whose vector value is NULL (the
     null filter below; a None entry would crash the Arrow np.stack —
     ADVICE r11).  Delegates to
-    ``semantic_drop_ids`` (j44b's gate-attested derived-k Arrow Lloyd
+    ``semantic_drop_ids`` (j44's gate-attested derived-k Arrow Lloyd
     + exact-verify engine); completes the dedup-action family's
     embedding modality next to near/fuzzy/substring dedup."""
     from ma_anonymization_etl_spark.functions.vectors import as_double
@@ -234,7 +235,7 @@ def _step_semantic_dedup_drop(
 
 def _step_knn_label(
     df, aux, id_col="doc_id", vec_id_col="vec_id", vec_col="embedding",
-    label_col="label", k=5, out="knn_label", engine="exact",
+    label_col="label", k=5, out="knn_label",
 ):
     """Enrichment step: attach the majority label of each working
     row's ``k`` nearest labelled neighbours (exact cosine over the
@@ -247,21 +248,10 @@ def _step_knn_label(
     route runner records ``out`` under ``label_col``'s declared role
     (cli._merged_columns_cfg) — a vote over a direct identifier is
     still identifying, so such routes must cover ``out`` downstream.
-    ``engine``: "exact" (default — the declarative fold) or "arrow"
-    (``knn_label_multiprobe_fast``, decision-identical by its written
-    eps argument; the knob for whole-multi-million-row working
-    tables, where the interpreted fold is the measured wall)."""
+    The step has one engine, ``knn_label_multiprobe``; its Arrow form
+    stays a registered query (j64b), not a route option."""
     from ma_anonymization_etl_spark.functions.vectors import as_double
-    from ma_anonymization_etl_spark.operators.similarity import (
-        knn_label_multiprobe,
-        knn_label_multiprobe_fast,
-    )
-
-    if engine not in ("exact", "arrow"):
-        raise ValueError(f"knn_label: unknown engine {engine!r}")
-    label_engine = (
-        knn_label_multiprobe if engine == "exact" else knn_label_multiprobe_fast
-    )
+    from ma_anonymization_etl_spark.operators.similarity import knn_label_multiprobe
 
     if out in df.columns:
         raise ValueError(
@@ -279,7 +269,7 @@ def _step_knn_label(
     queries = aux.filter(F.col(vec_col).isNotNull()).select(
         F.col(vec_id_col).alias("query_id"), as_double(F.col(vec_col)).alias("v")
     ).join(df.select(F.col(id_col).alias("query_id")), "query_id", "left_semi")
-    pred = label_engine(queries, corpus, k=k).select(
+    pred = knn_label_multiprobe(queries, corpus, k=k).select(
         F.col("query_id").alias(id_col), F.col("label_pred").alias(out)
     )
     return df.join(pred, id_col, "left")
@@ -550,9 +540,14 @@ def anonymize_pipeline(
     receives ``tables[name]`` in its place — how two-input ops
     (decontaminate_filter against a benchmark table) stay
     JSON-serializable.
+
+    Every step is resolved and its params bound to the step function's
+    signature before the first step runs: several steps run Spark jobs
+    while they are planned, so a bad op, aux name or param key in step
+    N must fail before steps 1..N-1 do any work.
     """
-    out = df
-    for step in steps:
+    bound = []
+    for i, step in enumerate(steps, 1):
         params = dict(step)
         op = params.pop("op")
         if op not in STEPS:
@@ -567,5 +562,12 @@ def anonymize_pipeline(
             params["aux"] = tables[name]
         if op in TABLES_AWARE_OPS:
             params["tables"] = tables
-        out = STEPS[op](out, **params)
+        try:
+            inspect.signature(STEPS[op]).bind(df, **params)
+        except TypeError as err:
+            raise ValueError(f"route step {i} ({op!r}): {err}") from None
+        bound.append((STEPS[op], params))
+    out = df
+    for fn, params in bound:
+        out = fn(out, **params)
     return out

@@ -703,37 +703,77 @@ def test_route_step_knn_label(spark):
     assert {r.topic_label for r in rows if r.doc_id == 7} == {direct}
 
 
-def test_route_step_knn_label_arrow_engine(spark):
-    """engine: "arrow" routes through knn_label_multiprobe_fast and
-    must produce the exact engine's enrichment verbatim (decision
-    identity); an unknown engine refuses loudly."""
-    import pytest
+def test_route_bad_step_key_fails_before_any_job(spark):
+    """Every step's params are bound to its step function before the
+    fold starts: a misspelt key in step 2 raises a ValueError naming
+    the step, the op and the key, and step 1 (semantic_dedup_drop,
+    which counts and checkpoints while it is planned) runs no job."""
+    import time
 
     from ma_anonymization_etl_spark.plans.pipeline import anonymize_pipeline
     from ma_anonymization_etl_spark.sources.io import load
 
-    docs = load(spark, SF_ORACLE, "documents").filter("doc_id < 40")
+    docs = load(spark, SF_ORACLE, "documents")
     vecs = load(spark, SF_ORACLE, "embeddings")
-    exact = anonymize_pipeline(
-        docs,
-        [{"op": "knn_label", "aux": "vectors", "out": "topic_label"}],
-        tables={"vectors": vecs},
-    )
-    arrow = anonymize_pipeline(
-        docs,
-        [{"op": "knn_label", "aux": "vectors", "out": "topic_label",
-          "engine": "arrow"}],
-        tables={"vectors": vecs},
-    )
-    ea = sorted((r.doc_id, r.topic_label) for r in exact.collect())
-    aa = sorted((r.doc_id, r.topic_label) for r in arrow.collect())
-    assert ea == aa and len(ea) == docs.count()
-    with pytest.raises(ValueError, match="unknown engine"):
-        anonymize_pipeline(
-            docs,
-            [{"op": "knn_label", "aux": "vectors", "engine": "blas9000"}],
-            tables={"vectors": vecs},
-        ).collect()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("route-bind-probe", "bad step key")
+    try:
+        with pytest.raises(ValueError, match=r"step 2 \('knn_label'\).*'kk'"):
+            anonymize_pipeline(
+                docs,
+                [
+                    {"op": "semantic_dedup_drop", "aux": "vectors"},
+                    {"op": "knn_label", "aux": "vectors", "kk": 5},
+                ],
+                tables={"vectors": vecs},
+            )
+        # Listener events arrive in order: once a later job in another
+        # group is visible, every job of the probe group is too.
+        sc.setJobGroup("route-bind-sentinel", "sentinel")
+        spark.range(1).count()
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup("route-bind-sentinel"):
+            assert time.time() < deadline, "sentinel job never reported"
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup("route-bind-probe") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+
+def test_main_counts_the_sink_without_rerunning_the_route(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """cli.main reports the row count of a route with a sink from the
+    written parquet; counting the returned DataFrame would execute the
+    whole route a second time."""
+    from pathlib import Path
+
+    from ma_anonymization_etl_spark import cli
+
+    real_run_route = cli.run_route
+
+    def run_route_no_recount(spark_, route):
+        out = real_run_route(spark_, route)
+
+        def count():
+            pytest.fail("cli.main re-executed the route with out.count()")
+
+        out.count = count
+        return out
+
+    monkeypatch.setattr(cli, "run_route", run_route_no_recount)
+    example = Path(__file__).resolve().parents[1] / "examples" / "route_customer.json"
+    route = json.loads(example.read_text())
+    route["output"]["path"] = str(tmp_path / "out")
+    rf = tmp_path / "route.json"
+    rf.write_text(json.dumps(route))
+    assert cli.main(["--route", str(rf), "--sf-dir", SF_ORACLE], spark=spark) == 0
+    n = spark.read.parquet(str(tmp_path / "out")).count()
+    assert n > 0
+    assert f"route ok: {n} rows -> {tmp_path / 'out'}" in capsys.readouterr().out
 
 
 def test_route_step_knn_label_null_vector(spark):

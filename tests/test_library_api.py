@@ -73,6 +73,7 @@ DELEGATES = {
     "j54b_bm25_multi": "bm25_multi_topk",
     "j54c_bm25f_topk": "bm25f_topk",
     "j44b_semdedup_fast": "semdedup_release",
+    "j44_semantic_dedup": "semdedup_release",
     "j32b_substring_dedup": "substring_dedup_release",
     "j51_weighted_sample": "weighted_sample_topk",
     "j52_containment_join": "containment_join",
@@ -134,8 +135,7 @@ def test_query_delegates_to_public_df_function(qname, fname):
         "lang_id",
         "run_constraint_checks",
         # the (vec_id, cl, v) assignment table IS the parameterization:
-        # thresholds live in the shared module constants both j44 twins
-        # must agree on
+        # thresholds live in j44's module constants
         "semdedup_release",
     ), f"{fname} should be parameterized beyond the input DataFrame"
     assert fname in q.fn.__code__.co_names, (

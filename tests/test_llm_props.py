@@ -6,7 +6,13 @@ extractors (SURVEY §5.2)."""
 from __future__ import annotations
 
 import hashlib
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.operators.llm import (
@@ -18,7 +24,10 @@ from ma_anonymization_etl_spark.operators.multimodal import (
     m2_decode_features,
     m3_frame_sample,
 )
-from ma_anonymization_etl_spark.operators.similarity import j17_sim_lsh_bucket
+from ma_anonymization_etl_spark.operators.similarity import (
+    _exact_cos_py,
+    j17_sim_lsh_bucket,
+)
 from ma_anonymization_etl_spark.sources.io import load
 from tests.conftest import SF_ORACLE
 
@@ -34,39 +43,123 @@ def test_minhash_recovers_planted_neardups(spark):
     assert all(r["jaccard"] >= 0.5 for r in pairs)
 
 
-def test_vectorized_topk_equals_fold_topk(spark):
-    """j21 (numpy mapInPandas) must reproduce j8 (sequential F.aggregate
-    fold) exactly after the shared ROUND 5 — same neighbours, same order."""
+@pytest.fixture(scope="module")
+def colinear_sf(tmp_path_factory):
+    """An sf_dir whose embeddings are a query direction d (id 0), four
+    exact copies and six copies scaled by non-power-of-two factors
+    (ids 1-10, stored as float32), and 40 random filler vectors (ids
+    100-139).  The eleven colinear vectors have cosines equal up to the
+    last ulps, so any ranking that is not the sequential fold can pick
+    a different top-k than the contract."""
+    rng = np.random.default_rng(1)
+    for _ in range(6):
+        d = rng.normal(size=64).astype(np.float32)
+        s = rng.uniform(0.05, 9, size=6)
+    ids, labels, vecs = [0], [0], [d]
+    for i, f in enumerate([1, 1, 1, 1, *s], start=1):
+        ids.append(i)
+        labels.append(i % 3)
+        vecs.append((d * f).astype(np.float32))
+    filler = np.random.default_rng(0).normal(size=(40, 64)).astype(np.float32)
+    for j in range(100, 140):
+        ids.append(j)
+        labels.append(j % 3)
+        vecs.append(filler[j - 100])
+    out = tmp_path_factory.mktemp("colinear")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(
+                    [v.tolist() for v in vecs], pa.list_(pa.float32())
+                ),
+                "label": pa.array(labels, pa.int32()),
+            }
+        ),
+        str(out / "embeddings.parquet"),
+    )
+    return str(out)
+
+
+def _ranked(sf_dir: str, qid: int) -> list[tuple[float, int, int]]:
+    """Pure-Python replica of the exact neighbour order for one query:
+    (cos, vec_id, label) by (cos desc, vec_id), self excluded, cos by
+    the sequential fold."""
+    rows = pq.read_table(f"{sf_dir}/embeddings.parquet").to_pylist()
+    qv = next(r["embedding"] for r in rows if r["vec_id"] == qid)
+    scored = [
+        (_exact_cos_py(r["embedding"], qv), r["vec_id"], r["label"])
+        for r in rows
+        if r["vec_id"] != qid
+    ]
+    return sorted(scored, key=lambda t: (-t[0], t[1]))
+
+
+def _round5(x: float) -> float:
+    """Spark's ROUND(x, 5) on a double: HALF_UP on its decimal text."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-5"), rounding=ROUND_HALF_UP))
+
+
+def _topk_replica(sf_dir: str) -> list[tuple[int, float]]:
+    """j8's contract: top-10 of vec_id 0 by (ROUND(cos, 5) desc, vec_id)."""
+    scored = [(vid, _round5(c)) for c, vid, _ in _ranked(sf_dir, 0)]
+    return sorted(scored, key=lambda t: (-t[1], t[0]))[:10]
+
+
+def _knn_replica(sf_dir: str) -> list[tuple[int, int, int]]:
+    """j10's contract: 5-NN majority label for vec_id < 20, vote ties
+    to the smaller label."""
+    ids = pq.read_table(f"{sf_dir}/embeddings.parquet").column("vec_id").to_pylist()
+    out = []
+    for qid in sorted(i for i in ids if i < 20):
+        votes = Counter(lab for _, _, lab in _ranked(sf_dir, qid)[:5])
+        label, n = min(votes.items(), key=lambda kv: (-kv[1], kv[0]))
+        out.append((qid, label, n))
+    return out
+
+
+def test_vectorized_topk_equals_fold_topk(spark, colinear_sf):
+    """j21 and j8 release exactly the contract's top-10 — on the
+    registered corpus and on the colinear corpus, where the neighbour
+    cosines agree up to the last ulps."""
     from ma_anonymization_etl_spark.registry import load_all
 
     qs = load_all()
-    a = [tuple(r) for r in qs["j21_sim_topk_vectorized"].fn(spark, SF_ORACLE).collect()]
-    b = [tuple(r) for r in qs["j8_sim_topk"].fn(spark, SF_ORACLE).collect()]
-    assert a == b and len(a) == 10
+    for sf_dir in (SF_ORACLE, colinear_sf):
+        want = _topk_replica(sf_dir)
+        for name in ("j21_sim_topk_vectorized", "j8_sim_topk"):
+            got = [tuple(r) for r in qs[name].fn(spark, sf_dir).collect()]
+            assert got == want and len(got) == 10, (name, sf_dir)
 
 
-def test_vectorized_knn_equals_fold_knn(spark):
-    """j10b (numpy mapInPandas) must reproduce j10 (sequential
-    F.aggregate fold) exactly — same predicted label and vote count for
-    every one of the 20 query vectors."""
+def test_vectorized_knn_equals_fold_knn(spark, colinear_sf):
+    """j10b and j10 release exactly the contract's 5-NN vote — same
+    predicted label and vote count for every query — on the registered
+    corpus and on the colinear corpus, where a BLAS ranking without a
+    rank-5 re-check votes over a different top-5."""
     from ma_anonymization_etl_spark.registry import load_all
 
     qs = load_all()
-    a = sorted(tuple(r) for r in qs["j10b_knn_vectorized"].fn(spark, SF_ORACLE).collect())
-    b = sorted(tuple(r) for r in qs["j10_knn_classify"].fn(spark, SF_ORACLE).collect())
-    assert a == b and len(a) == 20
+    for sf_dir in (SF_ORACLE, colinear_sf):
+        want = _knn_replica(sf_dir)
+        for name in ("j10b_knn_vectorized", "j10_knn_classify"):
+            got = sorted(tuple(r) for r in qs[name].fn(spark, sf_dir).collect())
+            assert got == want, (name, sf_dir)
+    assert len(_knn_replica(SF_ORACLE)) == 20
 
 
-def test_knn_label_fast_equals_exact_registered(spark):
+def test_knn_label_fast_equals_exact_registered(spark, colinear_sf):
     """j64b (Arrow band + fold re-adjudication) must reproduce j64
-    (declarative fold) exactly on the registered [0,20) panel — same
-    predicted label and vote count per query."""
+    (declarative fold) exactly on the registered [0,20) panel and on
+    the colinear corpus — same predicted label and vote count per
+    query."""
     from ma_anonymization_etl_spark.registry import load_all
 
     qs = load_all()
-    a = sorted(tuple(r) for r in qs["j64b_knn_label_ann_fast"].fn(spark, SF_ORACLE).collect())
-    b = sorted(tuple(r) for r in qs["j64_knn_label_ann"].fn(spark, SF_ORACLE).collect())
-    assert a == b and len(a) == 20
+    for sf_dir, n_queries in ((SF_ORACLE, 20), (colinear_sf, 11)):
+        a = sorted(tuple(r) for r in qs["j64b_knn_label_ann_fast"].fn(spark, sf_dir).collect())
+        b = sorted(tuple(r) for r in qs["j64_knn_label_ann"].fn(spark, sf_dir).collect())
+        assert a == b and len(a) == n_queries, sf_dir
 
 
 def test_knn_label_fast_boundary_ties(spark):

@@ -1832,25 +1832,36 @@ def test_j44_cell_target_derives_k(spark):
 
 
 def test_j44b_arrow_assignment_equals_declarative(spark):
-    """The Arrow/BLAS Lloyd twin must release EXACTLY j44's accounting
-    (shared oracle notwithstanding — this pins engine-vs-engine), and
-    the near-tie re-adjudication must pick the declarative winner on a
-    constructed exact tie (two identical centroids' clusters -> lower
-    cl wins)."""
+    """j44 and j44b (the Arrow/BLAS Lloyd) must release EXACTLY the
+    accounting of ``semdedup_release`` over the declarative ``_km_fit``
+    (the oracle's replay, run in Spark — this pins engine-vs-engine),
+    and the near-tie re-adjudication must pick the declarative winner
+    on a constructed exact tie (two identical centroids' clusters ->
+    lower cl wins)."""
     from ma_anonymization_etl_spark.operators.similarity import (
+        _J44_CELL_TARGET,
+        _KM_K,
+        _j44_corpus,
         _km_assign,
         _km_assign_arrow,
+        _km_fit,
         j44_semantic_dedup,
         j44b_semdedup_fast,
+        semdedup_release,
     )
 
+    corpus = _j44_corpus(spark, SF_SMOKE)
+    k = max(_KM_K, (corpus.count() + _J44_CELL_TARGET - 1) // _J44_CELL_TARGET)
+    want_rel = {
+        tuple(r) for r in semdedup_release(_km_fit(corpus, k=k)[0]).collect()
+    }
     a = {
         tuple(r) for r in j44_semantic_dedup(spark, SF_SMOKE).collect()
     }
     b = {
         tuple(r) for r in j44b_semdedup_fast(spark, SF_SMOKE).collect()
     }
-    assert a == b and a
+    assert a == b == want_rel and a
 
     # exact-tie corpus: centroids c0 == c2 (vec_id 0 and 2 identical),
     # every vector equally close to both -> declarative tie-break (lower

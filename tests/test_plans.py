@@ -22,11 +22,8 @@ PYTHON_OK = {
     "l4_grouped_map", "l5_udtf", "l6_udf_pandas_iterator", "j3b_dedup_simhash",
     "m2_decode_features", "m3_frame_sample", "m4_resize", "m5_audio_energy",
     "m7_modality_router",  # Arrow-batched per-row modality dispatch
-    "j21_sim_topk_vectorized",  # deliberate Arrow/numpy perf twin of j8
-    "j10b_knn_vectorized",  # deliberate Arrow/numpy perf twin of j10
     "j9b_sim_pair_lsh",  # LSH signatures via Arrow matmul; verify is declarative
     "j9d_sim_pair_lsh_fast",  # deliberate Arrow/numpy verify twin of j9b
-    "j44b_semdedup_fast",  # deliberate Arrow/BLAS Lloyd-assignment twin of j44
 }
 
 # Streaming queries execute eagerly (memory sink) — skip plan text checks.
@@ -295,8 +292,6 @@ ROUTE_STEP_CASES = [
     ({"op": "fuzzy_dedup_drop"}, "docs"),
     ({"op": "semantic_dedup_drop", "aux": "vectors"}, "docs"),
     ({"op": "knn_label", "aux": "vectors", "out": "topic_label"}, "docs"),
-    ({"op": "knn_label", "aux": "vectors", "out": "topic_label",
-      "engine": "arrow"}, "docs"),
     ({"op": "lang_filter", "keep_langs": ["en"]}, "docs"),
     ({"op": "repetition_filter"}, "docs"),
     ({"op": "split_assign"}, "docs"),
