@@ -1071,8 +1071,9 @@ def connected_components(
     Raises RuntimeError if ``max_iter`` rounds pass without reaching
     the fixpoint — partially-propagated labels are WRONG answers
     (components silently split), so exhaustion is an error, never a
-    release (the kmeans_fit_converged convention: convergence is part
-    of the contract, not a hope).  For high-diameter graphs where
+    release (j43b's convention, where the release's ``converged``
+    claim is oracle-pinned: convergence is part of the contract, not a
+    hope).  For high-diameter graphs where
     diameter-many rounds are the real cost, use
     ``connected_components_altstar`` (O(log²) rounds) instead.
 

@@ -264,6 +264,33 @@ def test_j44_semdedup_drops_planted_copies(spark):
     assert 0.9 * n_vecs <= total_dropped <= n_vecs
 
 
+def test_semantic_drop_ids_runs_corpus_lineage_once(spark):
+    """semantic_drop_ids derives k from a count and then clusters; both
+    must read ONE materialization of the corpus, so the lineage under it
+    (on a route: the aux semi-join and every step above) runs once.  An
+    accumulator in a filter UDF counts the rows that lineage evaluates."""
+    import random
+
+    from pyspark.sql.types import BooleanType
+
+    from ma_anonymization_etl_spark.operators.similarity import semantic_drop_ids
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(_vec_id):
+        seen.add(1)
+        return True
+
+    rng = random.Random(5)
+    base = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)],
+        "vec_id long, v array<double>",
+    )
+    corpus = base.filter(F.udf(count_row, BooleanType())("vec_id"))
+    semantic_drop_ids(corpus).collect()
+    assert seen.value == 200
+
+
 def test_n11_cdc_last_writer_wins(spark):
     from ma_anonymization_etl_spark.operators.etl import n11_cdc_apply
 
@@ -728,43 +755,90 @@ def test_d18_bitmap_count_is_exact(spark):
 
 
 def test_j43b_converges_to_monotone_fixpoint(spark):
-    """VERDICT r6 items 1+5 / ADVICE r6: the convergence loop must (a)
-    actually converge with all k clusters surviving, (b) have a
-    round-over-round NON-DECREASING spherical objective (both Lloyd
-    half-steps maximize sum_i cos(v_i, c_a(i)); tolerance covers the
-    1e-6 centroid quantization), and (c) return an assignment that is a
-    FIXPOINT: recomputing centroids from it and assigning once more
-    changes nothing.  Round 6 shipped this operator with no test at
-    all — this is the attestation that was missing."""
-    from ma_anonymization_etl_spark.functions.vectors import as_double
+    """The converge mode of the Lloyd loop must (a) actually converge
+    with all k clusters surviving and non-empty, (b) follow the path an
+    independent replay from the two primitives (``_km_assign_arrow`` /
+    ``_km_recompute_arrow``) takes — same round count, same final
+    assignment — along which the spherical objective
+    sum_i cos(v_i, c_a(i)) never decreases (both Lloyd half-steps
+    maximize it; tolerance covers the 1e-6 centroid quantization), and
+    (c) stop at a FIXPOINT: one more recompute and assign round changes
+    no label.  Two corpora: the smoke embeddings
+    (contiguous ids from 0) and 60 random 8-dim vectors with ids
+    1000-1059, where a `vec_id < k` seed filter finds no seed at all."""
+    import math
+    import random
+
+    from ma_anonymization_etl_spark.functions.vectors import as_double, norm
     from ma_anonymization_etl_spark.operators.similarity import (
         _KM_K,
-        _km_assign_literal,
-        _km_recompute,
-        kmeans_fit_converged,
+        _KMB_EPS_MICRO,
+        _KMB_MAX_ROUNDS,
+        _km_assign_arrow,
+        _km_fit_arrow,
+        _km_recompute_arrow,
     )
 
-    e = load(spark, SF_SMOKE, "embeddings").select(
+    def cos(x, y):
+        d = sum(a * b for a, b in zip(x, y))
+        return d / (math.sqrt(sum(a * a for a in x)) * math.sqrt(sum(b * b for b in y)))
+
+    def quantized(rows):
+        return {r.cl: [round(x * 1e6) for x in r.cent] for r in rows}
+
+    def replay(corpus):
+        cents = (
+            corpus.orderBy("vec_id").limit(_KM_K)
+            .selectExpr("vec_id AS cl", "v AS cent").collect()
+        )
+        trace = []
+        for rounds in range(1, _KMB_MAX_ROUNDS + 1):
+            assign = _km_assign_arrow(corpus, cents)
+            by_cl = {r.cl: r.cent for r in cents}
+            trace.append(sum(cos(r.v, by_cl[r.cl]) for r in assign.collect()))
+            new = _km_recompute_arrow(assign).collect()
+            old_q, new_q = quantized(cents), quantized(new)
+            move = max(
+                (
+                    sum(abs(a - b) for a, b in zip(new_q[cl], old_q[cl]))
+                    for cl in new_q
+                    if cl in old_q
+                ),
+                default=0,
+            )
+            cents = new
+            if set(new_q) == set(old_q) and move <= _KMB_EPS_MICRO:
+                break
+        final = {r.vec_id: r.cl for r in _km_assign_arrow(corpus, cents).collect()}
+        return rounds, final, trace
+
+    rng = random.Random(3)
+    offset_ids = spark.createDataFrame(
+        [(1000 + i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)],
+        "vec_id long, v array<double>",
+    )
+    smoke = load(spark, SF_SMOKE, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    assign, cents, converged, rounds, saw_loss, trace = kmeans_fit_converged(
-        e, track_objective=True
-    )
-    assert converged and not saw_loss
-    assert len(cents) == _KM_K
-    assert rounds == len(trace) and rounds >= 2
-    for a, b in zip(trace, trace[1:]):
-        assert b >= a - 1e-3, f"objective decreased: {trace}"
-    # fixpoint: one more recompute+assign round leaves every cl unchanged
-    cents2 = sorted((r["cl"], r["cent"]) for r in _km_recompute(assign).collect())
-    again = _km_assign_literal(assign.select("vec_id", "v"), cents2)
-    flipped = (
-        assign.select("vec_id", F.col("cl").alias("cl0"))
-        .join(again.select("vec_id", "cl"), "vec_id")
-        .filter("cl0 != cl")
-        .count()
-    )
-    assert flipped == 0
+    for raw in (smoke, offset_ids):
+        corpus = raw.withColumn(
+            "v", F.transform("v", lambda x: x / norm(F.col("v")))
+        ).localCheckpoint(eager=True)
+        assign, cents, converged, rounds, saw_loss = _km_fit_arrow(
+            corpus, converge=True
+        )
+        got = {r.vec_id: r.cl for r in assign.collect()}
+        assert converged and not saw_loss
+        assert len(cents) == _KM_K
+        assert len(got) == raw.count()
+        assert set(got.values()) == {r.cl for r in cents}  # k non-empty
+        want_rounds, want, trace = replay(corpus)
+        assert rounds == want_rounds == len(trace) and got == want
+        for a, b in zip(trace, trace[1:]):
+            assert b >= a - 1e-3, f"objective decreased: {trace}"
+        # fixpoint: one more recompute+assign round leaves every cl unchanged
+        again = _km_assign_arrow(corpus, _km_recompute_arrow(assign).collect())
+        assert {r.vec_id: r.cl for r in again.collect()} == got
 
 
 def test_q8_ewma_flags_injected_spike_and_matches_float_rule(spark):
@@ -1804,14 +1878,16 @@ def test_j44_cell_target_derives_k(spark):
     from ma_anonymization_etl_spark.operators.similarity import (
         _J44_CELL_TARGET,
         _KM_K,
-        _km_fit,
+        _km_fit_arrow,
     )
+    from tests.km_referee import _km_fit
 
     assert _J44_CELL_TARGET == 10_000
     for n, want in ((400, 8), (10_000, 8), (80_001, 9), (400_000, 40)):
         k = max(_KM_K, (n + _J44_CELL_TARGET - 1) // _J44_CELL_TARGET)
         assert k == want, (n, k)
-    # _km_fit honors a larger k: more distinct seeds -> >8 clusters
+    # the loop (and its referee) honor a larger k: more distinct seeds
+    # -> >8 clusters
     import pyspark.sql.functions as F
 
     corpus = (
@@ -1829,26 +1905,28 @@ def test_j44_cell_target_derives_k(spark):
     assign, cents = _km_fit(corpus, k=16)
     n_cl = cents.count()
     assert 8 < n_cl <= 16, n_cl  # seeds honored (empty cells may collapse)
+    cents = _km_fit_arrow(corpus.localCheckpoint(eager=True), k=16)[1]
+    assert len(cents) == n_cl
 
 
 def test_j44b_arrow_assignment_equals_declarative(spark):
     """j44 and j44b (the Arrow/BLAS Lloyd) must release EXACTLY the
     accounting of ``semdedup_release`` over the declarative ``_km_fit``
-    (the oracle's replay, run in Spark — this pins engine-vs-engine),
-    and the near-tie re-adjudication must pick the declarative winner
-    on a constructed exact tie (two identical centroids' clusters ->
-    lower cl wins)."""
+    referee (the oracle's replay, run in Spark — this pins
+    engine-vs-engine), and the near-tie re-adjudication must pick the
+    declarative winner on constructed exact ties (two identical
+    centroids' clusters -> lower cl wins)."""
+    from ma_anonymization_etl_spark.functions.vectors import as_double
     from ma_anonymization_etl_spark.operators.similarity import (
         _J44_CELL_TARGET,
         _KM_K,
         _j44_corpus,
-        _km_assign,
         _km_assign_arrow,
-        _km_fit,
         j44_semantic_dedup,
         j44b_semdedup_fast,
         semdedup_release,
     )
+    from tests.km_referee import _km_assign, _km_fit
 
     corpus = _j44_corpus(spark, SF_SMOKE)
     k = max(_KM_K, (corpus.count() + _J44_CELL_TARGET - 1) // _J44_CELL_TARGET)
@@ -1886,6 +1964,22 @@ def test_j44b_arrow_assignment_equals_declarative(spark):
     assert got == want
     # the ties really landed on the LOWER cl (0, never 2)
     assert all(cl != 2 for _, cl in got)
+
+    # the smoke corpus against its real first-8 seeds, with cl 6's seed
+    # replaced by a copy of cl 5's: every row nearest that vector
+    # (vec_id 5 at least) ties exactly and must land on cl 5
+    e = load(spark, SF_SMOKE, "embeddings").select(
+        "vec_id", as_double(F.col("embedding")).alias("v")
+    )
+    seeds = dict(e.filter(F.col("vec_id") < 8).select("vec_id", "v").collect())
+    seeds[6] = seeds[5]
+    cents = spark.createDataFrame(
+        sorted(seeds.items()), "cl long, cent array<double>"
+    )
+    want = {(r.vec_id, r.cl) for r in _km_assign(e, cents).collect()}
+    got = {(r.vec_id, r.cl) for r in _km_assign_arrow(e, cents.collect()).collect()}
+    assert got == want and len(got) == e.count()
+    assert (5, 5) in got and all(cl != 6 for _, cl in got)
 
 
 def test_j54b_multi_query_consistency(spark):
@@ -2510,10 +2604,8 @@ def test_km_recompute_arrow_bit_identical(spark):
     int64 partial."""
     import random
 
-    from ma_anonymization_etl_spark.operators.similarity import (
-        _km_recompute,
-        _km_recompute_arrow,
-    )
+    from ma_anonymization_etl_spark.operators.similarity import _km_recompute_arrow
+    from tests.km_referee import _km_recompute
 
     rng = random.Random(61)
     adversarial = [
@@ -2940,62 +3032,6 @@ def test_j63_mp_prebuilt_index_reuse_and_equality(spark):
     sig3, bits3 = multiprobe_index_build(e, spark, SF_ORACLE)
     cold = {key(r) for r in multiprobe_probe(sig3, bits3, 3, 0, 10).collect()}
     assert cold == warm
-
-
-def test_km_assign_literal_sql_text_matches_column_api(spark):
-    """Round 12: _km_assign_literal builds its argmax expression as ONE
-    SQL string (the per-element F.lit construction was the measured
-    driver-side wall of the j43b convergence loop).  The string must
-    lower to the SAME decision as the Column-API referee — pinned here
-    row-for-row on (a) the real smoke corpus with its real first-k
-    seeds and (b) adversarial centroid values that stress the literal
-    round-trip: shortest-repr edge cases (denormal min, max double,
-    negative zero, 1e+16, a 17-digit non-terminating decimal) and an
-    exact-tie pair of identical centroids (ties must still break to
-    the LOWER cluster id through the SQL text's struct max)."""
-    from ma_anonymization_etl_spark.functions.vectors import as_double
-    from ma_anonymization_etl_spark.operators.similarity import (
-        _km_assign_literal,
-        _km_assign_literal_cols,
-    )
-
-    e = load(spark, SF_SMOKE, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    dims = len(e.first()["v"])
-    seeds = sorted(
-        (r["vec_id"], r["v"])
-        for r in e.filter(F.col("vec_id") < 8).collect()
-    )
-
-    def assert_same(cents):
-        got = {
-            r["vec_id"]: r["cl"] for r in _km_assign_literal(e, cents).collect()
-        }
-        ref = {
-            r["vec_id"]: r["cl"]
-            for r in _km_assign_literal_cols(e, cents).collect()
-        }
-        assert got == ref and len(got) == e.count()
-
-    assert_same(seeds)
-
-    base = [0.3] * dims  # repr('0.3') round-trips the classic 0.1-family double
-    adversarial = [
-        (0, [5e-324] + base[1:]),            # smallest denormal
-        (1, [1.7976931348623157e308] + [0.0] * (dims - 1)),  # max double
-        (2, [-0.0] + base[1:]),              # negative zero literal
-        (3, [1e16, -1e-16] + base[2:]),      # exponent forms both signs
-        (4, [0.1234567890123456789] + base[1:]),  # 17-digit repr
-        (5, base),                            # exact tie with cl=6 below:
-        (6, base),                            # must resolve to cl=5 everywhere
-        (7, [-x for x in base]),
-    ]
-    assert_same(adversarial)
-    # the planted exact tie really exercised the tie-break: no row may
-    # land on the duplicate's higher id
-    tied = _km_assign_literal(e, adversarial).filter(F.col("cl") == 6).count()
-    assert tied == 0
 
 
 def test_copurchase_sup2_cache_shared_and_exact(spark):
