@@ -45,19 +45,14 @@ def word_shingles(col: str = "text", n: int = 3) -> Column:
     )
 
 
-def hash64(col: Column) -> Column:
-    """Engine-portable 60-bit integer hash: md5 hex prefix → BIGINT.
-    (xxhash64/hash are engine-specific — never in checked output.)"""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def hash31_md5(col: Column) -> Column:
     """DuckDB-replicable 31-bit hash: 60 bits of md5 hex folded mod the
     Mersenne prime — DuckDB computes the identical value as
     ``('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647``.  The
-    MinHash core uses this (not xxhash64) so the j3/j23/k10 oracles can
-    replay the banding structurally; md5 costs ~2-3× xxhash64 on the
-    hashing stage only, a constant factor the structural gate buys."""
+    MinHash signatures behind ``minhash_lsh_pairs`` use this (not
+    xxhash64) so the j3/j23/j50c/j53/k10 oracles can replay the banding
+    structurally; md5 costs ~2-3× xxhash64 on the hashing stage only, a
+    constant factor the structural gate buys."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long") % _MERSENNE
 
 
@@ -128,31 +123,12 @@ def _perm_constants(n_perms: int) -> list[tuple[int, int]]:
     return [(rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE)) for _ in range(n_perms)]
 
 
-def minhash_signature(shingles: Column, n_perms: int = _MINHASH_PERMS) -> Column:
-    """MinHash via a universal hash family (Broder 1997): ONE md5 per
-    shingle, then n_perms cheap (a·h + b) mod p permutations — 16×
-    less hashing than salted-md5-per-permutation.  Base hash is folded
-    to 31 bits so a·h stays in int64.  (Array-expression form; the j3
-    operator uses the equivalent explode+groupBy form, which codegens
-    leaner and shuffles only (doc, hash) longs.)"""
-    base = F.transform(shingles, lambda s: hash31_md5(s))
-
-    def perm(a: int, b: int):
-        return lambda h: (a * h + b) % _MERSENNE
-
-    return F.array(
-        *[
-            F.array_min(F.transform(base, perm(a, b)))
-            for a, b in _perm_constants(n_perms)
-        ]
-    )
-
-
 def minhash_signature_grouped(sh: DataFrame, n_perms: int = _MINHASH_PERMS) -> DataFrame:
-    """Aggregation-form MinHash: explode shingles → one md5 per shingle →
-    n_perms MIN aggregates per doc.  Same values as minhash_signature;
-    partial aggregation means the shuffle carries n_perms longs per
-    (doc × map-partition) — the 100 TB shape."""
+    """Aggregation-form MinHash (Broder 1997): explode shingles → one
+    md5 per shingle → n_perms cheap (a·h + b) mod p permutations, each
+    a MIN aggregate per doc.  The base hash is folded to 31 bits so a·h
+    stays in int64; partial aggregation means the shuffle carries
+    n_perms longs per (doc × map-partition) — the 100 TB shape."""
     ex = sh.select("doc_id", F.explode("shingles").alias("s")).withColumn(
         "h", hash31_md5(F.col("s"))
     )
@@ -165,9 +141,10 @@ def minhash_signature_grouped(sh: DataFrame, n_perms: int = _MINHASH_PERMS) -> D
 
 def banded_signatures(sh: DataFrame) -> DataFrame:
     """(doc_id, band, key) LSH band rows for a shingle table — the
-    candidate-generation core shared by batch j3 and streaming k10.
-    Keys are xxhash64 longs (8-byte shuffle keys, engine-internal —
-    these ops are rows-only, never oracle-hashed)."""
+    candidate side of ``minhash_lsh_pairs``; callers that reuse an
+    index across calls (j3, j53's corpus, k10's store) build it here
+    once and pass it in.  Keys are xxhash64 longs (8-byte shuffle keys,
+    engine-internal — these ops are rows-only, never oracle-hashed)."""
     sig = minhash_signature_grouped(sh)
     r = _MINHASH_PERMS // _MINHASH_BANDS
     return sig.select(
@@ -186,6 +163,70 @@ def banded_signatures(sh: DataFrame) -> DataFrame:
             )
         ).alias("bk"),
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+
+
+def _verify_jaccard(cand: DataFrame, sh: DataFrame, other: DataFrame, tau: float) -> DataFrame:
+    """Exact-Jaccard verify of (a_id, b_id) candidates: a_id looks up
+    its shingle set in ``sh``, b_id in ``other`` (two id-keyed joins),
+    and a pair is kept when the UNROUNDED |A∩B| / |A∪B| is ≥ ``tau`` —
+    the filter every oracle applies.  Releases (a_id, b_id,
+    jaccard = ROUND(J, 6))."""
+    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
+    return (
+        cand.join(
+            sh.select(F.col("doc_id").alias("a_id"), F.col("shingles").alias("sh_a")), "a_id"
+        )
+        .join(
+            other.select(F.col("doc_id").alias("b_id"), F.col("shingles").alias("sh_b")),
+            "b_id",
+        )
+        .filter(jac >= tau)
+        .select("a_id", "b_id", F.round(jac, 6).alias("jaccard"))
+    )
+
+
+def minhash_lsh_pairs(
+    sh: DataFrame,
+    tau: float = _MINHASH_TAU,
+    other: DataFrame | None = None,
+    banded: DataFrame | None = None,
+    other_banded: DataFrame | None = None,
+) -> DataFrame:
+    """The MinHash-LSH pair engine behind j3, j23/j37, the
+    ``near_dedup_drop`` step, j50b/j50c's LSH branch, k10 and j53:
+    band-sharing candidates between shingle tables (doc_id, shingles),
+    verified with exact Jaccard ≥ ``tau`` (``_verify_jaccard``).
+
+    One side (``other`` None) is a self-join releasing a_id < b_id.
+    With ``other``, a_id comes from ``sh`` and b_id from ``other`` and
+    no id order is imposed, so ids must not collide across the sides.
+    ``banded`` / ``other_banded`` take already-built
+    ``banded_signatures`` of the matching side so a cached or stored
+    index is not rebuilt.
+
+    Contract: a pair is released iff the two docs share at least one of
+    the 8 band keys (xxhash64 over 4 MinHash values) and J ≥ tau, so
+    recall is probabilistic (a pair missing every band is lost) and
+    false positives are impossible.  The oracles replay the banding on
+    the raw 4-tuples; an xxhash64 collision between different tuples
+    only adds a candidate, which the exact verify then judges.  Shuffle
+    is O(docs × bands) for candidates plus O(candidates) shingle
+    arrays, never docs²."""
+    if banded is None:
+        banded = banded_signatures(sh)
+    cond = (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
+    if other is None:
+        other, other_banded = sh, banded
+        cond &= F.col("a.doc_id") < F.col("b.doc_id")
+    elif other_banded is None:
+        other_banded = banded_signatures(other)
+    cand = (
+        banded.alias("a")
+        .join(other_banded.alias("b"), cond)
+        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
+        .dropDuplicates(["a_id", "b_id"])
+    )
+    return _verify_jaccard(cand, sh, other, tau)
 
 
 # j3's persisted shingle subtree, keyed by (session id, sf_dir): bench's
@@ -282,8 +323,8 @@ def j3_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified with exact Jaccard ≥ 0.5.  The query plants one perturbed
     copy per document (first word dropped, doc_id+100000) — the result
     must pair each doc with its perturbed twin plus the corpus's own
-    organic near-dups.  Scale: candidates come from a groupBy on band
-    keys, never a docs² join."""
+    organic near-dups.  Delegates to ``minhash_lsh_pairs`` over the
+    session-cached shingle table and band index."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     perturbed = d.select(
         (F.col("doc_id") + 100000).alias("doc_id"),
@@ -295,8 +336,8 @@ def j3_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.unionByName(perturbed).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    # The shingle table feeds three plan branches (signature + both sides
-    # of verification); without persist Spark recomputes the shingling
+    # The shingle table feeds three plan branches (band index + both
+    # verify lookups); without persist Spark recomputes the shingling
     # per branch.  Small: (docs × distinct shingles) strings.  Cached per
     # (session, sf_dir) so repeated invocations in one session measure
     # steady state instead of re-materializing the same subtree.
@@ -311,54 +352,13 @@ def j3_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "shingles")
             .persist()
         )
-        # Band join carries ids only — shingle arrays would bloat the
-        # shuffle; they are re-joined for the (small) candidate set during
-        # verification.  The banded table (docs × bands id rows) is tiny
-        # but costs a full explode/groupBy pass to derive, so it is
-        # cached alongside the shingles.
+        # The banded table (docs × bands id rows) is tiny but costs a
+        # full explode/groupBy pass to derive, so it is cached alongside
+        # the shingles.
         banded = banded_signatures(sh).persist()
         cached = cache_put(_J3_SHINGLE_CACHE, key, (sh, banded))
     sh, banded = cached
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    # Fused verification: instead of re-joining sh once per pair side (two
-    # full shuffles of the heavy shingle arrays), melt each candidate pair
-    # to two (pair, doc_id, side) rows, join sh ONCE, and gather the two
-    # sides back with a groupBy that shuffles only the candidate subset's
-    # arrays — at 100 TB the corpus-sized shuffle happens once, not twice.
-    melted = cand.select(
-        "a_id",
-        "b_id",
-        F.explode(
-            F.array(
-                F.struct(F.col("a_id").alias("doc_id"), F.lit(0).alias("side")),
-                F.struct(F.col("b_id").alias("doc_id"), F.lit(1).alias("side")),
-            )
-        ).alias("m"),
-    ).select("a_id", "b_id", F.col("m.doc_id").alias("doc_id"), F.col("m.side").alias("side"))
-    verified = (
-        melted.join(sh, "doc_id")
-        .groupBy("a_id", "b_id")
-        .agg(
-            F.first(F.when(F.col("side") == 0, F.col("shingles")), ignorenulls=True).alias("sh_a"),
-            F.first(F.when(F.col("side") == 1, F.col("shingles")), ignorenulls=True).alias("sh_b"),
-        )
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        verified.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= _MINHASH_TAU)
-        .select("a_id", "b_id", "jaccard")
-    )
+    return minhash_lsh_pairs(sh, _MINHASH_TAU, banded=banded)
 
 
 @register(
@@ -1546,37 +1546,21 @@ def _j24_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _j24_non_survivors(spark: SparkSession, sf_dir: str, flags: DataFrame) -> DataFrame:
-    """Near-dup non-survivors among exact-dedup survivors: exhaustive
-    inverted-index 3-gram Jaccard ≥ 0.5 pairs → connected components →
-    everything but each component's min-id.  Cached per (session,
-    sf_dir) like the flags — j24 and j24b both consume it, and the pair
-    join is the funnel's most expensive stage."""
+    """Near-dup non-survivors among exact-dedup survivors: 3-gram
+    Jaccard ≥ 0.5 pairs from ``set_similarity_join`` (j50's engine,
+    exact up to its written xxhash64 verify bound) → connected
+    components → everything but each component's min-id.  Cached per
+    (session, sf_dir) like the flags — j24 and j24b both consume it,
+    and the pair join is the funnel's most expensive stage."""
     key = (spark.sparkContext.applicationId, sf_dir, "j24_nondup")
     cached = _J3_SHINGLE_CACHE.get(key)
     if cached is not None:
         return cached
-    exactd = flags.filter(F.col("e"))
-    sh = exactd.select("doc_id", word_shingles("text", 3).alias("s"))
-    inv = sh.select("doc_id", F.explode("s").alias("g"))
-    shared = (
-        inv.alias("a")
-        .join(
-            inv.alias("b"),
-            (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .agg(F.count("*").alias("shared"))
+    toks = flags.filter(F.col("e")).select(
+        "doc_id", F.explode(word_shingles("text", 3)).alias("tok")
     )
-    sizes = sh.select("doc_id", F.size("s").alias("n"))
-    pairs = (
-        shared.join(
-            sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na")), "a_id"
-        )
-        .join(sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb")), "b_id")
-        .filter(
-            F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")) >= 0.5
-        )
-        .select(F.col("a_id").alias("a"), F.col("b_id").alias("b"))
+    pairs = set_similarity_join(toks, 0.5, assume_distinct=True).select(
+        F.col("a_id").alias("a"), F.col("b_id").alias("b")
     )
     out = (
         connected_components(pairs)
@@ -1606,11 +1590,11 @@ def j24_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: stages 1-3 are map-side predicates folded into ONE
     scan as per-doc survival flags (no per-stage recompute); exact
     dedup is one hash-partitioned window on the content hash; the pair
-    graph comes from an inverted shingle index (shuffle on shingle,
-    never docs²) — swap in the j3 MinHash bands when even the index is
-    too hot; components iterate over the EDGE list only, and the final
-    report is a single conditional aggregation unpivoted to funnel
-    rows."""
+    graph comes from j50's prefix-filtered join (shuffle on each doc's
+    rarest shingles, never docs²) — swap in ``minhash_lsh_pairs`` when
+    even the prefix is too hot; components iterate over the EDGE list
+    only, and the final report is a single conditional aggregation
+    unpivoted to funnel rows."""
     flags = _j24_flags(spark, sf_dir)
     non_survivors = _j24_non_survivors(spark, sf_dir, flags)
 
@@ -4798,9 +4782,11 @@ def _ordered_tokens(
     explode + both verify lookups), and the round-13 stage profile
     measured the un-cut form paying the df-join + per-doc groupBy once
     per branch with heavy block-read contention at 32 concurrent
-    tasks (runTime 24 s vs 2-3 s CPU per branch).  Within-query cut,
-    recomputed per invocation — never a cross-run cache.  Leave False
-    on single-consumer paths (the routing estimate), where an eager
+    tasks (runTime 24 s vs 2-3 s CPU per branch).  The router builds
+    it the same way: its estimate reads the table's prefix, then the
+    chosen branch reads the table again.  Within-query cut, recomputed
+    per invocation — never a cross-run cache.  Leave False on
+    single-consumer paths (``_prefix_index``), where an eager
     materialization of a corpus-sized table buys nothing."""
     toks = toks.select(F.col(id_col).alias("doc_id"), F.col(tok_col).alias("tok"))
     if not assume_distinct:
@@ -4884,7 +4870,6 @@ def _ssj_candidates(
     tok_col: str = "tok",
     positional: bool = True,
     assume_distinct: bool = False,
-    prebuilt: tuple[DataFrame, DataFrame] | None = None,
     per_doc: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Stages 1-3 of ``set_similarity_join``, exposed so the PPJoin
@@ -4906,16 +4891,10 @@ def _ssj_candidates(
     one-in-a-billion extra candidates is free, a dropped true pair
     breaks the exactness contract.
 
-    ``prebuilt`` short-circuits the index build with an already-derived
-    (toks, prefix) pair — the router passes the (persisted) index its
-    estimate pass materialized, so one routed call builds the prefix
-    index once (VERDICT r9 item 4).  ``per_doc`` (round 13) instead
-    derives the prefix from an already-materialized global-order table
-    so the caller can share one ``_ordered_tokens`` build with its
-    verify lookups."""
-    if prebuilt is not None:
-        toks, prefix = prebuilt
-    elif per_doc is not None:
+    ``per_doc`` derives the prefix from an already-built global-order
+    table so the caller can share one ``_ordered_tokens`` build with
+    its verify lookups (and the router with its estimate)."""
+    if per_doc is not None:
         prefix = _explode_prefix(per_doc, tau)
     else:
         toks, prefix = _prefix_index(toks, tau, id_col, tok_col, assume_distinct)
@@ -4952,7 +4931,7 @@ def set_similarity_join(
     tok_col: str = "tok",
     positional: bool = True,
     assume_distinct: bool = False,
-    prebuilt: tuple[DataFrame, DataFrame] | None = None,
+    per_doc: DataFrame | None = None,
 ) -> DataFrame:
     """Jaccard set-similarity self-join via PREFIX FILTERING
     (AllPairs/PPJoin family — Bayardo et al., WWW'07; Xiao et al.,
@@ -4998,30 +4977,21 @@ def set_similarity_join(
     tests/test_new_ops_props.py: strictly fewer candidates, identical
     final pairs).
 
-    Round-13 verify shape (guide §2.3/§5): outside the router path the
-    global-order table is built ONCE (eager localCheckpoint inside
-    ``_ordered_tokens``) and feeds prefix explode + BOTH verify
+    Round-13 verify shape (guide §2.3/§5): the global-order table is
+    built ONCE (eager localCheckpoint inside ``_ordered_tokens``, or
+    the caller's ``per_doc`` from the same call — the router passes the
+    table its estimate read) and feeds prefix explode + BOTH verify
     lookups — the profiled un-cut form recomputed the df-join +
     per-doc groupBy per branch; and the verify arrays ship xxhash64
     tokens (ARRAY<BIGINT>), cutting the candidate-join payload ~3×
     and the per-pair intersect to integer compares
     (``_hashed_token_arrays`` has the written collision bound)."""
-    if prebuilt is not None:
-        toks, cand = _ssj_candidates(
-            toks, tau, id_col, tok_col, positional, assume_distinct, prebuilt
-        )
-        # prebuilt toks is already normalized to (doc_id, tok)
-        arrs = toks.groupBy("doc_id").agg(
-            F.collect_list(F.xxhash64("tok")).alias("ts")
-        )
-    else:
+    if per_doc is None:
         toks, per_doc = _ordered_tokens(
             toks, id_col, tok_col, assume_distinct, materialize=True
         )
-        toks, cand = _ssj_candidates(
-            toks, tau, "doc_id", "tok", positional, True, per_doc=per_doc
-        )
-        arrs = _hashed_token_arrays(per_doc)
+    _, cand = _ssj_candidates(toks, tau, positional=positional, per_doc=per_doc)
+    arrs = _hashed_token_arrays(per_doc)
     inter = (
         cand.join(
             arrs.select(F.col("doc_id").alias("a_id"), F.col("ts").alias("a_ts")),
@@ -5060,12 +5030,6 @@ _J50_TOKS_CACHE: dict = register_cache({})
 # incremental_dedup's contract promises; bounded like every session
 # cache (one (app, sf_dir) generation).
 _J53_CORPUS_CACHE: dict = register_cache({})
-
-# The routed join's one-per-call persisted prefix index (VERDICT r9
-# item 4): keyed (applicationId, "routed_prefix") — a single live
-# generation; each routed call's cache_put unpersists the previous
-# call's index (same-key overwrite eviction in session_cache).
-_ROUTED_PREFIX_CACHE: dict = register_cache({})
 
 
 def _j50_corpus_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5149,9 +5113,9 @@ def ssj_candidate_estimate(
     paying for it.  Deterministic and integer-valued, so an oracle can
     replay the routing decision exactly (the j38 discipline).
 
-    ``prefix`` accepts an already-built prefix index so the router can
-    estimate from the same (persisted) index its exact branch then
-    joins — one ``_prefix_index`` per routed call."""
+    ``prefix`` accepts an already-built prefix index — the router
+    passes ``_explode_prefix`` of the global-order table its chosen
+    branch then reads, so one routed call builds that table once."""
     if prefix is None:
         _, prefix = _prefix_index(toks, tau, id_col, tok_col, assume_distinct)
     row = (
@@ -5170,110 +5134,44 @@ def jaccard_join_routed(
     id_col: str = "doc_id",
     tok_col: str = "tok",
     assume_distinct: bool = False,
-    force_route: str | None = None,
 ) -> DataFrame:
     """ONE entry point for Jaccard pair search that picks the EXACT
-    prefix-filtered join (j50) or the MinHash-LSH banded join with
-    exact verify (j3's machinery) by ESTIMATED candidate volume —
-    VERDICT r8's top ask, closing the recorded low-τ boundary: round 8
-    measured j50's τ=0.5 contract exhausting 60 GB of shuffle at sf10
-    because a recall-heavy exact contract's Σ C(pref_df, 2) is
-    intrinsic, and left "route low-τ to banding" as docstring
-    guidance.  This makes the routing CODE, j38-style: the estimate is
-    a deterministic integer (``ssj_candidate_estimate``), the branch
-    is a pure comparison against ``cand_budget``, and registered
-    queries replay estimate + branch + both release definitions in
-    their oracle, so a Spark-side routing regression mismatches even
-    when both branches are individually correct.
+    prefix-filtered join (``set_similarity_join``, j50) or the
+    MinHash-LSH join (``minhash_lsh_pairs``, j3) by ESTIMATED candidate
+    volume — VERDICT r8's top ask, closing the recorded low-τ boundary:
+    round 8 measured j50's τ=0.5 contract exhausting 60 GB of shuffle
+    at sf10 because a recall-heavy exact contract's Σ C(pref_df, 2) is
+    intrinsic.  The routing is CODE, j38-style: the estimate is a
+    deterministic integer (``ssj_candidate_estimate``), the branch is a
+    pure comparison against ``cand_budget``, and registered queries
+    replay estimate + branch + both release definitions in their
+    oracle, so a Spark-side routing regression mismatches even when
+    both branches are individually correct.
 
     Contract by branch (declared in the released ``route`` column):
-    ``exact`` releases ALL pairs with J >= tau (no false negatives);
-    ``lsh`` releases band-colliding pairs verified to J >= tau — the
-    LSH recall trade (a pair missing every band is lost), the same
-    contract j3 ships and the standard one at the scale where exact
-    is unaffordable.  False positives are impossible on either branch
-    (both verify exactly).
+    ``exact`` releases ALL pairs with J >= tau (no false negatives, up
+    to the written xxhash64 verify bound); ``lsh`` releases
+    band-colliding pairs verified to J >= tau — the LSH recall trade (a
+    pair missing every band is lost), the contract j3 ships and the
+    standard one at the scale where exact is unaffordable.  False
+    positives are impossible on either branch (both verify exactly).
 
-    100 TB shape: the estimate is one partial-agg pass; the exact
-    branch is j50's bounded prefix join; the LSH branch is a band-key
-    groupBy join (never docs²) whose banding derives from j3's
-    constants.  The budget maps to executor memory: candidates ×
-    ~24 bytes/row per shuffle partition.
-
-    The estimate pass and the exact branch share ONE prefix-index
-    materialization (VERDICT r9 item 4): when routing is live, the
-    index is built once, persisted (bounded via the session-cache
-    generation discipline), materialized by the estimate's aggregate,
-    and handed to the exact branch's candidate join; the LSH branch
-    unpersists it immediately (banding never touches the index)."""
-    route = force_route
-    est = None
-    prebuilt = None
-    if route is None:
-        toks2, prefix = _prefix_index(toks, tau, id_col, tok_col, assume_distinct)
-        prefix = prefix.persist()
-        cache_put(
-            _ROUTED_PREFIX_CACHE,
-            (toks.sparkSession.sparkContext.applicationId, "routed_prefix"),
-            prefix,
-        )
-        est = ssj_candidate_estimate(
-            toks, tau, id_col, tok_col, assume_distinct, prefix=prefix
-        )
-        route = "exact" if est <= cand_budget else "lsh"
-        prebuilt = (toks2, prefix)
-    if route == "exact":
-        out = set_similarity_join(
-            toks, tau, id_col, tok_col,
-            assume_distinct=assume_distinct, prebuilt=prebuilt,
-        )
+    One global-order table (``_ordered_tokens(materialize=True)``)
+    serves the whole call: the estimate aggregates its prefix, the
+    exact branch joins from it, and the LSH branch reads its token
+    arrays as shingle sets.  The budget maps to executor memory:
+    candidates × ~24 bytes/row per shuffle partition."""
+    toks, per_doc = _ordered_tokens(
+        toks, id_col, tok_col, assume_distinct, materialize=True
+    )
+    est = ssj_candidate_estimate(toks, tau, prefix=_explode_prefix(per_doc, tau))
+    if est <= cand_budget:
+        out = set_similarity_join(toks, tau, per_doc=per_doc)
         return out.withColumn("route", F.lit("exact"))
-    if prebuilt is not None:
-        # The LSH branch never joins the prefix index — free it now
-        # rather than waiting for the next routed call's eviction.
-        prebuilt[1].unpersist()
-    # LSH branch: j3's banding over shingle SETS rebuilt from the token
-    # table (collect_set — minhash is set-semantics, order-free), band
-    # self-join for candidates, exact Jaccard verify.
-    sh = (
-        toks.select(F.col(id_col).alias("doc_id"), F.col(tok_col).alias("tok"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("tok").alias("shingles"))
+    sh = per_doc.select(
+        "doc_id", F.transform("ord_toks", lambda t: t["tok"]).alias("shingles")
     )
-    banded = banded_signatures(sh)
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    verified = (
-        cand.join(
-            sh.select(F.col("doc_id").alias("a_id"), F.col("shingles").alias("sh_a")),
-            "a_id",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("b_id"), F.col("shingles").alias("sh_b")),
-            "b_id",
-        )
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        verified.filter(jac >= tau)
-        .select(
-            "a_id",
-            "b_id",
-            F.round(jac, 6).alias("jaccard"),
-            F.lit("lsh").alias("route"),
-        )
-    )
+    return minhash_lsh_pairs(sh, tau).withColumn("route", F.lit("lsh"))
 
 
 # Oracle replay of the routing estimate: the same (df asc, tok asc)
@@ -5372,11 +5270,12 @@ _J50C_BUDGET = 1_000
 @register("j50b_jaccard_routed", oracle=_j50_routed_oracle(_J50B_BUDGET))
 def j50b_jaccard_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """j50b (extension): ``jaccard_join_routed`` at τ=0.5 over the
-    j50 planted corpus with the production candidate budget (``_J50B_BUDGET`` = 5e7) —
-    the gate SFs route EXACT (estimate replayed in the oracle guard),
-    and the same registered query flips to the LSH contract at the
-    scale where round 8 recorded the exact contract exhausting disk.
-    See ``jaccard_join_routed``."""
+    j50 planted corpus with the production candidate budget
+    (``_J50B_BUDGET`` = 5e7) — the gate SFs route EXACT (estimate
+    replayed in the oracle guard) and run j50's ``set_similarity_join``;
+    the same registered query flips to the LSH contract
+    (``minhash_lsh_pairs``) at the scale where round 8 recorded the
+    exact contract exhausting disk.  See ``jaccard_join_routed``."""
     toks = _j50_corpus_toks(spark, sf_dir)
     return jaccard_join_routed(
         toks, _J50_TAU, _J50B_BUDGET, assume_distinct=True
@@ -5387,10 +5286,11 @@ def j50b_jaccard_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j50c_jaccard_routed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """j50c (extension): j50b's twin with the budget pinned BELOW the
     gate-SF estimate, so the driver gate attests the ROUTER's other
-    branch — the LSH-banded candidate join with exact verify — and the
-    guard comparison from the far side.  The oracle replays the same
-    estimate and flips to the band-replay release (the j3 structural
-    oracle) under the same comparison.  See ``jaccard_join_routed``."""
+    branch — j3's ``minhash_lsh_pairs`` over the router's token arrays
+    — and the guard comparison from the far side.  The oracle replays
+    the same estimate and flips to the band-replay release (the j3
+    structural oracle) under the same comparison.  See
+    ``jaccard_join_routed``."""
     toks = _j50_corpus_toks(spark, sf_dir)
     return jaccard_join_routed(
         toks, _J50_TAU, _J50C_BUDGET, assume_distinct=True
@@ -6247,15 +6147,19 @@ def incremental_dedup(
     """j53's engine: dedup an ingest BATCH against an existing CORPUS
     without ever re-pairing the corpus with itself — the production
     dedup scenario (a crawl snapshot lands; the N-doc corpus is
-    already deduped; only batch × corpus candidates matter).  Both
-    sides get the shared MinHash-LSH banding (``banded_signatures``);
-    candidates are band-sharing (batch, corpus) pairs ONLY — the
-    corpus band index is O(corpus × bands) rows and reusable across
-    batches, and the join output is O(batch-side collisions), so
-    per-ingest cost scales with the BATCH, not the corpus pair count.
-    Candidates verify with exact Jaccard; each batch doc releases
-    (batch_id, is_dup, match_id, jaccard) with the best match
-    (max jaccard, tie → lowest corpus id).
+    already deduped; only batch × corpus candidates matter).  The pairs
+    come from ``minhash_lsh_pairs`` with the batch on one side and the
+    corpus on the other: band-sharing (batch, corpus) pairs ONLY,
+    verified with exact Jaccard — the corpus band index is
+    O(corpus × bands) rows and reusable across batches, and the join
+    output is O(batch-side collisions), so per-ingest cost scales with
+    the BATCH, not the corpus pair count.  Each batch doc releases
+    (batch_id, is_dup, match_id, jaccard) with the best match: highest
+    released ROUND(J, 6), ties to the lowest corpus id.  That equals
+    the oracle's order on the unrounded J unless two of one batch doc's
+    matches differ by under 1e-6 without being equal, which needs
+    |A∪B|·|A∪C| ≥ 10⁶ shingles (distinct fractions i/u and i'/u'
+    differ by at least 1/(u·u')).
 
     Inputs are shingle tables (doc_id, shingles); ids must not collide
     across sides.  ``corpus_banded`` accepts the corpus's already-built
@@ -6265,52 +6169,14 @@ def incremental_dedup(
     round-10 docstring-vs-code audit)."""
     from pyspark.sql import Window
 
-    cb = corpus_banded if corpus_banded is not None else banded_signatures(corpus_sh)
-    bb = banded_signatures(batch_sh)
-    cand = (
-        bb.alias("b")
-        .join(
-            cb.alias("c"),
-            (F.col("b.band") == F.col("c.band"))
-            & (F.col("b.key") == F.col("c.key")),
-        )
-        .select(
-            F.col("b.doc_id").alias("batch_id"),
-            F.col("c.doc_id").alias("corpus_id"),
-        )
-        .dropDuplicates(["batch_id", "corpus_id"])
+    pairs = minhash_lsh_pairs(
+        batch_sh, tau, other=corpus_sh, other_banded=corpus_banded
     )
-    scored = (
-        cand.join(
-            batch_sh.select(
-                F.col("doc_id").alias("batch_id"), F.col("shingles").alias("sh_b")
-            ),
-            "batch_id",
-        )
-        .join(
-            corpus_sh.select(
-                F.col("doc_id").alias("corpus_id"), F.col("shingles").alias("sh_c")
-            ),
-            "corpus_id",
-        )
-        .withColumn(
-            "_jac",
-            F.size(F.array_intersect("sh_b", "sh_c"))
-            / F.size(F.array_union("sh_b", "sh_c")),
-        )
-        .filter(F.col("_jac") >= tau)
-    )
-    w = Window.partitionBy("batch_id").orderBy(
-        F.col("_jac").desc(), F.col("corpus_id").asc()
-    )
+    w = Window.partitionBy("a_id").orderBy(F.col("jaccard").desc(), F.col("b_id").asc())
     best = (
-        scored.withColumn("_rn", F.row_number().over(w))
+        pairs.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(
-            "batch_id",
-            F.col("corpus_id").alias("match_id"),
-            F.round("_jac", 6).alias("jaccard"),
-        )
+        .select(F.col("a_id").alias("batch_id"), F.col("b_id").alias("match_id"), "jaccard")
     )
     return (
         batch_sh.select(F.col("doc_id").alias("batch_id"))

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.registry import register
-from ma_anonymization_etl_spark.sources.io import load, scratch_dir
+from ma_anonymization_etl_spark.sources.io import fresh_scratch_dir, load, scratch_dir
 from ma_anonymization_etl_spark.streaming.runner import (
     run_foreach_batch,
     run_to_memory,
@@ -174,21 +174,25 @@ def _j3_oracle() -> str:
 def k10_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k10 (extension): incremental near-dup dedup — the 100 TB
     ingestion shape.  Documents arrive in micro-batches (originals,
-    then perturbed copies, maxFilesPerTrigger=1); each batch's MinHash
-    band keys are checked against an accumulating parquet fingerprint
-    store (batch-internal + batch-vs-store candidates), verified pairs
-    land in a pairs sink, and the batch's fingerprints join the store.
-    The resulting pair set must equal single-shot batch j3 on the same
-    corpus — asserted in tests/test_streaming.py."""
+    then perturbed copies, maxFilesPerTrigger=1).  Each batch runs j3's
+    ``minhash_lsh_pairs`` twice — within the batch, and batch × an
+    accumulating parquet store of earlier batches' shingles and band
+    keys — verified pairs land in a pairs sink, and the batch joins the
+    store.  The resulting pair set must equal single-shot batch j3 on
+    the same corpus — asserted in tests/test_streaming.py.  Every call
+    owns a fresh scratch directory, so the lazily read result of one
+    call survives the next."""
     from ma_anonymization_etl_spark.operators.llm import (
         _MINHASH_TAU,
         banded_signatures,
+        minhash_lsh_pairs,
         word_shingles,
     )
 
-    base = scratch_dir(spark, "k10")
-    in_dir, store, pairs_dir = (os.path.join(base, d) for d in ("in", "store", "pairs"))
-    shutil.rmtree(base, ignore_errors=True)
+    base = fresh_scratch_dir(spark, "k10")
+    in_dir, sh_store, band_store, pairs_dir = (
+        os.path.join(base, d) for d in ("in", "shingles", "bands", "pairs")
+    )
     os.makedirs(in_dir)
 
     d = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet").select("doc_id", "text")
@@ -198,45 +202,33 @@ def k10_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
     ).write.parquet(os.path.join(in_dir, "batch2"))
 
-    def fingerprints(batch: DataFrame) -> DataFrame:
-        sh = batch.withColumn("shingles", word_shingles("text", 3)).select(
-            "doc_id", "shingles"
-        )
-        return banded_signatures(sh).join(sh, "doc_id")
-
     def process(batch: DataFrame, batch_id: int) -> None:
-        fp = fingerprints(batch).persist()
+        sh = batch.select("doc_id", word_shingles("text", 3).alias("shingles")).persist()
+        bands = banded_signatures(sh).persist()
+        pairs = minhash_lsh_pairs(sh, _MINHASH_TAU, banded=bands)
         # Cold store = the path does not exist yet (first batch).  Any
         # OTHER read failure (corrupt store, transient IO) must raise —
         # treating it as cold would silently drop cross-batch pairs.
-        known = spark.read.parquet(store) if _store_exists(spark, store) else None
-        pool = fp if known is None else fp.unionByName(known)
-        a, b = fp.alias("a"), pool.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.doc_id") != F.col("b.doc_id")),
+        if _store_exists(spark, sh_store):
+            seen = minhash_lsh_pairs(
+                sh,
+                _MINHASH_TAU,
+                other=spark.read.parquet(sh_store),
+                banded=bands,
+                other_banded=spark.read.parquet(band_store),
             )
-            .select(
-                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("a_id"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("b_id"),
-                F.col("a.shingles").alias("sh_a"),
-                F.col("b.shingles").alias("sh_b"),
+            pairs = pairs.unionByName(
+                seen.select(
+                    F.least("a_id", "b_id").alias("a_id"),
+                    F.greatest("a_id", "b_id").alias("b_id"),
+                    "jaccard",
+                )
             )
-            .dropDuplicates(["a_id", "b_id"])
-        )
-        jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
-        (
-            cand.withColumn("jaccard", F.round(jac, 6))
-            .filter(F.col("jaccard") >= _MINHASH_TAU)
-            .select("a_id", "b_id", "jaccard")
-            .write.mode("append")
-            .parquet(pairs_dir)
-        )
-        fp.write.mode("append").parquet(store)
-        fp.unpersist()
+        pairs.write.mode("append").parquet(pairs_dir)
+        sh.write.mode("append").parquet(sh_store)
+        bands.write.mode("append").parquet(band_store)
+        bands.unpersist()
+        sh.unpersist()
 
     src = (
         spark.readStream.schema("doc_id BIGINT, text STRING")
@@ -244,9 +236,7 @@ def k10_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(os.path.join(in_dir, "*"))
     )
     run_foreach_batch(src, process)
-    # Cross-batch duplicates of the same pair (both directions seen) —
-    # dedup on the ordered key.
-    return spark.read.parquet(pairs_dir).dropDuplicates(["a_id", "b_id"])
+    return spark.read.parquet(pairs_dir)
 
 
 def _j60_stream_oracle() -> str:

@@ -169,23 +169,20 @@ def _step_near_dedup_drop(df, id_col="doc_id", text_col="text", tau=0.5, shingle
     """Curation step: MinHash-LSH near-duplicate REMOVAL — docs that
     band-collide with and exact-verify Jaccard >= ``tau`` against a
     LOWER-id doc drop (the canonical lowest-id-survives rule); every
-    other doc keeps.  Delegates to ``jaccard_join_routed``'s LSH branch
-    (j3's banding + exact verify), so the pair semantics are the
-    gate-attested ones; the drop list is the pair graph's b_id side
-    (a_id < b_id always), anti-joined back — never a corpus self-join."""
+    other doc keeps.  Delegates to ``minhash_lsh_pairs`` (j3's engine),
+    so the pair semantics are the gate-attested ones; the drop list is
+    the pair graph's b_id side (a_id < b_id always), anti-joined back —
+    never a corpus self-join.  ``id_col`` must identify a row."""
     from ma_anonymization_etl_spark.operators.llm import (
-        jaccard_join_routed,
+        minhash_lsh_pairs,
         word_shingles,
     )
 
-    toks = df.select(
+    sh = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(text_col, shingle)).alias("tok"),
-    ).distinct()
-    pairs = jaccard_join_routed(
-        toks, tau, 0, assume_distinct=True, force_route="lsh"
+        word_shingles(text_col, shingle).alias("shingles"),
     )
-    drops = pairs.select(F.col("b_id").alias(id_col)).distinct()
+    drops = minhash_lsh_pairs(sh, tau).select(F.col("b_id").alias(id_col)).distinct()
     return df.join(drops, id_col, "left_anti")
 
 

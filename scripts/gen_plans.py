@@ -43,9 +43,10 @@ SHOWCASE = [
     (
         "j3_dedup_near_minhash",
         "explode → partial-agg MinHash signatures; band join carries "
-        "(doc_id, band, key) longs only",
+        "(doc_id, band, key) longs only; two id-keyed shingle lookups "
+        "verify the candidates",
         "shuffle O(docs × bands), never O(docs²); the heavy shingle "
-        "arrays join once, for candidates only",
+        "arrays join for candidates only",
     ),
     (
         "i23_anonymize_pipeline",

@@ -63,6 +63,8 @@ DELEGATES = {
     "n2_scd2_historize": "scd2_historize",
     "n3_incremental_agg_refresh": "merge_agg_partials",
     "n8_record_linkage": "record_linkage_report",
+    # the one MinHash-LSH pair engine
+    "j3_dedup_near_minhash": "minhash_lsh_pairs",
     # round-7 additions
     "f6_skyline_pareto": "skyline_2d",
     "j50_jaccard_prefix_join": "set_similarity_join",

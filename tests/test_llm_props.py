@@ -618,6 +618,22 @@ def test_j3_lsh_recall_is_exhaustive(spark, duck):
     assert not extra, f"banding produced pairs the referee rejects: {sorted(extra)[:10]}"
 
 
+def test_minhash_verify_keeps_pairs_on_unrounded_jaccard(spark):
+    """The LSH engine's verify filters on the UNROUNDED J, as every
+    oracle does, and releases ROUND(J, 6).  J({a,b,c}, {a,b}) = 2/3
+    rounds to 0.666667, so a filter on the rounded value would release
+    the pair at tau = 0.6666669."""
+    from ma_anonymization_etl_spark.operators.llm import _verify_jaccard
+
+    sh = spark.createDataFrame(
+        [(1, ["a", "b", "c"]), (2, ["a", "b"])], "doc_id BIGINT, shingles ARRAY<STRING>"
+    )
+    cand = spark.createDataFrame([(1, 2)], "a_id BIGINT, b_id BIGINT")
+    assert _verify_jaccard(cand, sh, sh, 0.6666669).collect() == []
+    kept = [tuple(r) for r in _verify_jaccard(cand, sh, sh, 0.6666666).collect()]
+    assert kept == [(1, 2, 0.666667)]
+
+
 def test_j3c_exhaustive_referee_parity(spark, duck):
     """j3c was DE-REGISTERED round 5 (Θ(Σ df²), no scale story — the
     judge's terminal-disposition ask); its referee duty moves here: the

@@ -1729,9 +1729,13 @@ def test_j52b_cap_contract_boundary_and_corpus_equality(spark):
 
 def test_j50_router_branches_and_decision(spark):
     """j38-style routing for the set-similarity join (VERDICT r8 item
-    1): forced branches must equal their reference engines exactly;
-    the free decision must follow the replayable estimate-vs-budget
-    comparison on the gated corpora."""
+    1): each branch must equal its reference engine exactly, and the
+    decision must follow the replayable estimate-vs-budget comparison
+    on the gated corpora.  The LSH engine must also equal j3 when
+    called on its own, and the ``near_dedup_drop`` route step (which
+    calls it directly) must drop exactly the b_ids of j3's pairs."""
+    from pyspark.sql import functions as F
+
     from ma_anonymization_etl_spark.operators.llm import (
         _J50B_BUDGET,
         _J50C_BUDGET,
@@ -1740,46 +1744,44 @@ def test_j50_router_branches_and_decision(spark):
         j3_dedup_near_minhash,
         j50_jaccard_prefix_join,
         jaccard_join_routed,
+        minhash_lsh_pairs,
         ssj_candidate_estimate,
     )
+    from ma_anonymization_etl_spark.plans.pipeline import _step_near_dedup_drop
+    from ma_anonymization_etl_spark.sources.io import load
+
+    def pairs(df):
+        return {(r.a_id, r.b_id, r.jaccard) for r in df.collect()}
+
+    def routed(budget):
+        out = jaccard_join_routed(toks, _J50_TAU, budget, assume_distinct=True)
+        return pairs(out), {r.route for r in out.select("route").distinct().collect()}
 
     toks = _j50_corpus_toks(spark, SF_SMOKE)
-    exact = {
-        (r.a_id, r.b_id, r.jaccard)
-        for r in j50_jaccard_prefix_join(spark, SF_SMOKE).collect()
-    }
-    forced_exact = {
-        (r.a_id, r.b_id, r.jaccard)
-        for r in jaccard_join_routed(
-            toks, _J50_TAU, 0, assume_distinct=True, force_route="exact"
-        ).collect()
-    }
-    assert forced_exact == exact and exact
-
-    # the LSH branch is j3's machinery over the same corpus: same
-    # banding, same exact verify -> identical released pair set.
-    lsh_ref = {
-        (r.a_id, r.b_id, r.jaccard)
-        for r in j3_dedup_near_minhash(spark, SF_SMOKE).collect()
-    }
-    forced_lsh = {
-        (r.a_id, r.b_id, r.jaccard)
-        for r in jaccard_join_routed(
-            toks, _J50_TAU, 10**18, assume_distinct=True, force_route="lsh"
-        ).collect()
-    }
-    assert forced_lsh == lsh_ref and lsh_ref
-
     est = ssj_candidate_estimate(toks, _J50_TAU, assume_distinct=True)
     assert est > _J50C_BUDGET, "j50c must take the LSH branch at smoke SF"
     assert est <= _J50B_BUDGET, "j50b must take the exact branch at smoke SF"
-    routes = {
-        r.route
-        for r in jaccard_join_routed(
-            toks, _J50_TAU, _J50C_BUDGET, assume_distinct=True
-        ).select("route").distinct().collect()
-    }
-    assert routes == {"lsh"}
+
+    exact = pairs(j50_jaccard_prefix_join(spark, SF_SMOKE))
+    assert routed(_J50B_BUDGET) == (exact, {"exact"}) and exact
+
+    # the LSH branch is j3's engine over the same corpus: same banding,
+    # same exact verify -> identical released pair set.
+    lsh_ref = pairs(j3_dedup_near_minhash(spark, SF_SMOKE))
+    sh = toks.groupBy("doc_id").agg(F.collect_set("tok").alias("shingles"))
+    assert pairs(minhash_lsh_pairs(sh, _J50_TAU)) == lsh_ref and lsh_ref
+    assert routed(_J50C_BUDGET) == (lsh_ref, {"lsh"})
+
+    d = load(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    corpus = d.unionByName(
+        d.select(
+            (F.col("doc_id") + 100000).alias("doc_id"),
+            F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
+        )
+    )
+    kept = {r.doc_id for r in _step_near_dedup_drop(corpus, tau=_J50_TAU).collect()}
+    dropped = {r.doc_id for r in corpus.collect()} - kept
+    assert dropped == {b for (_, b, _) in lsh_ref}
 
 
 def test_j32b_substring_dedup_action_planted(spark):
@@ -2139,12 +2141,10 @@ def test_j56_maximal_dup_spans_planted(spark):
 
 
 def test_j50_router_prebuilt_prefix_reuse_identical(spark):
-    """VERDICT r9 item 4: the live-routed exact branch (which reuses
-    the persisted prefix index the estimate materialized) must release
-    exactly the pairs of a from-scratch set_similarity_join, and the
-    routed-prefix cache must hold exactly one live generation."""
+    """The live-routed exact branch (which joins from the global-order
+    table its estimate read) must release exactly the pairs of a
+    from-scratch set_similarity_join."""
     from ma_anonymization_etl_spark.operators.llm import (
-        _ROUTED_PREFIX_CACHE,
         _J50_TAU,
         _j50_corpus_toks,
         jaccard_join_routed,
@@ -2163,11 +2163,6 @@ def test_j50_router_prebuilt_prefix_reuse_identical(spark):
         ).collect()
     }
     assert routed == scratch and scratch
-    assert len(_ROUTED_PREFIX_CACHE) == 1  # one generation, bounded
-    # a second routed call overwrites (and unpersists) the previous
-    # index rather than accumulating
-    jaccard_join_routed(toks, _J50_TAU, 0, assume_distinct=True).collect()
-    assert len(_ROUTED_PREFIX_CACHE) == 1
 
 
 def test_j57_multiprobe_reference_and_derivation(spark):

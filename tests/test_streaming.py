@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.sources.io import load
 from ma_anonymization_etl_spark.streaming.runner import run_to_memory, stream_events
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 @pytest.fixture()
@@ -129,6 +129,25 @@ def test_stream_minhash_dedup_equals_batch(spark):
         for r in j3_dedup_near_minhash(spark, SF_ORACLE).collect()
     }
     assert streamed == batch
+
+
+def test_stream_minhash_dedup_calls_own_their_scratch(spark):
+    """Two k10 calls in one session: the first call's lazily read pair
+    frame must still read, and equal j3 on its own sf, after a second
+    call ran — each call writes under a scratch directory of its own."""
+    from ma_anonymization_etl_spark.operators.llm import j3_dedup_near_minhash
+    from ma_anonymization_etl_spark.operators.streaming_queries import (
+        k10_stream_minhash_dedup,
+    )
+
+    first = k10_stream_minhash_dedup(spark, SF_SMOKE)
+    k10_stream_minhash_dedup(spark, SF_ORACLE)
+    streamed = {(r["a_id"], r["b_id"], r["jaccard"]) for r in first.collect()}
+    batch = {
+        (r["a_id"], r["b_id"], r["jaccard"])
+        for r in j3_dedup_near_minhash(spark, SF_SMOKE).collect()
+    }
+    assert streamed == batch and batch
 
 
 def test_stream_tumbling_equals_batch(spark):
