@@ -295,10 +295,7 @@ def n7_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     THE mechanism that makes star-schema date filters cheap on a
     partitioned 100 TB fact table: pruning happens before I/O, scaling
     with surviving partitions, not table size."""
-    from ma_anonymization_etl_spark.sources.io import ensure_staged, scratch_dir, stage_key
-
-    sfx = stage_key(sf_dir)
-    path = scratch_dir(spark, "n7", sfx, "orders_by_year")
+    from ma_anonymization_etl_spark.sources.io import ensure_staged
 
     def _write(p: str) -> None:
         (
@@ -309,8 +306,7 @@ def n7_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(p)
         )
 
-    ensure_staged(spark, f"n7_{sfx}", path, _write)
-    fact = spark.read.parquet(path)
+    fact = spark.read.parquet(ensure_staged(spark, "n7_orders_by_year", sf_dir, _write))
     dim = (
         load(spark, sf_dir, "orders")
         .select(F.year("o_orderdate").alias("dim_year"))
@@ -354,24 +350,24 @@ def n6_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer to c2's shuffle: pay the distribution at write time, join
     shuffle-free forever after.  The aggregate must equal the plain
     parquet join (bucketing must never change results)."""
-    import re
+    import os
 
-    from ma_anonymization_etl_spark.sources.io import scratch_dir
+    from ma_anonymization_etl_spark.sources.io import ensure_staged
 
-    # Table names carry the sf_dir so one session can serve multiple SFs
-    # without returning a stale layout.
-    sfx = re.sub(r"\W+", "_", sf_dir.rstrip("/"))
-    for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        table = f"n6_b_{name}_{sfx}"
-        if not spark.catalog.tableExists(table):
+    def _write(p: str) -> None:
+        for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
             (
                 load(spark, sf_dir, name)
                 .write.mode("overwrite")
-                .option("path", scratch_dir(spark, "n6", sfx, name))
+                .option("path", os.path.join(p, name))
                 .bucketBy(8, key)
                 .sortBy(key)
-                .saveAsTable(table)
+                .saveAsTable(f"n6_b_{name}_{os.path.basename(p)}")
             )
+
+    # The staged path ends in stage_key(sf_dir), so the table names carry
+    # the sf and one session serves several sfs without a stale layout.
+    sfx = os.path.basename(ensure_staged(spark, "n6", sf_dir, _write))
     o = spark.table(f"n6_b_orders_{sfx}").select("o_orderkey", "o_orderpriority")
     li = spark.table(f"n6_b_lineitem_{sfx}").select("l_orderkey", "l_extendedprice")
     return (
@@ -621,10 +617,7 @@ def n10_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own physical schema."""
     import os
 
-    from ma_anonymization_etl_spark.sources.io import ensure_staged, scratch_dir, stage_key
-
-    sfx = stage_key(sf_dir)
-    base = scratch_dir(spark, "n10_evo", sfx)
+    from ma_anonymization_etl_spark.sources.io import ensure_staged
 
     def _write(p: str) -> None:
         o = load(spark, sf_dir, "orders")
@@ -639,7 +632,7 @@ def n10_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         v1.write.mode("overwrite").parquet(os.path.join(p, "batch=1"))
         v2.write.mode("overwrite").parquet(os.path.join(p, "batch=2"))
 
-    ensure_staged(spark, f"n10_{sfx}", base, _write)
+    base = ensure_staged(spark, "n10_evo", sf_dir, _write)
     back = spark.read.option("mergeSchema", "true").parquet(base)
     return back.groupBy("o_channel").agg(
         F.count(F.lit(1)).alias("n"),
@@ -776,27 +769,24 @@ def n12_partition_overwrite_backfill(spark: SparkSession, sf_dir: str) -> DataFr
     while
     every other partition's files are untouched; with static overwrite
     (the default) the same write would have DELETED all other years.
-    The corrected rows derive from the source table, not the staged
-    dir, so re-runs are idempotent rather than compounding.  The read
-    back aggregates the whole table and the oracle recomputes the
-    expected post-backfill state from first principles.
+    Each call stages its own copy of the table in a fresh scratch
+    directory, since the backfill rewrites it, and the corrected rows
+    derive from the source table, so re-runs neither compound nor touch
+    an earlier call's files.  The read back aggregates the whole table
+    and the oracle recomputes the expected post-backfill state from
+    first principles.
 
     Scale: overwrite cost is O(one partition), not O(table) — at
     100 TB with daily partitions a backfill touches 1/3650th of the
     data; commit atomicity is per-partition-directory (a table format
     upgrades that to a transaction, same write shape)."""
-    from ma_anonymization_etl_spark.sources.io import ensure_staged, scratch_dir, stage_key
+    from ma_anonymization_etl_spark.sources.io import fresh_scratch_dir
 
-    sfx = stage_key(sf_dir)
-    base = scratch_dir(spark, "n12_base", sfx)
+    base = fresh_scratch_dir(spark, "n12")
     o = load(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("long")
     )
-
-    def _write(p: str) -> None:
-        o.write.mode("overwrite").partitionBy("o_year").parquet(p)
-
-    ensure_staged(spark, f"n12_{sfx}", base, _write)
+    o.write.partitionBy("o_year").parquet(base)
     fix = o.filter(F.col("o_year") == 1997).withColumn(
         "o_totalprice", F.col("o_totalprice") + 1
     )

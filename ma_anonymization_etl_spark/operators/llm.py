@@ -3062,13 +3062,20 @@ def fuzzy_dup_pairs(
     text_col: str = "text",
     keys: tuple = ("p", "s"),
     block_df_cap: int | None = None,
+    other: DataFrame | None = None,
 ) -> DataFrame:
-    """j60's engine: candidate pairs share a PREFIX block (first
-    ``block_len`` chars) or a SUFFIX block (last ``block_len``), with
-    length difference <= ``tau`` (an edit-distance lower bound, applied
-    INSIDE the candidate join); survivors verify with banded
-    Levenshtein (threshold form — O(tau·L) per pair, not O(L²)) and
-    release (a_id, b_id, dist) for dist <= tau, a < b.
+    """The edit-distance pair engine behind j60/j60b/j60c, the
+    ``fuzzy_dedup_drop`` step and k26: candidate pairs share a PREFIX
+    block (first ``block_len`` chars) or a SUFFIX block (last
+    ``block_len``), with length difference <= ``tau`` (an edit-distance
+    lower bound, applied INSIDE the candidate join); survivors verify
+    with banded Levenshtein (threshold form — O(tau·L) per pair, not
+    O(L²)) and release (a_id, b_id, dist) for dist <= tau.
+
+    One side (``other`` None) is a self-join releasing a_id < b_id.
+    With ``other``, a_id comes from ``docs`` and b_id from ``other`` and
+    no id order is imposed, so ids must not collide across the sides
+    (k26 runs a micro-batch against its store this way).
 
     RECALL CONTRACT (explicit, oracle-replayed): a true near-pair whose
     edits touch EVERY enabled block escapes blocking — the standard
@@ -3097,12 +3104,10 @@ def fuzzy_dup_pairs(
     contract narrows to "pairs sharing at least one SUB-CAP block" —
     a pair whose every shared block is boilerplate-hot escapes, the
     LSH-banding style of trade; j60c registers it with the cap
-    replayed structurally in the oracle.  Uncapped (None, the
-    default), word-soup prefixes are near-unique and the planted
-    twins dominate the blocks."""
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.lower(F.col(text_col)).alias("text")
-    ).withColumn("n", F.length("text"))
+    replayed structurally in the oracle.  With ``other``, a block's df
+    counts the docs of both sides.  Uncapped (None, the default),
+    word-soup prefixes are near-unique and the planted twins dominate
+    the blocks."""
     key_exprs = {
         "p": F.substring("text", 1, block_len),
         "s": F.col("text").substr(
@@ -3116,22 +3121,31 @@ def fuzzy_dup_pairs(
             F.lit(block_len),
         ),
     }
-    kts = tuple(keys)
-    key_rows = base.select(
-        "doc_id",
-        "n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(kt).alias("kt"), key_exprs[kt].alias("k"))
-                    for kt in kts
-                ]
-            )
-        ).alias("o"),
-    ).select("doc_id", "n", F.col("o.kt").alias("kt"), F.col("o.k").alias("k"))
+
+    def keyed(side: DataFrame) -> tuple[DataFrame, DataFrame]:
+        base = side.select(
+            F.col(id_col).alias("doc_id"), F.lower(F.col(text_col)).alias("text")
+        ).withColumn("n", F.length("text"))
+        key_rows = base.select(
+            "doc_id",
+            "n",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(F.lit(kt).alias("kt"), key_exprs[kt].alias("k"))
+                        for kt in keys
+                    ]
+                )
+            ).alias("o"),
+        ).select("doc_id", "n", F.col("o.kt").alias("kt"), F.col("o.k").alias("k"))
+        return base, key_rows
+
+    base, key_rows = keyed(docs)
+    o_base, o_rows = (base, key_rows) if other is None else keyed(other)
     if block_df_cap is not None:
         hot = (
-            key_rows.groupBy("kt", "k")
+            (key_rows if other is None else key_rows.unionByName(o_rows))
+            .groupBy("kt", "k")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > block_df_cap)
             .select("kt", "k")
@@ -3146,15 +3160,17 @@ def fuzzy_dup_pairs(
         # across runs.
         hot = hot.localCheckpoint(eager=True)
         key_rows = key_rows.join(F.broadcast(hot), ["kt", "k"], "left_anti")
+        o_rows = (
+            key_rows if other is None
+            else o_rows.join(F.broadcast(hot), ["kt", "k"], "left_anti")
+        )
+    cond = (F.col("x.kt") == F.col("y.kt")) & (F.col("x.k") == F.col("y.k"))
+    if other is None:
+        cond &= F.col("x.doc_id") < F.col("y.doc_id")
+    cond &= F.abs(F.col("x.n") - F.col("y.n")) <= tau
     cand = (
         key_rows.alias("x")
-        .join(
-            key_rows.alias("y"),
-            (F.col("x.kt") == F.col("y.kt"))
-            & (F.col("x.k") == F.col("y.k"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            & (F.abs(F.col("x.n") - F.col("y.n")) <= tau),
-        )
+        .join(o_rows.alias("y"), cond)
         .groupBy(F.col("x.doc_id").alias("a_id"), F.col("y.doc_id").alias("b_id"))
         .agg(F.count(F.lit(1)).alias("nk"))
         .drop("nk")
@@ -3172,7 +3188,7 @@ def fuzzy_dup_pairs(
     # sort-before-repartition cost is per-candidate-row, trivial.
     cand = cand.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     at = base.select(F.col("doc_id").alias("a_id"), F.col("text").alias("a_t"))
-    bt = base.select(F.col("doc_id").alias("b_id"), F.col("text").alias("b_t"))
+    bt = o_base.select(F.col("doc_id").alias("b_id"), F.col("text").alias("b_t"))
     return (
         cand.join(at, "a_id")
         .join(bt, "b_id")
@@ -3186,6 +3202,19 @@ def fuzzy_dup_pairs(
 # with 'qq' — edit distance <= 2 (= 2 unless the original already reads
 # 'qq' there), prefix-16 AND suffix-16 blocks both intact, so blocking
 # finds every twin and the verify releases its exact distance.
+def _j60_twins(d: DataFrame) -> DataFrame:
+    """The planted twin of every (doc_id, text) row of ``d``: doc_id +
+    700000, characters 20-21 replaced by 'qq' (j60, j60b, j60c, k26)."""
+    return d.select(
+        (F.col("doc_id") + 700000).alias("doc_id"),
+        F.concat(
+            F.substring("text", 1, 19),
+            F.lit("qq"),
+            F.col("text").substr(F.lit(22), F.length("text")),
+        ).alias("text"),
+    )
+
+
 _J60_ORACLE = f"""
 WITH base AS (
   SELECT doc_id, lower(text) AS t FROM documents
@@ -3257,15 +3286,7 @@ def j60b_fuzzy_dedup_3key(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "doc_id", F.lower(F.col("text")).alias("text")
     )
-    twin = d.select(
-        (F.col("doc_id") + 700000).alias("doc_id"),
-        F.concat(
-            F.substring("text", 1, 19),
-            F.lit("qq"),
-            F.col("text").substr(F.lit(22), F.length("text")),
-        ).alias("text"),
-    )
-    return fuzzy_dup_pairs(d.unionByName(twin), keys=("p", "s", "m"))
+    return fuzzy_dup_pairs(d.unionByName(_j60_twins(d)), keys=("p", "s", "m"))
 
 
 @register("j60_fuzzy_dedup_edit", oracle=_J60_ORACLE)
@@ -3279,15 +3300,7 @@ def j60_fuzzy_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "doc_id", F.lower(F.col("text")).alias("text")
     )
-    twin = d.select(
-        (F.col("doc_id") + 700000).alias("doc_id"),
-        F.concat(
-            F.substring("text", 1, 19),
-            F.lit("qq"),
-            F.col("text").substr(F.lit(22), F.length("text")),
-        ).alias("text"),
-    )
-    return fuzzy_dup_pairs(d.unionByName(twin))
+    return fuzzy_dup_pairs(d.unionByName(_j60_twins(d)))
 
 
 # j60c's planted corpus is j60's adversarial shape: every 4th doc (and
@@ -3358,15 +3371,7 @@ def j60c_fuzzy_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lower(F.col("text")))
         .alias("text"),
     )
-    twin = d0.select(
-        (F.col("doc_id") + 700000).alias("doc_id"),
-        F.concat(
-            F.substring("text", 1, 19),
-            F.lit("qq"),
-            F.col("text").substr(F.lit(22), F.length("text")),
-        ).alias("text"),
-    )
-    return fuzzy_dup_pairs(d0.unionByName(twin), block_df_cap=_J60C_DF_CAP)
+    return fuzzy_dup_pairs(d0.unionByName(_j60_twins(d0)), block_df_cap=_J60C_DF_CAP)
 
 
 @register(

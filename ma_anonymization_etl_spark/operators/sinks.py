@@ -1,22 +1,24 @@
 """Source/sink roundtrip queries — SURVEY.md §2 a2 (csv/json ingestion)
-and a4 (parquet sink).  Side-effecting by nature: each query writes to a
-deterministic scratch dir under /tmp, reads its own output back, and
-returns an aggregate the DuckDB oracle reproduces from the *original*
-table — so the roundtrip itself is what's being verified.
+and a4 (parquet sink).  Side-effecting by nature: each call writes to a
+scratch directory of its own (``sources.io.fresh_scratch_dir``), reads
+its output back, and returns an aggregate the DuckDB oracle reproduces
+from the *original* table — so the roundtrip itself is what's being
+verified, and a later call never touches an earlier call's files.
 """
 
 from __future__ import annotations
 
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.registry import register
 from ma_anonymization_etl_spark.sources.io import (
+    fresh_scratch_dir,
     load,
     read_csv,
     read_json,
-    scratch_dir,
     write_parquet,
 )
 
@@ -24,11 +26,6 @@ _SCALE = 10000
 _SQL_SUM_VALUE = (
     f"CAST(SUM(CAST(FLOOR(value * {_SCALE}) AS BIGINT)) AS DOUBLE) / {_SCALE}"
 )
-
-
-def _scratch(spark: SparkSession, name: str) -> str:
-    # Session-scoped (applicationId-keyed): see sources.io.scratch_dir.
-    return scratch_dir(spark, name)
 
 
 @register(
@@ -42,9 +39,9 @@ def a2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """a2: CSV sink + explicit-schema CSV source.  Doubles survive the
     text roundtrip exactly (Spark writes shortest-repr, reads the same
     double back); the oracle aggregates the original parquet."""
-    path = _scratch(spark, "a2_csv")
+    path = fresh_scratch_dir(spark, "a2_csv")
     e = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
-    e.write.mode("overwrite").option("header", True).csv(path)
+    e.write.option("header", True).csv(path)
     back = read_csv(
         spark, path,
         "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE",
@@ -64,9 +61,9 @@ FROM events GROUP BY event_type
 )
 def a2b_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """a2: JSON-lines sink + explicit-schema JSON source."""
-    path = _scratch(spark, "a2_json")
+    path = fresh_scratch_dir(spark, "a2_json")
     e = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    e.write.mode("overwrite").json(path)
+    e.write.json(path)
     back = read_json(spark, path, "event_id BIGINT, user_id BIGINT, event_type STRING")
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"), F.countDistinct("user_id").alias("n_users")
@@ -85,9 +82,9 @@ def a2c_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no extra package), with the same predicate-pushdown/column-pruning
     behavior as parquet.  Typed columns (bigint/string/date) roundtrip
     losslessly; the oracle aggregates the original parquet."""
-    path = _scratch(spark, "a2_orc")
+    path = fresh_scratch_dir(spark, "a2_orc")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_orderdate")
-    o.write.mode("overwrite").orc(path)
+    o.write.orc(path)
     back = spark.read.orc(path)
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
@@ -107,7 +104,7 @@ def a4_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """a4: hive-partitioned parquet sink, verified by re-reading.  The
     partition column round-trips through the directory layout (read back
     as the partition value), giving downstream partition pruning."""
-    path = _scratch(spark, "a4_parquet")
+    path = fresh_scratch_dir(spark, "a4_parquet")
     c = load(spark, sf_dir, "customer")
     write_parquet(c, path, partition_by=["c_mktsegment"])
     back = spark.read.parquet(path)
@@ -136,13 +133,13 @@ def n4_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxPartitionBytes per partition dir, and the rewrite runs per
     partition so only fragmented partitions pay; file counts are pinned
     in tests/test_etl.py."""
-    frag = _scratch(spark, "n4_frag")
-    comp = _scratch(spark, "n4_compact")
+    base = fresh_scratch_dir(spark, "n4")
+    frag, comp = os.path.join(base, "frag"), os.path.join(base, "compact")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    o.repartition(64).write.mode("overwrite").parquet(frag)
-    spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(comp)
+    o.repartition(64).write.parquet(frag)
+    spark.read.parquet(frag).repartition(4).write.parquet(comp)
     back = spark.read.parquet(comp)
     return back.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
@@ -174,15 +171,15 @@ def a9_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the norm, not the exception: tables accrete columns over
     years of writers, and per-file footer schemas + union-by-name is
     what makes old data readable without a rewrite."""
-    v1 = _scratch(spark, "a9_v1")
-    v2 = _scratch(spark, "a9_v2")
+    base = fresh_scratch_dir(spark, "a9")
+    v1, v2 = os.path.join(base, "v1"), os.path.join(base, "v2")
     o = load(spark, sf_dir, "orders")
     o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderstatus"
-    ).write.mode("overwrite").parquet(v1)
+    ).write.parquet(v1)
     o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_orderstatus", F.col("o_orderpriority").alias("note")
-    ).write.mode("overwrite").parquet(v2)
+    ).write.parquet(v2)
     back = spark.read.option("mergeSchema", True).parquet(v1, v2)
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"), F.count("note").alias("n_with_note")
@@ -212,13 +209,13 @@ def a2d_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: text read is splittable by line; schema is applied by
     parsing expressions AFTER the scan, so prefer it only for ingest —
     columnar formats for everything downstream."""
-    path = _scratch(spark, "a2_text")
+    path = fresh_scratch_dir(spark, "a2_text")
     d = load(spark, sf_dir, "documents").select(
         F.concat(
             F.col("doc_id").cast("string"), F.lit("|"), F.md5("text")
         ).alias("value")
     )
-    d.write.mode("overwrite").text(path)
+    d.write.text(path)
     back = spark.read.text(path)
     return back.agg(
         F.count(F.lit(1)).alias("n_lines"),

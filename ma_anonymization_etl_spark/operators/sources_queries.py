@@ -151,10 +151,7 @@ def a11_csv_malformed_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from ma_anonymization_etl_spark.sources.io import ensure_staged, scratch_dir, stage_key
-
-    sfx = stage_key(sf_dir)
-    stage_dir = scratch_dir(spark, "a11_stage", sfx)
+    from ma_anonymization_etl_spark.sources.io import ensure_staged
 
     def _write(p: str) -> None:
         d = load(spark, sf_dir, "documents")
@@ -171,7 +168,7 @@ def a11_csv_malformed_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         lines.coalesce(1).write.mode("overwrite").text(os.path.join(p, "feed"))
 
-    ensure_staged(spark, f"a11_{sfx}", stage_dir, _write)
+    stage_dir = ensure_staged(spark, "a11_stage", sf_dir, _write)
     schema = StructType(
         [
             StructField("doc_id", LongType()),

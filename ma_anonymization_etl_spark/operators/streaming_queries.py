@@ -1,6 +1,11 @@
 """Registry queries that EXECUTE via Structured Streaming — the stream
 computes, the DuckDB oracle (batch semantics) verifies the memory-sink
 or parquet-sink output.  SURVEY.md §2 a5/a6, k5/k7/k9.
+
+Every call writes its inputs, sinks and stores under a
+``fresh_scratch_dir`` of its own, so a second call never deletes the
+parquet under an earlier call's lazily read result; only the read-only
+``ensure_staged`` inputs of k22/k24/k25 are shared across calls.
 """
 
 from __future__ import annotations
@@ -14,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.registry import register
-from ma_anonymization_etl_spark.sources.io import fresh_scratch_dir, load, scratch_dir
+from ma_anonymization_etl_spark.sources.io import ensure_staged, fresh_scratch_dir, load
 from ma_anonymization_etl_spark.streaming.runner import (
     run_foreach_batch,
     run_to_memory,
@@ -77,8 +82,7 @@ SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type
 def a6_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """a6: micro-batch parquet sink via foreachBatch + checkpoint
     (exactly-once file output); verified by re-reading the sink."""
-    out_dir = scratch_dir(spark, "a6_sink")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = fresh_scratch_dir(spark, "a6_sink")
     ev = stream_events(spark, sf_dir).select("event_id", "event_type")
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
@@ -250,20 +254,22 @@ def k26_stream_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k26 (extension): j60's edit-distance fuzzy dedup as the INGEST
     shape — the k10 pattern at character granularity.  Documents arrive
     in micro-batches (originals, then the 2-char-substituted twins,
-    maxFilesPerTrigger=1); each batch's prefix/suffix-16 blocking keys
-    are checked against an accumulating parquet key store
-    (batch-internal + batch-vs-store candidates, length lower bound
-    inside the join), banded-Levenshtein-verified pairs land in a pairs
-    sink, and the batch's keys join the store.  The accumulated pair
+    maxFilesPerTrigger=1).  Each batch runs j60's ``fuzzy_dup_pairs``
+    twice — within the batch, and batch × an accumulating parquet store
+    of earlier batches' (doc_id, text) — verified pairs land in a pairs
+    sink, and the batch joins the store.  The two pair sets are
+    disjoint (a within-batch pair has both ids in the batch, a store
+    pair one), so the sink holds each pair once.  The accumulated pair
     set must equal single-shot batch j60 on the same corpus — the
     oracle IS j60's (and tests/test_streaming.py asserts engine-side
     equality too).  Per-ingest cost scales with the batch's block
-    collisions, never the corpus pair count."""
-    from ma_anonymization_etl_spark.operators.llm import _J60_BLOCK, _J60_TAU
+    collisions, never the corpus pair count.  Every call owns a fresh
+    scratch directory, so the lazily read result of one call survives
+    the next."""
+    from ma_anonymization_etl_spark.operators.llm import _j60_twins, fuzzy_dup_pairs
 
-    base = scratch_dir(spark, "k26")
+    base = fresh_scratch_dir(spark, "k26")
     in_dir, store, pairs_dir = (os.path.join(base, d) for d in ("in", "store", "pairs"))
-    shutil.rmtree(base, ignore_errors=True)
     os.makedirs(in_dir)
 
     d = (
@@ -271,72 +277,23 @@ def k26_stream_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.lower(F.col("text")).alias("text"))
     )
     d.write.parquet(os.path.join(in_dir, "batch1"))
-    d.select(
-        (F.col("doc_id") + 700000).alias("doc_id"),
-        F.concat(
-            F.substring("text", 1, 19),
-            F.lit("qq"),
-            F.col("text").substr(F.lit(22), F.length("text")),
-        ).alias("text"),
-    ).write.parquet(os.path.join(in_dir, "batch2"))
-
-    def block_keys(batch: DataFrame) -> DataFrame:
-        b = batch.withColumn("n", F.length("text"))
-        return b.select(
-            "doc_id",
-            "n",
-            "text",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit("p").alias("kt"),
-                        F.substring("text", 1, _J60_BLOCK).alias("k"),
-                    ),
-                    F.struct(
-                        F.lit("s").alias("kt"),
-                        F.col("text")
-                        .substr(
-                            F.greatest(F.col("n") - F.lit(_J60_BLOCK - 1), F.lit(1)),
-                            F.lit(_J60_BLOCK),
-                        )
-                        .alias("k"),
-                    ),
-                )
-            ).alias("o"),
-        ).select("doc_id", "n", "text", F.col("o.kt").alias("kt"), F.col("o.k").alias("k"))
+    _j60_twins(d).write.parquet(os.path.join(in_dir, "batch2"))
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        keys = block_keys(batch).persist()
+        pairs = fuzzy_dup_pairs(batch)
         # Cold store = path absent (first batch); genuine read errors
         # surface instead of silently dropping cross-batch pairs.
-        known = spark.read.parquet(store) if _store_exists(spark, store) else None
-        pool = keys if known is None else keys.unionByName(known)
-        a, b = keys.alias("a"), pool.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.kt") == F.col("b.kt"))
-                & (F.col("a.k") == F.col("b.k"))
-                & (F.col("a.doc_id") != F.col("b.doc_id"))
-                & (F.abs(F.col("a.n") - F.col("b.n")) <= _J60_TAU),
+        if _store_exists(spark, store):
+            seen = fuzzy_dup_pairs(batch, other=spark.read.parquet(store))
+            pairs = pairs.unionByName(
+                seen.select(
+                    F.least("a_id", "b_id").alias("a_id"),
+                    F.greatest("a_id", "b_id").alias("b_id"),
+                    "dist",
+                )
             )
-            .select(
-                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("a_id"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("b_id"),
-                F.col("a.text").alias("t_a"),
-                F.col("b.text").alias("t_b"),
-            )
-            .dropDuplicates(["a_id", "b_id"])
-        )
-        (
-            cand.withColumn("dist", F.levenshtein("t_a", "t_b", _J60_TAU))
-            .filter(F.col("dist") >= 0)
-            .select("a_id", "b_id", F.col("dist").cast("long").alias("dist"))
-            .write.mode("append")
-            .parquet(pairs_dir)
-        )
-        keys.write.mode("append").parquet(store)
-        keys.unpersist()
+        pairs.write.mode("append").parquet(pairs_dir)
+        batch.write.mode("append").parquet(store)
 
     src = (
         spark.readStream.schema("doc_id BIGINT, text STRING")
@@ -344,7 +301,7 @@ def k26_stream_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(os.path.join(in_dir, "*"))
     )
     run_foreach_batch(src, process)
-    return spark.read.parquet(pairs_dir).dropDuplicates(["a_id", "b_id"])
+    return spark.read.parquet(pairs_dir)
 
 
 @register(
@@ -370,8 +327,7 @@ def k9_stream_anonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction job would enforce k over the landed data."""
     from ma_anonymization_etl_spark.plans.pipeline import anonymize_pipeline
 
-    out_dir = scratch_dir(spark, "k9_sink")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = fresh_scratch_dir(spark, "k9_sink")
     ev = stream_events(spark, sf_dir).select("user_id", "event_type", "value")
     route = [
         {"op": "pseudonymize_sha2", "col": "user_id", "salt": "stream|", "out": "user_token"},
@@ -408,9 +364,8 @@ def k14_stream_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     so it shares i26's oracle."""
     from ma_anonymization_etl_spark.operators.llm import pii_scrub_projection
 
-    base = scratch_dir(spark, "k14")
+    base = fresh_scratch_dir(spark, "k14")
     in_dir, out_dir = os.path.join(base, "in"), os.path.join(base, "out")
-    shutil.rmtree(base, ignore_errors=True)
     os.makedirs(in_dir)
 
     d = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet").select(
@@ -699,8 +654,7 @@ def k21_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     like any other.  (With a transactional table format, the same
     batch_id key goes into the commit metadata — the txn variant of
     this exact pattern.)"""
-    out_dir = scratch_dir(spark, "k21_sink")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = fresh_scratch_dir(spark, "k21_sink")
 
     def deliver_once() -> set[int]:
         ev = stream_events(spark, sf_dir).select("event_id", "event_type", "value")
@@ -776,11 +730,6 @@ def k22_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(batch) work, not O(history)); the rollup read merges O(buckets ×
     batches) partial rows, compactable at any time (n4) without
     changing results because the merge is associative and exact."""
-    from ma_anonymization_etl_spark.sources.io import ensure_staged, stage_key
-
-    sfx = stage_key(sf_dir)
-    stage_dir = scratch_dir(spark, "k22_stage", sfx)
-
     def _write(p: str) -> None:
         e = load(spark, sf_dir, "events")
         cut = "2024-01-16"
@@ -791,9 +740,8 @@ def k22_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(p, "half=1")
         )
 
-    ensure_staged(spark, f"k22_{sfx}", stage_dir, _write)
-    rollup_dir = scratch_dir(spark, "k22_rollup", sfx)
-    shutil.rmtree(rollup_dir, ignore_errors=True)
+    stage_dir = ensure_staged(spark, "k22_stage", sf_dir, _write)
+    rollup_dir = fresh_scratch_dir(spark, "k22_rollup")
     schema = spark.read.parquet(stage_dir).drop("half").schema
     stream = (
         spark.readStream.schema(schema)
@@ -856,10 +804,6 @@ def k24_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     prescribe for streaming upserts (a transactional table format
     would take the same merge via its commit log)."""
     from pyspark.sql import Window
-    from ma_anonymization_etl_spark.sources.io import ensure_staged, stage_key
-
-    sfx = stage_key(sf_dir)
-    stage_dir = scratch_dir(spark, "k24_stage", sfx)
 
     def _write(p: str) -> None:
         e = load(spark, sf_dir, "events")
@@ -868,9 +812,8 @@ def k24_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).parquet(os.path.join(p, f"third={i}"))
 
-    ensure_staged(spark, f"k24_{sfx}", stage_dir, _write)
-    state_root = scratch_dir(spark, "k24_state", sfx)
-    shutil.rmtree(state_root, ignore_errors=True)
+    stage_dir = ensure_staged(spark, "k24_stage", sf_dir, _write)
+    state_root = fresh_scratch_dir(spark, "k24_state")
     schema = spark.read.parquet(stage_dir).drop("third").schema
     stream = (
         spark.readStream.schema(schema)
@@ -955,11 +898,6 @@ def k25_stream_histogram_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     rows and never re-scans history — quantile monitoring that stays
     O(1)-ish per refresh at any corpus size (compact partials with n4
     whenever batches accumulate)."""
-    from ma_anonymization_etl_spark.sources.io import ensure_staged, stage_key
-
-    sfx = stage_key(sf_dir)
-    stage_dir = scratch_dir(spark, "k25_stage", sfx)
-
     def _write(p: str) -> None:
         e = load(spark, sf_dir, "events")
         for i in range(3):
@@ -967,9 +905,8 @@ def k25_stream_histogram_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
                 "overwrite"
             ).parquet(os.path.join(p, f"third={i}"))
 
-    ensure_staged(spark, f"k25_{sfx}", stage_dir, _write)
-    part_dir = scratch_dir(spark, "k25_partials", sfx)
-    shutil.rmtree(part_dir, ignore_errors=True)
+    stage_dir = ensure_staged(spark, "k25_stage", sf_dir, _write)
+    part_dir = fresh_scratch_dir(spark, "k25_partials")
     schema = spark.read.parquet(stage_dir).drop("third").schema
     stream = (
         spark.readStream.schema(schema)

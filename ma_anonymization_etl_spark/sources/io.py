@@ -34,6 +34,12 @@ def scratch_dir(spark: SparkSession, *parts: str) -> str:
     """Session-scoped scratch path for side-effecting queries:
     /tmp/mael_scratch/<applicationId>/<parts...>.
 
+    The scratch rule: a query's outputs go under one
+    ``fresh_scratch_dir`` per call, never straight under a path from
+    here, so a second call cannot delete or rewrite the files under an
+    earlier call's lazily read result.  Only read-only staged inputs
+    (``ensure_staged``) share a path across calls.
+
     Keyed by applicationId so concurrent engine processes (driver
     harness, CI, bench, ad-hoc sessions) never tread on each other's
     sink/staging dirs — a shared fixed path let a parallel run delete a
@@ -70,7 +76,9 @@ def fresh_scratch_dir(spark: SparkSession, name: str, scratch: str | None = None
     directory under ``scratch_dir(spark, name)``, or the caller's
     ``scratch``, which must not exist yet.  A caller's path is refused,
     never emptied, so no call deletes data it did not write, and two
-    calls in one session never read each other's files."""
+    calls in one session never read each other's files.  Every output a
+    query writes goes here, its subdirectories laid out beneath it;
+    only read-only staged inputs (``ensure_staged``) are shared."""
     import os
     import uuid
 
@@ -96,18 +104,24 @@ def stage_key(sf_dir: str) -> str:
     )
 
 
-def ensure_staged(spark: SparkSession, key: str, path: str, writer) -> str:
-    """Stage-once guard for side-effecting fixtures (n7's partitioned
-    fact, n10's schema generations, k22's split stream): run
-    ``writer(path)`` unless BOTH the session conf marker is set AND the
-    path still exists on disk.  The marker alone is not proof: another
-    application's scratch sweep (see scratch_dir) removes app dirs by
-    top-level mtime, which writes inside subdirectories do not refresh,
-    so a long-lived session could hold a truthy marker for a deleted
-    directory and fail on read."""
+def ensure_staged(spark: SparkSession, name: str, sf_dir: str, writer) -> str:
+    """Stage-once guard for a READ-ONLY staged input derived from
+    ``sf_dir`` (a11's corrupt feed, n6's bucketed tables, n7's
+    partitioned fact, n10's schema generations, k22/k24/k25's split
+    streams): the path is ``scratch_dir(spark, name, stage_key(sf_dir))``
+    and ``writer(path)`` runs unless BOTH the session conf marker for
+    (name, sf_dir) is set AND the path still exists on disk.  Calls
+    share the staged path, so nothing may write under it after
+    staging; a query's outputs get a ``fresh_scratch_dir`` per call.
+    The marker alone is not proof: another application's scratch sweep
+    (see scratch_dir) removes app dirs by top-level mtime, which writes
+    inside subdirectories do not refresh, so a long-lived session could
+    hold a truthy marker for a deleted directory and fail on read."""
     import os
 
-    marker = f"spark.mael.staged_{key}"
+    key = stage_key(sf_dir)
+    path = scratch_dir(spark, name, key)
+    marker = f"spark.mael.staged_{name}_{key}"
     if not (spark.conf.get(marker, None) and os.path.exists(path)):
         writer(path)
         spark.conf.set(marker, "1")

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.operators.etl import merge_upsert, scd2_historize
 from ma_anonymization_etl_spark.sources.io import load
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE, compare_query
 
 
 def test_merge_upsert_semantics(spark):
@@ -63,13 +63,17 @@ def test_merge_upsert_count_invariant(spark):
 def test_n4_compaction_reduces_file_count(spark):
     import glob
     import os
+    from urllib.parse import urlparse
 
     from ma_anonymization_etl_spark.registry import load_all
-    from ma_anonymization_etl_spark.sources.io import scratch_dir
 
-    load_all()["n4_compact_small_files"].fn(spark, SF_ORACLE).collect()
-    frag = glob.glob(os.path.join(scratch_dir(spark, "n4_frag"), "*.parquet"))
-    comp = glob.glob(os.path.join(scratch_dir(spark, "n4_compact"), "*.parquet"))
+    out = load_all()["n4_compact_small_files"].fn(spark, SF_ORACLE)
+    out.collect()
+    # The frame reads the compacted copy; the fragments sit beside it.
+    comp_dir = os.path.dirname(urlparse(out.inputFiles()[0]).path)
+    frag_dir = os.path.join(os.path.dirname(comp_dir), "frag")
+    frag = glob.glob(os.path.join(frag_dir, "*.parquet"))
+    comp = glob.glob(os.path.join(comp_dir, "*.parquet"))
     assert len(frag) == 64
     assert len(comp) == 4
 
@@ -87,3 +91,16 @@ def test_n5_zorder_bounds_both_dimensions(spark):
     # global on each (a single-key sort leaves the other at ~100%).
     assert avg_x < 0.5 * gx
     assert avg_y < 0.5 * gy
+
+
+def test_n6_tables_are_keyed_by_the_exact_sf_path(spark, duck, tmp_path):
+    """Two sf paths that sanitize to one name ('sf-x' and 'sf_x') must
+    not share n6's bucketed tables: after n6 ran on sf-x (a smaller sf),
+    n6 on sf_x must still answer from sf_x's own data."""
+    from ma_anonymization_etl_spark.registry import load_all
+
+    q = load_all()["n6_bucketed_join"]
+    (tmp_path / "sf-x").symlink_to(SF_SMOKE)
+    (tmp_path / "sf_x").symlink_to(SF_ORACLE)
+    q.fn(spark, str(tmp_path / "sf-x")).collect()
+    compare_query(spark, duck, q.fn, q.oracle, sf_dir=str(tmp_path / "sf_x"))

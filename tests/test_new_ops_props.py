@@ -2844,6 +2844,15 @@ def test_j60_fuzzy_dedup_blocking_and_verify(spark):
         "both-block edits are the documented blocking miss"
     )
     assert not any(5 in p for p in got), "length lower bound must exclude 5"
+    # Two sides (k26's batch x store): a_id from the first side, b_id
+    # from ``other``, no id order imposed — the twins carry the higher
+    # ids, so every pair arrives with a_id > b_id.
+    twins, originals = d.filter("doc_id > 1"), d.filter("doc_id = 1")
+    cross = fuzzy_dup_pairs(twins, tau=4, block_len=16, other=originals).collect()
+    assert cross and all(r.a_id > r.b_id for r in cross)
+    assert {(min(r.a_id, r.b_id), max(r.a_id, r.b_id)): r.dist for r in cross} == {
+        p: v for p, v in got.items() if 1 in p
+    }
 
 
 def test_q11_jsd_zero_bound_and_ordering(spark):
@@ -2989,6 +2998,15 @@ def test_j60c_block_df_cap_drops_hot_block_keeps_subcap_pairs(spark):
     assert (200, 201) in uncapped, "hot-prefix-only pair is a true pair uncapped"
     assert (200, 201) not in capped, "hot-prefix-only pair is the cap's trade"
     assert capped <= uncapped, "cap must only remove pairs, never add"
+    # Two sides: a block's df counts both, so the cross pairs are the
+    # one-side capped pairs that span the sides.
+    right = d.filter(F.col("doc_id").isin(101, 201))
+    cross = fuzzy_dup_pairs(
+        d.subtract(right), tau=5, block_len=16, block_df_cap=8, other=right
+    ).collect()
+    assert {(min(r.a_id, r.b_id), max(r.a_id, r.b_id)) for r in cross} == {
+        p for p in capped if len(set(p) & {101, 201}) == 1
+    }
 
 
 def test_j63_mp_prebuilt_index_reuse_and_equality(spark):

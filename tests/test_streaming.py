@@ -11,13 +11,14 @@ import os
 import shutil
 import tempfile
 import time
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.sources.io import load
 from ma_anonymization_etl_spark.streaming.runner import run_to_memory, stream_events
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE, canon_rows
 
 
 @pytest.fixture()
@@ -131,23 +132,42 @@ def test_stream_minhash_dedup_equals_batch(spark):
     assert streamed == batch
 
 
-def test_stream_minhash_dedup_calls_own_their_scratch(spark):
-    """Two k10 calls in one session: the first call's lazily read pair
-    frame must still read, and equal j3 on its own sf, after a second
-    call ran — each call writes under a scratch directory of its own."""
-    from ma_anonymization_etl_spark.operators.llm import j3_dedup_near_minhash
-    from ma_anonymization_etl_spark.operators.streaming_queries import (
-        k10_stream_minhash_dedup,
-    )
+# Every registered query that writes scratch output it then reads lazily.
+_SIDE_EFFECTING = (
+    "k10_stream_minhash_dedup",
+    "a6_stream_sink_parquet",
+    "k9_stream_anonymize",
+    "k14_stream_pii_scrub",
+    "k21_exactly_once_sink",
+    "k22_continuous_aggregate",
+    "k24_stream_upsert_sink",
+    "k25_stream_histogram_maintenance",
+    "k26_stream_fuzzy_dedup",
+    "a2_csv_roundtrip",
+    "a2b_json_roundtrip",
+    "a2c_orc_roundtrip",
+    "a2d_text_roundtrip",
+    "a4_parquet_sink",
+    "n4_compact_small_files",
+    "a9_schema_evolution",
+    "n12_partition_overwrite_backfill",
+)
 
-    first = k10_stream_minhash_dedup(spark, SF_SMOKE)
-    k10_stream_minhash_dedup(spark, SF_ORACLE)
-    streamed = {(r["a_id"], r["b_id"], r["jaccard"]) for r in first.collect()}
-    batch = {
-        (r["a_id"], r["b_id"], r["jaccard"])
-        for r in j3_dedup_near_minhash(spark, SF_SMOKE).collect()
-    }
-    assert streamed == batch and batch
+
+@pytest.mark.parametrize("name", _SIDE_EFFECTING)
+def test_calls_own_their_scratch(spark, name):
+    """Two calls of one query in one session on the same sf: the first
+    call's lazily read frame must still read after the second call ran,
+    to the second's rows — each call writes under a scratch directory
+    of its own."""
+    from ma_anonymization_etl_spark.registry import load_all
+
+    fn = load_all()[name].fn
+    first = fn(spark, SF_SMOKE)
+    second = fn(spark, SF_SMOKE)
+    got = canon_rows(first.columns, first.collect())
+    assert got, f"{name} released no rows"
+    assert got == canon_rows(second.columns, second.collect())
 
 
 def test_stream_tumbling_equals_batch(spark):
@@ -248,10 +268,10 @@ def test_k21_idempotent_sink_absorbs_replay(spark):
     from ma_anonymization_etl_spark.operators.streaming_queries import (
         k21_exactly_once_sink,
     )
-    from ma_anonymization_etl_spark.sources.io import scratch_dir
 
-    k21_exactly_once_sink(spark, SF_ORACLE)  # runs deliver_once() twice
-    out_dir = scratch_dir(spark, "k21_sink")
+    # runs deliver_once() twice; the sink is the batch_id=* dirs' parent
+    final = k21_exactly_once_sink(spark, SF_ORACLE)
+    out_dir = os.path.dirname(os.path.dirname(urlparse(final.inputFiles()[0]).path))
     written = spark.read.parquet(out_dir)
     n_src = load(spark, SF_ORACLE, "events").count()
     assert written.count() == n_src
@@ -266,11 +286,11 @@ def test_k22_rollup_is_genuinely_incremental(spark):
     from ma_anonymization_etl_spark.operators.streaming_queries import (
         k22_continuous_aggregate,
     )
-    from ma_anonymization_etl_spark.sources.io import scratch_dir, stage_key
 
     final = k22_continuous_aggregate(spark, SF_ORACLE)
     n_final = final.count()
-    partials = spark.read.parquet(scratch_dir(spark, "k22_rollup", stage_key(SF_ORACLE)))
+    rollup_dir = os.path.dirname(os.path.dirname(urlparse(final.inputFiles()[0]).path))
+    partials = spark.read.parquet(rollup_dir)
     assert partials.select("batch_id").distinct().count() >= 2
     assert partials.count() >= n_final
 
