@@ -32,18 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ma_anonymization_etl_spark.operators.session_cache import (
-    cache_put,
-    register_cache,
-)
 from ma_anonymization_etl_spark.registry import register
-from ma_anonymization_etl_spark.sources.io import load
-
-# The checkpointed symmetric co-purchase edge list, shared by the whole
-# P family (p1/p1b/p5/p7/p7b/p8) — keyed (applicationId, sf_dir) and
-# bounded like every session cache.  Before round 10 every graph query
-# rebuilt and re-checkpointed the largest object in the family.
-_GRAPH_EDGES_CACHE: dict = register_cache({})
+from ma_anonymization_etl_spark.sources.io import load, session_reuse
 
 _PPB = 1_000_000_000
 _ITER = 5
@@ -99,16 +89,14 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once anyway.  On a real cluster this is `checkpoint()` to
     reliable storage — same shape.
 
-    Session-cached per (applicationId, sf_dir) (round 10): the whole P
-    family shares one edge list, so one checkpoint build serves
-    p1/p1b/p5/p7/p7b/p8 instead of each query rebuilding the family's
-    largest object — the production shape, where the graph is
-    materialized once per snapshot and every algorithm reads it."""
+    Reused per (applicationId, sf_dir) through ``session_reuse`` (round
+    10): the whole P family shares one edge list, so one checkpoint
+    build serves p1/p1b/p5/p7/p7b/p8 instead of each query rebuilding
+    the family's largest object — the production shape, where the graph
+    is materialized once per snapshot and every algorithm reads it."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir, "copurchase_edges")
-    cached = _GRAPH_EDGES_CACHE.get(key)
-    if cached is None:
+    def build():
         pairs = _copurchase_pairs(spark, sf_dir)
         sym = pairs.unionByName(
             pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -124,14 +112,11 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Skew note: a hot node's edges share a partition; this corpus is
         # near-regular (module header), and at 100 TB the salting split
         # in guide §2.5 applies before this checkpoint.
-        cached = cache_put(
-            _GRAPH_EDGES_CACHE,
-            key,
-            sym.repartition("u").localCheckpoint(
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
-            ),
+        return sym.repartition("u").localCheckpoint(
+            eager=True, storageLevel=StorageLevel.DISK_ONLY
         )
-    return cached
+
+    return session_reuse(spark, sf_dir, "copurchase_edges", build)
 
 
 def _copurchase_pairs_sup2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,17 +130,14 @@ def _copurchase_pairs_sup2(spark: SparkSession, sf_dir: str) -> DataFrame:
     member was paying the family's dominant cost again.  Unlike the
     unfiltered list this table is support-filtered and tiny (~3.9k
     rows at sf0.1), so the default deserialized storage is fine."""
-    key = (spark.sparkContext.applicationId, sf_dir, "copurchase_pairs_sup2")
-    cached = _GRAPH_EDGES_CACHE.get(key)
-    if cached is None:
-        cached = cache_put(
-            _GRAPH_EDGES_CACHE,
-            key,
-            _copurchase_pairs(spark, sf_dir, min_support=2).localCheckpoint(
-                eager=True
-            ),
-        )
-    return cached
+    return session_reuse(
+        spark,
+        sf_dir,
+        "copurchase_pairs_sup2",
+        lambda: _copurchase_pairs(spark, sf_dir, min_support=2).localCheckpoint(
+            eager=True
+        ),
+    )
 
 
 def _p1_oracle() -> str:

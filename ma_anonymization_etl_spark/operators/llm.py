@@ -20,9 +20,8 @@ import pandas as pd  # module scope: pandas_udf type hints must resolve here
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ma_anonymization_etl_spark.operators.session_cache import cache_put, register_cache
 from ma_anonymization_etl_spark.registry import register
-from ma_anonymization_etl_spark.sources.io import load, spread_small_scan
+from ma_anonymization_etl_spark.sources.io import load, session_reuse, spread_small_scan
 
 # ---------------------------------------------------------------------------
 # Shared text expressions
@@ -229,12 +228,6 @@ def minhash_lsh_pairs(
     return _verify_jaccard(cand, sh, other, tau)
 
 
-# j3's persisted shingle subtree, keyed by (session id, sf_dir): bench's
-# median-of-3 and interactive reuse hit the warm materialization.
-# Bounded to one (app, sf_dir) generation by cache_put (ADVICE r8).
-_J3_SHINGLE_CACHE: dict = register_cache({})
-
-
 # Shared corpus/shingle CTE prefix for both j3 oracle forms: originals
 # plus the planted perturbed twins, word-3-gram shingle sets.
 _J3_CORPUS_CTES = """
@@ -338,26 +331,21 @@ def j3_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The shingle table feeds three plan branches (band index + both
     # verify lookups); without persist Spark recomputes the shingling
-    # per branch.  Small: (docs × distinct shingles) strings.  Cached per
+    # per branch.  Small: (docs × distinct shingles) strings.  Reused per
     # (session, sf_dir) so repeated invocations in one session measure
     # steady state instead of re-materializing the same subtree.
-    # Keyed on applicationId, not id(spark): CPython can reuse an object
-    # id after a stopped session is garbage-collected, which would hand
-    # back a DataFrame bound to the dead session (ADVICE r3).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _J3_SHINGLE_CACHE.get(key)
-    if cached is None:
+    def build():
         sh = (
             corpus.withColumn("shingles", word_shingles("text", 3))
             .select("doc_id", "shingles")
             .persist()
         )
         # The banded table (docs × bands id rows) is tiny but costs a
-        # full explode/groupBy pass to derive, so it is cached alongside
+        # full explode/groupBy pass to derive, so it is kept alongside
         # the shingles.
-        banded = banded_signatures(sh).persist()
-        cached = cache_put(_J3_SHINGLE_CACHE, key, (sh, banded))
-    sh, banded = cached
+        return sh, banded_signatures(sh).persist()
+
+    sh, banded = session_reuse(spark, sf_dir, "j3_shingles", build)
     return minhash_lsh_pairs(sh, _MINHASH_TAU, banded=banded)
 
 
@@ -1512,9 +1500,7 @@ def _j24_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     and j24b so the driver pays the scan once."""
     from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir, "j24_flags")
-    flags = _J3_SHINGLE_CACHE.get(key)
-    if flags is None:
+    def build():
         d = load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
         exact_copy = d.select((F.col("doc_id") + 200000).alias("doc_id"), "text", "lang")
         pert_copy = d.select(
@@ -1526,7 +1512,7 @@ def _j24_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         n_words = F.size(F.split(F.lower(F.col("text")), " "))
         w_hash = Window.partitionBy(F.md5("text"))
-        flags = (
+        return (
             raw.withColumn("q", n_words >= 30)
             .withColumn("l", F.col("q") & (F.col("lang") == "en"))
             # min doc_id among lang-surviving copies of this content; a
@@ -1541,35 +1527,33 @@ def _j24_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .persist()
         )
-        cache_put(_J3_SHINGLE_CACHE, key, flags)
-    return flags
+
+    return session_reuse(spark, sf_dir, "j24_flags", build)
 
 
-def _j24_non_survivors(spark: SparkSession, sf_dir: str, flags: DataFrame) -> DataFrame:
+def _j24_non_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup non-survivors among exact-dedup survivors: 3-gram
     Jaccard ≥ 0.5 pairs from ``set_similarity_join`` (j50's engine,
     exact up to its written xxhash64 verify bound) → connected
     components → everything but each component's min-id.  Cached per
     (session, sf_dir) like the flags — j24 and j24b both consume it,
     and the pair join is the funnel's most expensive stage."""
-    key = (spark.sparkContext.applicationId, sf_dir, "j24_nondup")
-    cached = _J3_SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    toks = flags.filter(F.col("e")).select(
-        "doc_id", F.explode(word_shingles("text", 3)).alias("tok")
-    )
-    pairs = set_similarity_join(toks, 0.5, assume_distinct=True).select(
-        F.col("a_id").alias("a"), F.col("b_id").alias("b")
-    )
-    out = (
-        connected_components(pairs)
-        .filter(F.col("node") != F.col("component"))
-        .select(F.col("node").alias("doc_id"), F.lit(True).alias("__dup"))
-        .persist()
-    )
-    cache_put(_J3_SHINGLE_CACHE, key, out)
-    return out
+
+    def build():
+        toks = _j24_flags(spark, sf_dir).filter(F.col("e")).select(
+            "doc_id", F.explode(word_shingles("text", 3)).alias("tok")
+        )
+        pairs = set_similarity_join(toks, 0.5, assume_distinct=True).select(
+            F.col("a_id").alias("a"), F.col("b_id").alias("b")
+        )
+        return (
+            connected_components(pairs)
+            .filter(F.col("node") != F.col("component"))
+            .select(F.col("node").alias("doc_id"), F.lit(True).alias("__dup"))
+            .persist()
+        )
+
+    return session_reuse(spark, sf_dir, "j24_nondup", build)
 
 
 @register("j24_training_funnel", oracle=_J24_ORACLE)
@@ -1596,7 +1580,7 @@ def j24_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     only, and the final report is a single conditional aggregation
     unpivoted to funnel rows."""
     flags = _j24_flags(spark, sf_dir)
-    non_survivors = _j24_non_survivors(spark, sf_dir, flags)
+    non_survivors = _j24_non_survivors(spark, sf_dir)
 
     ws_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     doc = (
@@ -3585,11 +3569,9 @@ def j24b_curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Flags + repetition gate, persisted ONCE per (session, sf_dir) —
     # an unkeyed per-invocation persist leaked a cached copy per run
     # (round-4 review finding).
-    doc_key = (spark.sparkContext.applicationId, sf_dir, "j24b_doc")
-    doc = _J3_SHINGLE_CACHE.get(doc_key)
-    if doc is None:
+    def build():
         flags = _j24_flags(spark, sf_dir)
-        non_survivors = _j24_non_survivors(spark, sf_dir, flags)
+        non_survivors = _j24_non_survivors(spark, sf_dir)
         ws_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
         doc = (
             flags.join(non_survivors, "doc_id", "left")
@@ -3610,10 +3592,11 @@ def j24b_curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda d_: F.size(F.filter(words, lambda w: w == d_)),
             )
         ).cast("double") / F.size(words)
-        doc = doc.withColumn(
+        return doc.withColumn(
             "r", F.col("n") & (dup2 <= 0.051) & (topw <= 0.11)
         ).persist()
-        _J3_SHINGLE_CACHE[doc_key] = doc
+
+    doc = session_reuse(spark, sf_dir, "j24b_doc", build)
 
     # Unigram LM fit on the stage-6 survivors, broadcast back to score
     # the same docs (rounded per-token log-probs -> exact int64 sums).
@@ -3788,7 +3771,6 @@ def heavy_hitters_routed(
     spark: SparkSession,
     sf_dir: str,
     dict_threshold: int = 200_000,
-    force_route: str | None = None,
 ) -> DataFrame:
     """Routed heavy hitters (judge r4 item 6 / NEXT.md item f): ONE
     entry point that picks the exact path (j22 — full term groupBy,
@@ -3816,11 +3798,8 @@ def heavy_hitters_routed(
     sample = d.filter(F.col("doc_id") % 20 == 0).select(
         F.explode(words_of()).alias("word")
     )
-    route = force_route
-    if route is None:
-        est_dict = 20 * sample.distinct().count()  # bounded driver scalar
-        route = "exact" if est_dict <= dict_threshold else "sketch"
-    if route == "exact":
+    est_dict = 20 * sample.distinct().count()  # bounded driver scalar
+    if est_dict <= dict_threshold:
         counts = toks.groupBy("word").agg(F.count("*").alias("cnt"))
         total = counts.agg(F.sum("cnt").alias("__n"))
         return (
@@ -5020,27 +4999,16 @@ def set_similarity_join(
     )
 
 
-# j50/j52 share one derived corpus (docs + dropped-first-word twins)
-# and therefore one distinct (doc_id, tok) shingle table, which feeds
-# FOUR plan branches per query (df count, per-doc sort, and both verify
-# lookups).  Cached per (applicationId, sf_dir) like j3's shingles and
-# j9b's signatures: whether Catalyst reuses the distinct's Exchange
-# across branches is AQE-timing-dependent, which the round-7 bench saw
-# as a 9.6-15.5 s j50 spread; persisting the distinct pins it to one
-# materialization and repeat invocations measure steady state.
-_J50_TOKS_CACHE: dict = register_cache({})
-
-# j53's persisted corpus dedup index (shingles + band signatures),
-# keyed (applicationId, sf_dir, "j53corpus") — the across-ingest reuse
-# incremental_dedup's contract promises; bounded like every session
-# cache (one (app, sf_dir) generation).
-_J53_CORPUS_CACHE: dict = register_cache({})
-
-
 def _j50_corpus_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    t = _J50_TOKS_CACHE.get(key)
-    if t is None:
+    """j50/j52's distinct (doc_id, tok) shingle table over the docs plus
+    their dropped-first-word twins.  It feeds FOUR plan branches per
+    query (df count, per-doc sort, and both verify lookups); whether
+    Catalyst reuses the distinct's Exchange across branches is
+    AQE-timing-dependent, which the round-7 bench saw as a 9.6-15.5 s
+    j50 spread, so the distinct is persisted once per (session,
+    sf_dir) and repeat invocations measure steady state."""
+
+    def build():
         d = load(spark, sf_dir, "documents").select("doc_id", "text")
         perturbed = d.select(
             (F.col("doc_id") + 100000).alias("doc_id"),
@@ -5049,13 +5017,13 @@ def _j50_corpus_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus = d.unionByName(perturbed).repartition(
             spark.sparkContext.defaultParallelism, "doc_id"
         )
-        t = (
+        return (
             corpus.select("doc_id", F.explode(word_shingles("text", 3)).alias("tok"))
             .distinct()
             .persist()
         )
-        cache_put(_J50_TOKS_CACHE, key, t)
-    return t
+
+    return session_reuse(spark, sf_dir, "j50_toks", build)
 
 
 # j50's oracle is the exhaustive inverted-index pair join (every pair
@@ -5088,8 +5056,8 @@ def j50_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     every shared token (Θ(Σ df²) — the j3c trap).  The oracle IS the
     exhaustive definition, so every gate run re-attests exactness.
 
-    Delegates to ``set_similarity_join`` over the session-cached
-    distinct shingle table (``_J50_TOKS_CACHE`` — the round-8
+    Delegates to ``set_similarity_join`` over the session-reused
+    distinct shingle table (``_j50_corpus_toks`` — the round-8
     variance pin)."""
     toks = _j50_corpus_toks(spark, sf_dir)
     return set_similarity_join(toks, _J50_TAU, assume_distinct=True)
@@ -6170,7 +6138,7 @@ def incremental_dedup(
     across sides.  ``corpus_banded`` accepts the corpus's already-built
     (and typically persisted) band index so repeat ingests really do
     reuse it — the reuse the docstring promises is CODE at the call
-    site (j53 session-caches it per (applicationId, sf_dir), the
+    site (j53 reuses it per (applicationId, sf_dir), the
     round-10 docstring-vs-code audit)."""
     from pyspark.sql import Window
 
@@ -6279,20 +6247,19 @@ def j53_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Delegates to ``incremental_dedup``; see its docstring for why
     per-ingest cost scales with the batch, not the corpus.  The
-    corpus's shingles + band index are session-cached per
-    (applicationId, sf_dir) — the across-ingest reuse the engine
+    corpus's shingles + band index are reused per (applicationId,
+    sf_dir) through ``session_reuse`` — the across-ingest reuse the engine
     docstring promises, as code (round-10 docstring-vs-code audit):
     repeat invocations pay batch-side cost only."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    key = (spark.sparkContext.applicationId, sf_dir, "j53corpus")
-    cached = _J53_CORPUS_CACHE.get(key)
-    if cached is None:
+
+    def build():
         corpus_sh = d.select(
             "doc_id", word_shingles("text", 3).alias("shingles")
         ).persist()
-        cb = banded_signatures(corpus_sh).persist()
-        cached = cache_put(_J53_CORPUS_CACHE, key, (corpus_sh, cb))
-    corpus_sh, corpus_banded = cached
+        return corpus_sh, banded_signatures(corpus_sh).persist()
+
+    corpus_sh, corpus_banded = session_reuse(spark, sf_dir, "j53corpus", build)
     wsplit = F.split(F.lower(F.col("text")), " ")
     batch = d.select(
         (F.col("doc_id") + 100000).alias("doc_id"),

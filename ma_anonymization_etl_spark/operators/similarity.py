@@ -16,9 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.functions.vectors import as_double, cosine, dot, norm
-from ma_anonymization_etl_spark.operators.session_cache import cache_put, register_cache
 from ma_anonymization_etl_spark.registry import register
-from ma_anonymization_etl_spark.sources.io import load
+from ma_anonymization_etl_spark.sources.io import load, session_reuse
 
 # DuckDB-side cosine with identical double accumulation order.
 _SQL_E = "embedding::DOUBLE[]"
@@ -200,17 +199,6 @@ def _j9b_planes(bands: int, bits: int) -> list[list[float]]:
     ]
 
 
-# j9b's persisted (corpus, signature) subtree, keyed by
-# (applicationId, sf_dir) like _J3_SHINGLE_CACHE: the signature table
-# feeds BOTH sides of the band self-join plus two verify lookups, and
-# whether Spark reuses the exchange across those branches is
-# AQE-timing-dependent — the round-3 bench measured a 1.6-3.2 s spread
-# for one plan.  Persisting the 2-column signature table pins the
-# matmul to one execution and makes repeat invocations measure steady
-# state.
-_J9B_SIG_CACHE: dict = register_cache({})
-
-
 @register(
     "j9b_sim_pair_lsh",
     oracle=f"""
@@ -315,12 +303,14 @@ def _j9b_corpus_cand(
     )
     corpus = e.select(F.col("orig_id").alias("vec_id"), "v").unionByName(pert)
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _J9B_SIG_CACHE.get(cache_key)
-    if cached is None:
-        # One cheap metadata-count job sizes the banding plan; the plan
-        # (and the signature table it shapes) is cached per session so
-        # repeat invocations pay neither the count nor the matmul again.
+    # The signature table feeds BOTH sides of the band self-join plus two
+    # verify lookups, and whether Spark reuses the exchange across those
+    # branches is AQE-timing-dependent — the round-3 bench measured a
+    # 1.6-3.2 s spread for one plan.  Persisting the 2-column signature
+    # table pins the matmul to one execution; one cheap metadata-count
+    # job sizes the banding plan, and both are reused per session so
+    # repeat invocations pay neither the count nor the matmul again.
+    def build():
         n_corpus = 2 * e.count()
         n_bands, n_bits = lsh_band_plan(n_corpus)
         bplanes = spark.sparkContext.broadcast(
@@ -348,8 +338,9 @@ def _j9b_corpus_cand(
         sig = corpus.mapInPandas(
             signatures, "vec_id BIGINT, band BIGINT"
         ).persist()
-        cached = cache_put(_J9B_SIG_CACHE, cache_key, (sig, n_corpus))
-    sig, n_corpus = cached
+        return sig, n_corpus
+
+    sig, n_corpus = session_reuse(spark, sf_dir, "j9b_sig", build)
     # One row per candidate pair straight out of the band join (groupBy
     # == distinct's partial-agg plan, written explicitly); the pair list
     # is ids only, so the dedup shuffle carries two longs per row.
@@ -1118,7 +1109,6 @@ def ann_topk_routed(
     k: int = 3,
     scan_budget: int = 1_000_000,
     n_queries: int = 10,
-    force_route: str | None = None,
 ) -> DataFrame:
     """ONE entry point for vector top-k that picks the EXACT brute-force
     scan (j8/j21's contract) or the IVF cell-probed search (j20's) by
@@ -1146,11 +1136,8 @@ def ann_topk_routed(
     oracle-replayable).  The budget is a CONTRACT dial, like j50b's:
     pay for exactness while affordable, fall back to cell-probed recall
     when not."""
-    route = force_route
-    est = None
-    if route is None:
-        est = ann_scan_estimate(e, n_queries)
-        route = "exact" if est <= scan_budget else "ivf"
+    est = ann_scan_estimate(e, n_queries)
+    route = "exact" if est <= scan_budget else "ivf"
     if route == "exact":
         out = exact_topk(e, k, n_queries)
     else:
@@ -1380,33 +1367,27 @@ def _mp_probe(
 # j59 registered the amortized account for the LABEL-codebook IVF
 # (C = 10 cells at every scale); j63 does the same for the codebook
 # that actually scales — j57's 2^bits ≈ √N hyperplane cells.  The
-# signed corpus persists behind the bounded session cache; disjoint
+# signed corpus persists behind ``session_reuse``; disjoint
 # panels probe it (own cell + Hamming-1 ring).  Build cost is one
 # bits-plane sign pass (N·bits dot products), probe cost
 # (bits+1)·N/2^bits cosines per query — at 100 TB the build amortizes
 # over every batch exactly as a production vector store's index does.
-_J63_SIG_CACHE: dict = register_cache({})
 
 
-def multiprobe_index_build(e: DataFrame, spark: SparkSession, sf_dir: str):
-    """Build — or fetch the session-cached — persisted multiprobe index
-    over ``e`` (vec_id, v): the signed corpus plus its derived bit
-    count, keyed (applicationId, sf_dir).  Returns (sig, bits).
+def multiprobe_index_build(spark: SparkSession, sf_dir: str):
+    """Build — or fetch the session-reused — persisted multiprobe index
+    over ``sf_dir``'s embeddings (vec_id, v): the signed corpus plus its
+    derived bit count, reused per (applicationId, sf_dir).  Returns
+    (sig, bits)."""
 
-    CACHE INVARIANT (ADVICE r10): the key is (applicationId, sf_dir,
-    tag) — NOT a fingerprint of ``e``'s plan — so every caller for a
-    given sf_dir MUST pass the same canonical corpus derivation
-    (``load(..., "embeddings")`` normalized as j63 does).  A caller
-    with a differently-derived ``e`` would silently receive the
-    previously built index; add a distinct tag for a distinct corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir, "mp_index")
-    cached = _J63_SIG_CACHE.get(key)
-    if cached is None:
-        bits = multiprobe_cell_bits(e.count())
-        cached = cache_put(
-            _J63_SIG_CACHE, key, (_mp_sign(e, bits).persist(), bits)
+    def build():
+        e = load(spark, sf_dir, "embeddings").select(
+            "vec_id", as_double(F.col("embedding")).alias("v")
         )
-    return cached
+        bits = multiprobe_cell_bits(e.count())
+        return _mp_sign(e, bits).persist(), bits
+
+    return session_reuse(spark, sf_dir, "mp_index", build)
 
 
 def multiprobe_probe(
@@ -1475,10 +1456,7 @@ def j63_mp_prebuilt_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplane cells, j57's derivation).  Release contract identical
     to j57; the cost shape is build-once-probe-forever.  Delegates to
     ``multiprobe_index_build`` + ``multiprobe_probe``."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    sig, bits = multiprobe_index_build(e, spark, sf_dir)
+    sig, bits = multiprobe_index_build(spark, sf_dir)
     return multiprobe_probe(sig, bits, k=3, lo=0, hi=10)
 
 
@@ -1489,10 +1467,7 @@ def j63b_mp_prebuilt_reprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential gate/bench session is the probe-only amortized cost.
     Cold sessions rebuild and release identically (the oracle replays
     signatures + derivation from first principles either way)."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    sig, bits = multiprobe_index_build(e, spark, sf_dir)
+    sig, bits = multiprobe_index_build(spark, sf_dir)
     return multiprobe_probe(sig, bits, k=3, lo=10, hi=20)
 
 
@@ -1641,25 +1616,22 @@ def j58b_ann_cost_routed_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # definition never depends on the cache (a cold j59b rebuilds and
 # releases identically); only the TIMING account does — exactly how a
 # production vector store behaves (build once, probe forever).
-_J59_INDEX_CACHE: dict = register_cache({})
 
 
-def ivf_index_build(e: DataFrame, spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build — or fetch the session-cached — persisted IVF index over
-    ``e`` (vec_id, label, v): the ``_ivf_assign`` table (vec_id, cell,
-    v), persisted so every subsequent probe batch scans memory instead
-    of re-quantizing the corpus.  Keyed (applicationId, sf_dir) via the
-    bounded session-cache discipline (ADVICE r8).
+def ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Build — or fetch the session-reused — persisted IVF index over
+    ``sf_dir``'s embeddings (vec_id, label, v): the ``_ivf_assign``
+    table (vec_id, cell, v), persisted so every subsequent probe batch
+    scans memory instead of re-quantizing the corpus.  Reused per
+    (applicationId, sf_dir) through ``session_reuse``."""
 
-    CACHE INVARIANT (ADVICE r10): the key ignores ``e``'s plan — all
-    callers for a given sf_dir must pass the same canonical corpus
-    derivation, or register a distinct tag (see
-    ``multiprobe_index_build``)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "ivf_index")
-    cached = _J59_INDEX_CACHE.get(key)
-    if cached is None:
-        cached = cache_put(_J59_INDEX_CACHE, key, _ivf_assign(e).persist())
-    return cached
+    def build():
+        e = load(spark, sf_dir, "embeddings").select(
+            "vec_id", "label", as_double(F.col("embedding")).alias("v")
+        )
+        return _ivf_assign(e).persist()
+
+    return session_reuse(spark, sf_dir, "ivf_index", build)
 
 
 def ivf_probe(index: DataFrame, k: int = 3, lo: int = 0, hi: int = 10) -> DataFrame:
@@ -1728,10 +1700,7 @@ def j59_ann_prebuilt_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-probed top-3, identical semantics to j20; what's new is the
     COST SHAPE: the index outlives the query.  Delegates to
     ``ivf_index_build`` + ``ivf_probe``."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
-    return ivf_probe(ivf_index_build(e, spark, sf_dir), k=3, lo=0, hi=10)
+    return ivf_probe(ivf_index_build(spark, sf_dir), k=3, lo=0, hi=10)
 
 
 @register("j59b_ann_prebuilt_reprobe", oracle=_j59_oracle(10, 20))
@@ -1743,10 +1712,7 @@ def j59b_ann_prebuilt_reprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     now a registered contract instead of a scratch note).  Cold
     sessions rebuild and release identically; the oracle replays the
     index content from first principles either way."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
-    return ivf_probe(ivf_index_build(e, spark, sf_dir), k=3, lo=10, hi=20)
+    return ivf_probe(ivf_index_build(spark, sf_dir), k=3, lo=10, hi=20)
 
 
 @register(

@@ -350,3 +350,40 @@ def test_df_first_functions_work_without_corpus_columns(spark):
     )
     audit = split_audit(assigned, "grp").collect()
     assert sum(r.n_docs for r in audit) == 2
+
+
+def test_session_reuse_is_the_only_session_store():
+    """One session store: only ``sources/io.py`` reads the application
+    id (the key of ``session_reuse`` and of the scratch paths), so no
+    module keeps a per-module cache keyed by hand; and every
+    ``session_reuse`` tag is a string literal at exactly one call site,
+    because the key ignores how a frame was derived — a second builder
+    under one tag would silently receive the first builder's frame."""
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    root = Path(registry.__file__).parent
+    readers, tags = [], Counter()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        if "sparkContext.applicationId" in src:
+            readers.append(rel)
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+            if name != "session_reuse":
+                continue
+            tag = node.args[2] if len(node.args) > 2 else next(
+                (kw.value for kw in node.keywords if kw.arg == "tag"), None
+            )
+            assert isinstance(tag, ast.Constant) and isinstance(tag.value, str), (
+                f"{rel}:{node.lineno}: session_reuse tag must be a string literal"
+            )
+            tags[tag.value] += 1
+    assert readers == ["sources/io.py"], f"applicationId read outside sources/io.py: {readers}"
+    assert tags, "no session_reuse call sites found"
+    shared = {t: n for t, n in tags.items() if n != 1}
+    assert not shared, f"session_reuse tags with more than one call site: {shared}"

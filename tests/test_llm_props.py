@@ -657,9 +657,10 @@ def test_j3c_not_registered():
 
 
 def test_j38_sketch_route_matches_oracle_replay(spark, duck):
-    """Force the CMS route (as a huge dictionary would) and check the
-    release against the oracle's sketch branch — both branches of the
-    router are value-verified, not just the one the corpus selects."""
+    """Take the CMS route through a zero dictionary threshold (as a huge
+    dictionary would) and check the release against the oracle's sketch
+    branch — both branches of the router are value-verified, not just
+    the one the corpus selects."""
     from ma_anonymization_etl_spark.operators.llm import (
         _J38_SKETCH_REL,
         heavy_hitters_routed,
@@ -669,7 +670,7 @@ def test_j38_sketch_route_matches_oracle_replay(spark, duck):
     compare_query(
         spark,
         duck,
-        lambda s, d: heavy_hitters_routed(s, d, force_route="sketch"),
+        lambda s, d: heavy_hitters_routed(s, d, dict_threshold=0),
         f"WITH {_J38_SKETCH_REL} SELECT * FROM sketch_rel",
     )
 
@@ -682,11 +683,11 @@ def test_j38_sketch_estimates_cover_exact_heavies(spark):
 
     exact = {
         r["word"]: r["cnt"]
-        for r in heavy_hitters_routed(spark, SF_ORACLE, force_route="exact").collect()
+        for r in heavy_hitters_routed(spark, SF_ORACLE, dict_threshold=10**18).collect()
     }
     sketch = {
         r["word"]: r["cnt"]
-        for r in heavy_hitters_routed(spark, SF_ORACLE, force_route="sketch").collect()
+        for r in heavy_hitters_routed(spark, SF_ORACLE, dict_threshold=0).collect()
     }
     missed = set(exact) - set(sketch)
     assert not missed, f"sketch route missed exact heavy hitters: {missed}"

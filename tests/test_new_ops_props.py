@@ -1621,20 +1621,34 @@ def test_j9d_candidate_cosines_clear_tau_boundary(spark):
 
 
 def test_session_caches_bounded_per_sf_dir(spark):
-    """ADVICE r8: the persist caches must hold ONE (app, sf_dir)
+    """ADVICE r8: the session store must hold ONE (app, sf_dir)
     generation — switching corpora evicts and unpersists the old
-    entries instead of growing executor storage without bound."""
+    entries instead of growing executor storage without bound.  The
+    generation is store-wide: a graph build on one corpus evicts j3's
+    shingles of another, not only entries under its own tag."""
+    from ma_anonymization_etl_spark.operators.graph import _copurchase_pairs_sup2
     from ma_anonymization_etl_spark.operators.llm import (
-        _J50_TOKS_CACHE,
         _j50_corpus_toks,
+        j3_dedup_near_minhash,
     )
+    from ma_anonymization_etl_spark.sources.io import _SESSION_STORE
 
     t_small = _j50_corpus_toks(spark, SF_SMOKE)
     assert t_small.storageLevel.useMemory
     _j50_corpus_toks(spark, SF_ORACLE)
-    dirs = {k[1] for k in _J50_TOKS_CACHE}
+    dirs = {k[1] for k in _SESSION_STORE}
     assert dirs == {SF_ORACLE}, f"stale generations survived: {dirs}"
     assert not t_small.storageLevel.useMemory, "evicted entry stayed persisted"
+
+    j3_dedup_near_minhash(spark, SF_SMOKE)
+    [(sh_small, _)] = [
+        v for k, v in _SESSION_STORE.items() if k[1:] == (SF_SMOKE, "j3_shingles")
+    ]
+    assert sh_small.storageLevel.useMemory
+    _copurchase_pairs_sup2(spark, SF_ORACLE)
+    dirs = {k[1] for k in _SESSION_STORE}
+    assert dirs == {SF_ORACLE}, f"stale generations survived: {dirs}"
+    assert not sh_small.storageLevel.useMemory, "evicted j3 shingles stayed persisted"
     # and back, so later tests in the session reuse the smoke corpus
     _j50_corpus_toks(spark, SF_SMOKE)
 
@@ -2015,9 +2029,9 @@ def test_j54b_multi_query_consistency(spark):
 
 def test_j55_ann_router_branches_and_decision(spark):
     """The j50b routing pattern on the vector side (VERDICT r9 item 2):
-    forced branches must equal their reference engines exactly, and the
-    free decision must follow the replayable estimate-vs-budget
-    comparison on the gated corpus."""
+    branches picked through the budget (0 / 10**18) must equal their
+    reference engines exactly, and the free decision must follow the
+    replayable estimate-vs-budget comparison on the gated corpus."""
     from pyspark.sql import functions as F
 
     from ma_anonymization_etl_spark.operators.similarity import (
@@ -2038,10 +2052,10 @@ def test_j55_ann_router_branches_and_decision(spark):
     exact_ref = {key(r) for r in exact_topk(e, 3, 10).collect()}
     ivf_ref = {key(r) for r in ivf_topk(e, 3, 10).collect()}
     forced_exact = {
-        key(r) for r in ann_topk_routed(e, 3, 0, force_route="exact").collect()
+        key(r) for r in ann_topk_routed(e, 3, 10**18).collect()
     }
     forced_ivf = {
-        key(r) for r in ann_topk_routed(e, 3, 10**18, force_route="ivf").collect()
+        key(r) for r in ann_topk_routed(e, 3, 0).collect()
     }
     assert forced_exact == exact_ref and exact_ref
     assert forced_ivf == ivf_ref and ivf_ref
@@ -2084,10 +2098,10 @@ def test_j55_ivf_recall_trade_planted(spark):
     ]
     e = spark.createDataFrame(rows, "vec_id long, label long, v array<double>")
 
-    ex = ann_topk_routed(e, 1, 0, n_queries=1, force_route="exact").collect()
+    ex = ann_topk_routed(e, 1, 10**18, n_queries=1).collect()
     assert [(r.query_id, r.neighbor_id) for r in ex] == [(0, 7)]
 
-    iv = ann_topk_routed(e, 3, 0, n_queries=1, force_route="ivf").collect()
+    iv = ann_topk_routed(e, 3, 0, n_queries=1).collect()
     got = {r.neighbor_id for r in iv}
     assert 7 not in got, "IVF must miss the cross-cell true NN"
     assert got == {1, 2, 3}, "IVF releases the query's cell only"
@@ -2095,7 +2109,7 @@ def test_j55_ivf_recall_trade_planted(spark):
     # and the router's budget is the dial that buys it back.
     exact3 = {
         r.neighbor_id
-        for r in ann_topk_routed(e, 3, 0, n_queries=1, force_route="exact").collect()
+        for r in ann_topk_routed(e, 3, 10**18, n_queries=1).collect()
     }
     recall = len(exact3 & got) / 3
     assert 0 < recall < 1
@@ -2271,13 +2285,13 @@ def test_j59_prebuilt_index_probe_and_cache_reuse(spark):
     index is built ONCE per (applicationId, sf_dir) — the second build
     call returns the same persisted DataFrame — and probing it releases
     exactly ``ivf_topk``'s cell-probed contract for the same panel.
-    The release must never depend on cache state: a cold rebuild after
-    clear_caches releases identically."""
+    The release must never depend on reuse state: a probe of the
+    direct, unreused build releases identically."""
     from pyspark.sql import functions as F
 
     from ma_anonymization_etl_spark.functions.vectors import as_double
-    from ma_anonymization_etl_spark.operators.session_cache import clear_caches
     from ma_anonymization_etl_spark.operators.similarity import (
+        _ivf_assign,
         ivf_index_build,
         ivf_probe,
         ivf_topk,
@@ -2287,8 +2301,8 @@ def test_j59_prebuilt_index_probe_and_cache_reuse(spark):
     e = load(spark, SF_ORACLE, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     )
-    idx1 = ivf_index_build(e, spark, SF_ORACLE)
-    idx2 = ivf_index_build(e, spark, SF_ORACLE)
+    idx1 = ivf_index_build(spark, SF_ORACLE)
+    idx2 = ivf_index_build(spark, SF_ORACLE)
     assert idx1 is idx2, "second build must be the cached index"
 
     key = lambda r: (r.query_id, r.neighbor_id, r.cos_sim)  # noqa: E731
@@ -2301,9 +2315,8 @@ def test_j59_prebuilt_index_probe_and_cache_reuse(spark):
     assert batch2 and all(10 <= r.query_id < 20 for r in batch2)
     assert {r.query_id for r in batch2}.isdisjoint({q for q, _, _ in ref})
 
-    # Cold rebuild (cache cleared) releases identically.
-    clear_caches()
-    cold = {key(r) for r in ivf_probe(ivf_index_build(e, spark, SF_ORACLE), 3, 0, 10).collect()}
+    # Cold rebuild (the direct build, no reuse) releases identically.
+    cold = {key(r) for r in ivf_probe(_ivf_assign(e), 3, 0, 10).collect()}
     assert cold == warm
 
 
@@ -3013,14 +3026,15 @@ def test_j63_mp_prebuilt_index_reuse_and_equality(spark):
     """The multiprobe amortized contract (j59's discipline on the
     scaling codebook): second build is the cached index; probing it
     equals the inline j57 release for the same panel; disjoint panels
-    stay disjoint; cold rebuild after clear_caches releases
+    stay disjoint; a cold rebuild (the direct, unreused build) releases
     identically."""
     from pyspark.sql import functions as F
 
     from ma_anonymization_etl_spark.functions.vectors import as_double
-    from ma_anonymization_etl_spark.operators.session_cache import clear_caches
     from ma_anonymization_etl_spark.operators.similarity import (
+        _mp_sign,
         multiprobe_ann_topk,
+        multiprobe_cell_bits,
         multiprobe_index_build,
         multiprobe_probe,
     )
@@ -3029,8 +3043,8 @@ def test_j63_mp_prebuilt_index_reuse_and_equality(spark):
     e = load(spark, SF_ORACLE, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    sig1, bits1 = multiprobe_index_build(e, spark, SF_ORACLE)
-    sig2, bits2 = multiprobe_index_build(e, spark, SF_ORACLE)
+    sig1, bits1 = multiprobe_index_build(spark, SF_ORACLE)
+    sig2, bits2 = multiprobe_index_build(spark, SF_ORACLE)
     assert sig1 is sig2 and bits1 == bits2
 
     key = lambda r: (r.query_id, r.neighbor_id, r.cos_sim, r.n_bits)  # noqa: E731
@@ -3041,9 +3055,9 @@ def test_j63_mp_prebuilt_index_reuse_and_equality(spark):
     batch2 = multiprobe_probe(sig1, bits1, 3, 10, 20).collect()
     assert batch2 and all(10 <= r.query_id < 20 for r in batch2)
 
-    clear_caches()
-    sig3, bits3 = multiprobe_index_build(e, spark, SF_ORACLE)
-    cold = {key(r) for r in multiprobe_probe(sig3, bits3, 3, 0, 10).collect()}
+    bits3 = multiprobe_cell_bits(e.count())
+    assert bits3 == bits1
+    cold = {key(r) for r in multiprobe_probe(_mp_sign(e, bits3), bits3, 3, 0, 10).collect()}
     assert cold == warm
 
 

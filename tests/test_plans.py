@@ -214,7 +214,7 @@ def test_j38_sketch_route_avoids_term_shuffle(spark):
             df.explain("formatted")
         return buf.getvalue()
 
-    sketch_plan = fmt(heavy_hitters_routed(spark, SF_ORACLE, force_route="sketch"))
+    sketch_plan = fmt(heavy_hitters_routed(spark, SF_ORACLE, dict_threshold=0))
     tree = sketch_plan.split("\n\n")[0]
     # One full-corpus scan only (the CMS cells aggregate, materialized as a
     # <=1024-row checkpoint before fan-out); the sampled candidate scan is
@@ -223,7 +223,7 @@ def test_j38_sketch_route_avoids_term_shuffle(spark):
         f"sketch route re-scans the corpus:\n{tree}"
     )
     assert "% 20" in sketch_plan, "sample filter missing from sketch plan"
-    exact_plan = fmt(heavy_hitters_routed(spark, SF_ORACLE, force_route="exact"))
+    exact_plan = fmt(heavy_hitters_routed(spark, SF_ORACLE, dict_threshold=10**18))
     n_word_ex_sketch = sketch_plan.count("hashpartitioning(word")
     n_word_ex_exact = exact_plan.count("hashpartitioning(word")
     assert n_word_ex_exact >= 1, "exact route must shuffle by term"
@@ -378,7 +378,7 @@ def test_j55_exact_branch_broadcasts_query_panel(spark):
     e = load(spark, SF_ORACLE, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     )
-    out = ann_topk_routed(e, 3, 0, force_route="exact")
+    out = ann_topk_routed(e, 3, 10**18)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain("formatted")
