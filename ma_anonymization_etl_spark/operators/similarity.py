@@ -6,13 +6,21 @@ test SFs); the random-hyperplane LSH signature is the 100 TB path:
 bucket vectors by signature, search within buckets (candidates per
 query drop from N to N/2^bits on average).  Embedding-cosine near-dup
 detection (north star) = j9 with a high threshold.
+
+The ANN top-k family (j10, j20, j28, j55, j57-j59, j63, j64 and the
+``knn_label`` route step) is three candidate generators —
+``scan_candidates`` (all pairs against a panel), ``cell_candidates``
+(IVF cell equality) and ``ring_candidates`` (own cell + Hamming-1
+ring) — feeding one exact re-rank, ``rerank_topk``, and for the label
+queries one ``majority_vote``.  Cells are signed by one
+``hyperplane_cells``.
 """
 
 from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.functions.vectors import as_double, cosine, dot, norm
@@ -21,6 +29,13 @@ from ma_anonymization_etl_spark.sources.io import load, session_reuse
 
 # DuckDB-side cosine with identical double accumulation order.
 _SQL_E = "embedding::DOUBLE[]"
+
+
+def _vectors(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The embeddings table as (vec_id, *cols, v ARRAY<DOUBLE>)."""
+    return load(spark, sf_dir, "embeddings").select(
+        "vec_id", *cols, as_double(F.col("embedding")).alias("v")
+    )
 
 
 def _sql_cos(a: str, b: str) -> str:
@@ -78,9 +93,7 @@ def j9_sim_pair_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     search needs a high threshold; that composition (LSH candidates →
     exact verify, equality-checked against the exhaustive join) is
     ``j9b_sim_pair_lsh`` below — route near-dup workloads there."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir)
     a, b = e.alias("a"), e.alias("b")
     cos = cosine(F.col("a.v"), F.col("b.v"))
     return (
@@ -191,12 +204,20 @@ def lsh_band_plan(
     return bands, bits
 
 
+_LSH_DIM = 64  # embedding dimension
+
+
+def _seeded_planes(seed: int, n: int) -> list[list[float]]:
+    """``n`` 64-dim Gaussian hyperplanes from a fixed seed, rounded to 6
+    places, so Spark and the SQL oracle carry identical constants.  Each
+    contract keeps its own seed because each oracle replays its own
+    planes."""
+    rng = random.Random(seed)
+    return [[round(rng.gauss(0, 1), 6) for _ in range(_LSH_DIM)] for _ in range(n)]
+
+
 def _j9b_planes(bands: int, bits: int) -> list[list[float]]:
-    rng = random.Random(43)
-    return [
-        [round(rng.gauss(0, 1), 6) for _ in range(_LSH_DIM)]
-        for _ in range(bands * bits)
-    ]
+    return _seeded_planes(43, bands * bits)
 
 
 @register(
@@ -755,9 +776,7 @@ def j9e_pair_verify_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     τ+5e-5 partner may release.  The oracle replays the construction
     and the float64 decision from first principles.  Delegates to
     ``pair_verify_f32_screen``."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir)
     a = e.filter(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("i"), F.col("v").alias("va")
     )
@@ -802,6 +821,116 @@ def j9e_pair_verify_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- The ANN family: candidate generators + one exact re-rank -------------
+#
+# Every vector top-k here is "candidates -> exact cosine -> per-query
+# top-k" (REPOSE's filter-then-refine split, PAPERS.md).  A generator
+# returns one row per (query, candidate) with at least (query_id, qv,
+# vec_id, v); other corpus columns, such as label, ride along.  The
+# caller picks the broadcast side by passing F.broadcast(panel) or the
+# bare panel.
+
+
+def query_panel(df: DataFrame, hi: int, lo: int | None = None) -> DataFrame:
+    """The query side: rows with vec_id < ``hi`` — and ``lo`` <= vec_id
+    when ``lo`` is given — as (query_id, qv[, qcell]).  The exact and
+    inline-IVF oracles select ``vec_id < n`` with no lower bound; the
+    prebuilt-index probes select ``lo <= vec_id < hi``."""
+    cond = F.col("vec_id") < hi
+    if lo is not None:
+        cond = (F.col("vec_id") >= lo) & cond
+    cols = [F.col("vec_id").alias("query_id"), F.col("v").alias("qv")]
+    if "cell" in df.columns:
+        cols.append(F.col("cell").alias("qcell"))
+    return df.filter(cond).select(*cols)
+
+
+def scan_candidates(corpus: DataFrame, panel: DataFrame) -> DataFrame:
+    """All-pairs generator: every corpus row against every panel query
+    but itself — the exact contract, no false negatives."""
+    return corpus.join(panel, F.col("vec_id") != F.col("query_id"))
+
+
+def cell_candidates(index: DataFrame, panel: DataFrame) -> DataFrame:
+    """IVF generator: the index rows whose ``cell`` equals the query's
+    ``qcell``, self excluded — a cell-keyed equality join."""
+    return index.join(
+        panel, (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id"))
+    )
+
+
+def hamming1_ring(cell: str, bits: int) -> list[Column]:
+    """The probe cells of the ``bits``-character '0'/'1' column
+    ``cell``: the cell itself, then each one-bit flip."""
+    return [F.col(cell)] + [
+        F.concat(
+            F.substring(cell, 1, i),
+            F.when(F.substring(cell, i + 1, 1) == "1", "0").otherwise("1"),
+            F.substring(cell, i + 2, bits - i - 1),
+        )
+        for i in range(bits)
+    ]
+
+
+def ring_candidates(sig: DataFrame, panel: DataFrame, bits: int) -> DataFrame:
+    """Multiprobe generator: each query probes its own cell and its
+    ``bits`` Hamming-1 cells — the IVF equality join over the exploded
+    probe cells, never a Hamming-distance theta join.  A corpus vector
+    has one cell and the bits+1 probe cells are distinct, so no
+    candidate repeats."""
+    probes = panel.select(
+        "query_id", "qv", F.explode(F.array(*hamming1_ring("qcell", bits))).alias("qcell")
+    )
+    return cell_candidates(sig, probes)
+
+
+def rerank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """The one exact re-rank: ``cos_raw`` = cosine(qv, v) by the
+    sequential fold, and each query's top ``k`` by (cos_raw desc,
+    vec_id) — the order every oracle ranks by.  The candidate columns
+    ride along."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
+    return (
+        cand.withColumn("cos_raw", cosine(F.col("qv"), F.col("v")))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
+def neighbors(top: DataFrame, *extra: Column) -> DataFrame:
+    """A re-ranked top-k as the top-k release: (query_id, neighbor_id,
+    cos_sim rounded to 5 places, *extra)."""
+    return top.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round("cos_raw", 5).alias("cos_sim"),
+        *extra,
+    )
+
+
+def majority_vote(top: DataFrame) -> DataFrame:
+    """j10's vote over a top-k of labelled neighbours: per query the
+    label with the most votes, ties to the smaller label — (query_id,
+    label, n_votes)."""
+    w = Window.partitionBy("query_id").orderBy(F.col("n_votes").desc(), F.col("label"))
+    return (
+        top.groupBy("query_id", "label")
+        .agg(F.count(F.lit(1)).alias("n_votes"))
+        .withColumn("r", F.row_number().over(w))
+        .filter(F.col("r") == 1)
+        .select("query_id", "label", "n_votes")
+    )
+
+
+def hyperplane_cells(v: Column, planes: list[list[float]]) -> Column:
+    """Random-hyperplane cell of the vector column ``v``: per plane '1'
+    when dot(v, plane) > 0 else '0', concatenated in plane order."""
+    return F.concat(
+        *[F.when(dot(v, F.expr(sql_lit_f64_array(p))) > 0, "1").otherwise("0") for p in planes]
+    )
+
+
 _J10_ORACLE = f"""
 WITH e AS (SELECT vec_id, label, {_SQL_E} AS v FROM embeddings),
 q AS (SELECT * FROM e WHERE vec_id < 20),
@@ -827,32 +956,10 @@ SELECT query_id, label AS predicted_label, n_votes FROM (
 def j10_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """j10: 5-NN majority-label classification for the first 20 vectors
     — rank neighbours per query, vote, tie-break on smaller label."""
-    from pyspark.sql import Window
-
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
-    q = e.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    scored = q.join(e, F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "label",
-        "vec_id",
-        cosine(F.col("qv"), F.col("v")).alias("cos_sim"),
-    )
-    w_nn = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    votes = (
-        scored.withColumn("rn", F.row_number().over(w_nn))
-        .filter(F.col("rn") <= 5)
-        .groupBy("query_id", "label")
-        .agg(F.count("*").alias("n_votes"))
-    )
-    w_win = Window.partitionBy("query_id").orderBy(F.col("n_votes").desc(), F.col("label"))
-    return (
-        votes.withColumn("r", F.row_number().over(w_win))
-        .filter(F.col("r") == 1)
-        .select("query_id", F.col("label").alias("predicted_label"), "n_votes")
+    e = _vectors(spark, sf_dir, "label")
+    top = rerank_topk(scan_candidates(e, query_panel(e, 20)), 5)
+    return majority_vote(top).select(
+        "query_id", F.col("label").alias("predicted_label"), "n_votes"
     )
 
 
@@ -991,9 +1098,7 @@ def j20_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles.  Top-3 neighbours for the first 10 query vectors.
     Delegates to ``ivf_topk`` (the routed entry j55 shares the same
     IVF engine, so one body serves both)."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir, "label")
     return ivf_topk(e, k=3, n_queries=10)
 
 
@@ -1005,8 +1110,6 @@ def _ivf_assign(e: DataFrame) -> DataFrame:
     and assignment is one scored map stage + a per-vector window.
     Shared by ``ivf_topk`` (inline build) and ``ivf_index_build`` (the
     persisted, session-cached form j59 probes against)."""
-    from pyspark.sql import Window
-
     per_dim = (
         e.select("label", F.posexplode("v").alias("pos0", "x"))
         .groupBy("label", "pos0")
@@ -1042,27 +1145,10 @@ def ivf_topk(e: DataFrame, k: int = 3, n_queries: int = 10) -> DataFrame:
     ``e`` carries (vec_id, label, v double-array); queries are the
     vectors with vec_id < n_queries; release is (query_id, neighbor_id,
     cos_sim) — the true top-k AMONG the query's cell (the IVF recall
-    trade: a true neighbour quantized to another cell is lost)."""
-    from pyspark.sql import Window
-
+    trade: a true neighbour quantized to another cell is lost).  The
+    panel is not broadcast: j58b's grows as N/10."""
     assign = _ivf_assign(e)
-    q = assign.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell"), F.col("v").alias("qv")
-    )
-    cand = q.join(
-        assign, (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id"))
-    )
-    w_top = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        cand.withColumn("cos_raw", cosine(F.col("qv"), F.col("v")))
-        .withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("cos_raw", 5).alias("cos_sim"),
-        )
-    )
+    return neighbors(rerank_topk(cell_candidates(assign, query_panel(assign, n_queries)), k))
 
 
 def exact_topk(e: DataFrame, k: int = 3, n_queries: int = 10) -> DataFrame:
@@ -1070,25 +1156,8 @@ def exact_topk(e: DataFrame, k: int = 3, n_queries: int = 10) -> DataFrame:
     n_queries) over the FULL corpus — the no-false-negatives contract
     the router pays for while affordable.  One shuffle-free scored scan
     (the query panel broadcasts) + a per-query window top-k."""
-    from pyspark.sql import Window
-
-    q = e.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    scored = e.select("vec_id", "v").join(
-        F.broadcast(q), F.col("vec_id") != F.col("query_id")
-    )
-    w_top = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("cos_raw", cosine(F.col("qv"), F.col("v")))
-        .withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("cos_raw", 5).alias("cos_sim"),
-        )
-    )
+    panel = F.broadcast(query_panel(e, n_queries))
+    return neighbors(rerank_topk(scan_candidates(e.select("vec_id", "v"), panel), k))
 
 
 def ann_scan_estimate(e: DataFrame, n_queries: int = 10) -> int:
@@ -1111,7 +1180,8 @@ def ann_topk_routed(
     n_queries: int = 10,
 ) -> DataFrame:
     """ONE entry point for vector top-k that picks the EXACT brute-force
-    scan (j8/j21's contract) or the IVF cell-probed search (j20's) by
+    scan (``exact_topk``, the reference j28 audits recall against) or
+    the IVF cell-probed search (``ivf_topk``, j20's) by
     ESTIMATED scoring volume — VERDICT r9's item 2, the j50b routing
     pattern applied to the vector side: at 100 TB nobody runs the exact
     scan, but below the budget it is both affordable and strictly
@@ -1138,11 +1208,19 @@ def ann_topk_routed(
     when not."""
     est = ann_scan_estimate(e, n_queries)
     route = "exact" if est <= scan_budget else "ivf"
-    if route == "exact":
-        out = exact_topk(e, k, n_queries)
-    else:
-        out = ivf_topk(e, k, n_queries)
+    out = exact_topk(e, k, n_queries) if route == "exact" else ivf_topk(e, k, n_queries)
     return out.withColumn("route", F.lit(route))
+
+
+# The inline IVF assignment as SQL (j55's and j59's oracles): every
+# vector's nearest centroid cell, ties to the smaller label.
+_IVF_SQL_ASSIGN = f"""assign AS (
+  SELECT vec_id, cell, v FROM (
+    SELECT e.vec_id, c.label AS cell, e.v,
+           ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                              ORDER BY {_sql_cos('e.v', 'c.cent')} DESC, c.label) AS rn
+    FROM e, centroids c
+  ) WHERE rn = 1)"""
 
 
 def _j55_oracle(budget: int) -> str:
@@ -1163,13 +1241,7 @@ exact_rel AS (
     FROM e q JOIN e x ON x.vec_id <> q.vec_id
     WHERE q.vec_id < 10
   ) WHERE rn <= 3),
-assign AS (
-  SELECT vec_id, cell, v FROM (
-    SELECT e.vec_id, c.label AS cell, e.v,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_sql_cos('e.v', 'c.cent')} DESC, c.label) AS rn
-    FROM e, centroids c
-  ) WHERE rn = 1),
+{_IVF_SQL_ASSIGN},
 ivf_rel AS (
   SELECT query_id, neighbor_id, cos_sim, 'ivf' AS route FROM (
     SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
@@ -1205,9 +1277,7 @@ def j55_ann_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed in the oracle guard); the same registered query flips to
     the IVF contract at the scale where an exact scan stops being the
     plan anyone runs."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir, "label")
     return ann_topk_routed(e, k=3, scan_budget=_J55_BUDGET)
 
 
@@ -1217,9 +1287,7 @@ def j55b_ann_routed_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate-SF estimate (1e3 < 10×499), so every gate run attests the IVF
     branch and the routing guard's other side — same engine, same
     oracle template, different constant."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir, "label")
     return ann_topk_routed(e, k=3, scan_budget=_J55B_BUDGET)
 
 
@@ -1243,11 +1311,7 @@ _J57_MIN_BITS = 4
 
 
 def _j57_planes() -> list[list[float]]:
-    rng = random.Random(47)  # fixed seed → identical constants in Spark & SQL
-    return [
-        [round(rng.gauss(0, 1), 6) for _ in range(64)]  # embedding dim
-        for _ in range(_J57_MAX_BITS)
-    ]
+    return _seeded_planes(47, _J57_MAX_BITS)
 
 
 def multiprobe_cell_bits(n_vectors: int) -> int:
@@ -1283,7 +1347,7 @@ def multiprobe_ann_topk(e: DataFrame, k: int = 3, n_queries: int = 10) -> DataFr
     away (recall property-tested)."""
     n = e.count()
     bits = multiprobe_cell_bits(n)
-    return _mp_probe(_mp_sign(e, bits), bits, k=k, lo=0, hi=n_queries)
+    return multiprobe_probe(_mp_sign(e, bits), bits, k=k, lo=0, hi=n_queries)
 
 
 def _sql_f64_lit(x: float) -> str:
@@ -1300,7 +1364,7 @@ def sql_lit_f64_array(xs) -> str:
     construction cost: ONE Py4J call instead of one per element (the
     per-element form cost 0.65 s of a 0.95 s literal-centroid Lloyd
     round in expression CONSTRUCTION — OPTIMIZATION_r12.md §10).  The
-    multiprobe hyperplanes (``_mp_sign``) use it."""
+    hyperplane signer (``hyperplane_cells``) uses it."""
     return "array(" + ",".join(_sql_f64_lit(x) for x in xs) + ")"
 
 
@@ -1308,58 +1372,8 @@ def _mp_sign(e: DataFrame, bits: int) -> DataFrame:
     """The multiprobe index content: every (vec_id, v) signed into its
     ``bits``-bit random-hyperplane cell — the input columns plus
     ``cell`` (extra columns like a label ride through untouched)."""
-    planes = _j57_planes()[:bits]
-    bit_cols = [
-        F.when(dot(F.col("v"), F.expr(sql_lit_f64_array(p))) > 0, 1).otherwise(0)
-        for p in planes
-    ]
-    return e.select(
-        *e.columns, F.concat(*[b.cast("string") for b in bit_cols]).alias("cell")
-    )
-
-
-def _mp_probe(
-    sig: DataFrame, bits: int, k: int = 3, lo: int = 0, hi: int = 10
-) -> DataFrame:
-    """Probe the panel (lo <= vec_id < hi) against a signed corpus:
-    own cell + every Hamming-1 cell, broadcast equality join,
-    exact-cosine re-rank, top-``k`` per query; n_bits rides along so
-    the gate attests the derivation."""
-    from pyspark.sql import Window
-
-    q = sig.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("cell").alias("qcell"),
-    )
-    # probe cells: the query's own cell (i=0) plus each one-bit flip
-    flips = [F.col("qcell")] + [
-        F.concat(
-            F.substring("qcell", 1, i),
-            F.when(F.substring("qcell", i + 1, 1) == "1", "0").otherwise("1"),
-            F.substring("qcell", i + 2, bits - i - 1),
-        )
-        for i in range(bits)
-    ]
-    probes = q.select(
-        "query_id", "qv", F.explode(F.array(*flips)).alias("pcell")
-    )
-    cand = sig.join(
-        F.broadcast(probes),  # probes are n_queries × (bits+1) rows — the corpus streams past map-side
-        (F.col("pcell") == F.col("cell")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    w_top = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        cand.withColumn("cos_raw", cosine(F.col("qv"), F.col("v")))
-        .withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("cos_raw", 5).alias("cos_sim"),
-            F.lit(bits).cast("long").alias("n_bits"),
-        )
-    )
+    cell = hyperplane_cells(F.col("v"), _j57_planes()[:bits])
+    return e.select(*e.columns, cell.alias("cell"))
 
 
 # --- j63: PREBUILT multiprobe index — the scaling codebook, amortized ------
@@ -1381,9 +1395,7 @@ def multiprobe_index_build(spark: SparkSession, sf_dir: str):
     (sig, bits)."""
 
     def build():
-        e = load(spark, sf_dir, "embeddings").select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
-        )
+        e = _vectors(spark, sf_dir)
         bits = multiprobe_cell_bits(e.count())
         return _mp_sign(e, bits).persist(), bits
 
@@ -1393,11 +1405,28 @@ def multiprobe_index_build(spark: SparkSession, sf_dir: str):
 def multiprobe_probe(
     sig: DataFrame, bits: int, k: int = 3, lo: int = 0, hi: int = 10
 ) -> DataFrame:
-    """Probe one query panel against a prebuilt multiprobe index (the
-    ``multiprobe_index_build`` table): same release contract as j57 —
-    the true top-``k`` among Hamming<=1 candidates, exact cosines,
-    n_bits attested."""
-    return _mp_probe(sig, bits, k=k, lo=lo, hi=hi)
+    """Probe the panel (lo <= vec_id < hi) against a signed corpus (the
+    ``multiprobe_index_build`` table, or ``_mp_sign`` inline): own cell
+    + every Hamming-1 cell, the probe table (panel × (bits+1) rows)
+    broadcast onto a cell-keyed equality join, exact-cosine re-rank.
+    Release is j57's: the true top-``k`` among Hamming<=1 candidates,
+    with n_bits riding along so the gate attests the derivation."""
+    panel = F.broadcast(query_panel(sig, hi, lo))
+    return neighbors(
+        rerank_topk(ring_candidates(sig, panel, bits), k),
+        F.lit(bits).cast("long").alias("n_bits"),
+    )
+
+
+# The SQL replay of j57's cells, shared by the j57/j63 and j64 oracles:
+# the bit count re-derived from COUNT(*) and the per-plane sign terms.
+_J57_SQL_NB = f"""nb AS (SELECT GREATEST({_J57_MIN_BITS}, LEAST({_J57_MAX_BITS},
+         (SELECT MIN(k) FROM range(1, {_J57_MAX_BITS + 1}) t(k)
+          WHERE POW(2.0, k) >= CEIL(SQRT((SELECT COUNT(*) FROM e)))))) AS bits)"""
+_J57_SQL_SIGNS = ", ".join(
+    f"CASE WHEN list_dot_product(v, {p}::DOUBLE[]) > 0 THEN 1 ELSE 0 END"
+    for p in _j57_planes()
+)
 
 
 def _j57_oracle(lo: int = 0, hi: int = 10) -> str:
@@ -1406,17 +1435,10 @@ def _j57_oracle(lo: int = 0, hi: int = 10) -> str:
     exact top-3 among Hamming<=1 candidates — the multi-probe cell-join
     release re-expressed as the equivalent Hamming filter (affordable
     exhaustively at gate SF; the ENGINE must never join that way)."""
-    planes = _j57_planes()
-    sig_terms = ", ".join(
-        f"CASE WHEN list_dot_product(v, {p}::DOUBLE[]) > 0 THEN 1 ELSE 0 END"
-        for p in planes
-    )
     return f"""
 WITH e AS (SELECT vec_id, {_SQL_E} AS v FROM embeddings),
-nb AS (SELECT GREATEST({_J57_MIN_BITS}, LEAST({_J57_MAX_BITS},
-         (SELECT MIN(k) FROM range(1, {_J57_MAX_BITS + 1}) t(k)
-          WHERE POW(2.0, k) >= CEIL(SQRT((SELECT COUNT(*) FROM e)))))) AS bits),
-sig AS (SELECT vec_id, v, [{sig_terms}] AS s FROM e),
+{_J57_SQL_NB},
+sig AS (SELECT vec_id, v, [{_J57_SQL_SIGNS}] AS s FROM e),
 q AS (SELECT vec_id, v, s FROM sig
       WHERE vec_id >= {lo} AND vec_id < {hi})
 SELECT query_id, neighbor_id, cos_sim, n_bits FROM (
@@ -1442,9 +1464,7 @@ def j57_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     j33 (SQ8): the cell count now SCALES with the corpus and the
     recall knob (nprobe) is explicit.  Delegates to
     ``multiprobe_ann_topk``."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir)
     return multiprobe_ann_topk(e, k=3, n_queries=10)
 
 
@@ -1580,9 +1600,7 @@ def j58_ann_cost_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cheaper plan there — the round-10 matrix measurement) and
     flips to IVF once the growing panel amortizes the codebook build.
     Delegates to ``ann_topk_cost_routed``."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir, "label")
     return ann_topk_cost_routed(e, k=3, panel_divisor=_J58_DIV)
 
 
@@ -1594,9 +1612,7 @@ def j58b_ann_cost_routed_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     every gate run attests the IVF branch and the cost comparison's
     other side.  Same engine, same oracle template, different
     constant."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir, "label")
     return ann_topk_cost_routed(e, k=3, panel_divisor=_J58B_DIV)
 
 
@@ -1626,9 +1642,7 @@ def ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     (applicationId, sf_dir) through ``session_reuse``."""
 
     def build():
-        e = load(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", as_double(F.col("embedding")).alias("v")
-        )
+        e = _vectors(spark, sf_dir, "label")
         return _ivf_assign(e).persist()
 
     return session_reuse(spark, sf_dir, "ivf_index", build)
@@ -1641,28 +1655,8 @@ def ivf_probe(index: DataFrame, k: int = 3, lo: int = 0, hi: int = 10) -> DataFr
     per-batch work is #panel × occupancy cosines, never N·C.  Release
     is (query_id, neighbor_id, cos_sim): the true top-k among the
     query's cell, identical to ``ivf_topk``'s contract."""
-    from pyspark.sql import Window
-
-    q = index.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("cell").alias("qcell"),
-        F.col("v").alias("qv"),
-    )
-    cand = index.join(
-        F.broadcast(q),
-        (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    w_top = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        cand.withColumn("cos_raw", cosine(F.col("qv"), F.col("v")))
-        .withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("cos_raw", 5).alias("cos_sim"),
-        )
-    )
+    panel = F.broadcast(query_panel(index, hi, lo))
+    return neighbors(rerank_topk(cell_candidates(index, panel), k))
 
 
 def _j59_oracle(lo: int, hi: int) -> str:
@@ -1673,13 +1667,7 @@ def _j59_oracle(lo: int, hi: int) -> str:
     return f"""
 WITH {_IVF_SQL_CENTROIDS},
 e AS (SELECT vec_id, {_SQL_E} AS v FROM embeddings),
-assign AS (
-  SELECT vec_id, cell, v FROM (
-    SELECT e.vec_id, c.label AS cell, e.v,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_sql_cos('e.v', 'c.cent')} DESC, c.label) AS rn
-    FROM e, centroids c
-  ) WHERE rn = 1)
+{_IVF_SQL_ASSIGN}
 SELECT query_id, neighbor_id, cos_sim FROM (
   SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
          ROUND({_sql_cos('q.v', 'x.v')}, 5) AS cos_sim,
@@ -1752,9 +1740,7 @@ def j33_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIMD-friendliest inner loop.  Quantization is one map stage; the
     only shuffle is the 64-row stats aggregate.  FLOOR(x + 0.5) is used
     instead of ROUND so both engines make identical half-way choices."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir)
     per_dim = (
         e.select(F.posexplode("v").alias("pos0", "x"))
         .groupBy("pos0")
@@ -1811,14 +1797,10 @@ def j33_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- LSH signatures: the approximate scale path --------------------------
 
 _LSH_PLANES = 8
-_LSH_DIM = 64
 
 
 def _hyperplanes() -> list[list[float]]:
-    rng = random.Random(42)  # fixed seed → identical constants in Spark & SQL
-    return [
-        [round(rng.gauss(0, 1), 6) for _ in range(_LSH_DIM)] for _ in range(_LSH_PLANES)
-    ]
+    return _seeded_planes(42, _LSH_PLANES)
 
 
 def _lsh_oracle() -> str:
@@ -1841,13 +1823,9 @@ def j17_sim_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     within buckets replaces the quadratic pair join.  Oracle carries
     the identical hyperplane constants."""
     e = load(spark, sf_dir, "embeddings")
-    planes = _hyperplanes()
-    v = as_double(F.col("embedding"))
-    bits = [
-        F.when(dot(v, F.expr(sql_lit_f64_array(p))) > 0, "1").otherwise("0")
-        for p in planes
-    ]
-    return e.select("vec_id", F.concat(*bits).alias("bucket"))
+    return e.select(
+        "vec_id", hyperplane_cells(as_double(F.col("embedding")), _hyperplanes()).alias("bucket")
+    )
 
 
 @register("j21_sim_topk_vectorized", oracle=_J8_ORACLE)
@@ -1990,25 +1968,11 @@ def j28_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the exact side is the expensive path and exists only for the
     (bounded, e.g. 10-query) evaluation sample — the pattern at 100 TB
     is exactly this: audit recall on a small random query set, serve
-    from the index."""
-    from pyspark.sql import Window
-
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    ivf = j20_ivf_ann(spark, sf_dir).select("query_id", "neighbor_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    w_top = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    exact = (
-        F.broadcast(q)
-        .join(e, F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_raw", cosine(F.col("qv"), F.col("v")))
-        .withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
+    from the index.  Both sides are the shared engines: ``ivf_topk``
+    and ``exact_topk``."""
+    e = _vectors(spark, sf_dir, "label")
+    ivf = ivf_topk(e, 3, 10).select("query_id", "neighbor_id")
+    exact = exact_topk(e, 3, 10).select("query_id", "neighbor_id")
     return (
         exact.alias("ex")
         .join(
@@ -2290,9 +2254,7 @@ def j43_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute shuffles only (k x 64) partial sums per batch.  Rounds
     are a bounded driver loop on a checkpointed corpus — the classic
     distributed Lloyd layout."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir)
     assign, cents = _km_fit_arrow(e.localCheckpoint(eager=True))[:2]
     cent_str = spark.createDataFrame(cents, "cl BIGINT, cent ARRAY<DOUBLE>").select(
         "cl",
@@ -2496,36 +2458,16 @@ def _knn_label_candidates(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     """Shared front half of the knn_label twins (the j9b/j9d shared-
     corpus discipline: one candidate derivation, so the exact and
     Arrow forms cannot drift).  Signs both sides into the size-derived
-    multiprobe cells (2^bits ≈ √N) and joins each query's own cell +
-    Hamming-1 ring against the corpus cells — a plain equality join on
-    the probe cell (both sides shuffle once by cell, nothing broadcast
-    or all-pairs; a corpus vector has exactly ONE cell and the bits+1
-    probe cells are distinct, so no candidate duplicates).  Returns
-    (vec_id, label, v, cell, query_id, qv, pcell)."""
+    multiprobe cells (2^bits ≈ √N) and runs ``ring_candidates`` with
+    the query side NOT broadcast: it can be a whole working table, so
+    both sides shuffle once by cell, and cells are ~√N-balanced by
+    construction.  Returns (vec_id, label, v, cell, query_id, qv,
+    qcell)."""
     bits = multiprobe_cell_bits(corpus.count())
-    sig = _mp_sign(corpus, bits)  # vec_id, label, v, cell
-    qsig = _mp_sign(
-        queries.select(F.col("query_id").alias("vec_id"), "v"), bits
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("cell").alias("qcell"),
+    panel = _mp_sign(queries, bits).select(
+        "query_id", F.col("v").alias("qv"), F.col("cell").alias("qcell")
     )
-    flips = [F.col("qcell")] + [
-        F.concat(
-            F.substring("qcell", 1, i),
-            F.when(F.substring("qcell", i + 1, 1) == "1", "0").otherwise("1"),
-            F.substring("qcell", i + 2, bits - i - 1),
-        )
-        for i in range(bits)
-    ]
-    probes = qsig.select(
-        "query_id", "qv", F.explode(F.array(*flips)).alias("pcell")
-    )
-    return sig.join(
-        probes,
-        (F.col("pcell") == F.col("cell")) & (F.col("vec_id") != F.col("query_id")),
-    )
+    return ring_candidates(_mp_sign(corpus, bits), panel, bits)
 
 
 def knn_label_multiprobe(
@@ -2538,33 +2480,16 @@ def knn_label_multiprobe(
     Hamming-1 ring) instead of the exhaustive N×Q scan.
 
     ``queries`` is (query_id, v); ``corpus`` is (vec_id, label, v).
-    Unlike ``_mp_probe`` (small fixed panels, broadcast probes), the
-    query side here can be a whole working table, so the candidate
+    Unlike ``multiprobe_probe`` (small fixed panels, broadcast probes),
+    the query side here can be a whole working table, so the candidate
     join is a plain equality join on the probe cell — both sides
     shuffle once by cell, cells are ~√N-balanced by construction, and
     nothing is broadcast or all-pairs.  The recall contract is j57's:
     a true neighbour further than Hamming-1 from the query's cell is
     not a candidate."""
-    from pyspark.sql import Window
-
-    cand = _knn_label_candidates(queries, corpus)
-    w_nn = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("vec_id")
-    )
-    votes = (
-        cand.withColumn("cos_raw", cosine(F.col("qv"), F.col("v")))
-        .withColumn("rn", F.row_number().over(w_nn))
-        .filter(F.col("rn") <= k)
-        .groupBy("query_id", "label")
-        .agg(F.count(F.lit(1)).alias("n_votes"))
-    )
-    w_win = Window.partitionBy("query_id").orderBy(
-        F.col("n_votes").desc(), F.col("label")
-    )
-    return (
-        votes.withColumn("r", F.row_number().over(w_win))
-        .filter(F.col("r") == 1)
-        .select("query_id", F.col("label").alias("label_pred"), "n_votes")
+    top = rerank_topk(_knn_label_candidates(queries, corpus), k)
+    return majority_vote(top).select(
+        "query_id", F.col("label").alias("label_pred"), "n_votes"
     )
 
 
@@ -2572,17 +2497,10 @@ def _j64_oracle(lo: int = 0, hi: int = 20) -> str:
     """j64's referee: j57's plane/bit replay + j10's vote semantics —
     5-NN among Hamming<=1 candidates, majority label, ties to the
     smaller label, exhaustively recomputed."""
-    planes = _j57_planes()
-    sig_terms = ", ".join(
-        f"CASE WHEN list_dot_product(v, {p}::DOUBLE[]) > 0 THEN 1 ELSE 0 END"
-        for p in planes
-    )
     return f"""
 WITH e AS (SELECT vec_id, label, {_SQL_E} AS v FROM embeddings),
-nb AS (SELECT GREATEST({_J57_MIN_BITS}, LEAST({_J57_MAX_BITS},
-         (SELECT MIN(k) FROM range(1, {_J57_MAX_BITS + 1}) t(k)
-          WHERE POW(2.0, k) >= CEIL(SQRT((SELECT COUNT(*) FROM e)))))) AS bits),
-sig AS (SELECT vec_id, label, v, [{sig_terms}] AS s FROM e),
+{_J57_SQL_NB},
+sig AS (SELECT vec_id, label, v, [{_J57_SQL_SIGNS}] AS s FROM e),
 q AS (SELECT vec_id, v, s FROM sig
       WHERE vec_id >= {lo} AND vec_id < {hi}),
 nn AS (
@@ -2613,9 +2531,7 @@ def j64_knn_label_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming<=1 probing, exact-cosine re-rank, j10 vote semantics).
     The oracle replays planes, bit derivation, candidate filter and
     vote exhaustively.  Delegates to ``knn_label_multiprobe``."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir, "label")
     q = e.filter((F.col("vec_id") >= 0) & (F.col("vec_id") < 20)).select(
         F.col("vec_id").alias("query_id"), "v"
     )
@@ -2681,8 +2597,6 @@ def knn_label_multiprobe_fast(
     in tests on an adversarial planted-tie corpus."""
     import numpy as np
     import pandas as pd
-
-    from pyspark.sql import Window
 
     cand = _knn_label_candidates(queries, corpus)
     label_t = cand.schema["label"].dataType.simpleString()
@@ -2772,15 +2686,8 @@ def knn_label_multiprobe_fast(
         .select("query_id", "label")
     )
     topk = sure.select("query_id", "label").unionByName(band_kept)
-    w_win = Window.partitionBy("query_id").orderBy(
-        F.col("n_votes").desc(), F.col("label")
-    )
-    return (
-        topk.groupBy("query_id", "label")
-        .agg(F.count(F.lit(1)).alias("n_votes"))
-        .withColumn("r", F.row_number().over(w_win))
-        .filter(F.col("r") == 1)
-        .select("query_id", F.col("label").alias("label_pred"), "n_votes")
+    return majority_vote(topk).select(
+        "query_id", F.col("label").alias("label_pred"), "n_votes"
     )
 
 
@@ -2793,9 +2700,7 @@ def j64b_knn_label_ann_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries j64's exhaustive oracle verbatim: the release is
     decision-identical by the engine's written eps argument, and the
     gate attests the fast path end-to-end (the j9d precedent)."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir, "label")
     q = e.filter((F.col("vec_id") >= 0) & (F.col("vec_id") < 20)).select(
         F.col("vec_id").alias("query_id"), "v"
     )
@@ -2852,9 +2757,7 @@ def j43b_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is O(k x dims); rounds are data-bounded by the fixpoint
     (observed 15 / 19 / 35 at sf0.001 / 0.01 / 0.1).  At 100 TB the same
     loop holds: centroids always fit a broadcast."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    e = _vectors(spark, sf_dir)
     unit = e.withColumn("v", F.transform("v", lambda x: x / norm(F.col("v"))))
     assign, cents, converged, _rounds, saw_loss = _km_fit_arrow(
         unit.localCheckpoint(eager=True), converge=True

@@ -12,6 +12,8 @@ pruning / dynamic partition pruning for free.
 
 from __future__ import annotations
 
+import atexit
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -48,7 +50,9 @@ def scratch_dir(spark: SparkSession, *parts: str) -> str:
 
     Stale sibling dirs (other applications, untouched > 1 h) are swept
     best-effort on first use per session so repeated runs cannot fill
-    /tmp; the 1-hour grace keeps genuinely concurrent sessions safe."""
+    /tmp; the 1-hour grace keeps genuinely concurrent sessions safe.
+    A process removes its own applications' directories when it exits
+    (``_remove_own_scratch``); within a session, nothing is reclaimed."""
     import os
     import shutil
     import tempfile
@@ -69,6 +73,20 @@ def scratch_dir(spark: SparkSession, *parts: str) -> str:
     d = os.path.join(root, app_id, *parts)
     os.makedirs(os.path.dirname(d), exist_ok=True)
     return d
+
+
+@atexit.register
+def _remove_own_scratch() -> None:
+    """At interpreter exit, remove the scratch directory of every
+    application this process used: no frame of it can be read any more,
+    and the first-use sweep would leave it behind for an hour."""
+    import os
+    import shutil
+    import tempfile
+
+    root = os.path.join(tempfile.gettempdir(), "mael_scratch")
+    for app_id in _SWEPT_SCRATCH_ROOTS:
+        shutil.rmtree(os.path.join(root, app_id), ignore_errors=True)
 
 
 def fresh_scratch_dir(spark: SparkSession, name: str, scratch: str | None = None) -> str:

@@ -81,6 +81,107 @@ def colinear_sf(tmp_path_factory):
     return str(out)
 
 
+@pytest.fixture(scope="module")
+def colinear_neg_sf(tmp_path_factory, colinear_sf):
+    """colinear_sf plus vec_id -1, the query direction scaled by 3 — a
+    query of the ``vec_id < n`` panels, never of ``lo <= vec_id < hi``
+    with lo = 0."""
+    t = pq.read_table(f"{colinear_sf}/embeddings.parquet")
+    d = t.column("embedding")[0].as_py()
+    extra = pa.table(
+        {
+            "vec_id": pa.array([-1], pa.int64()),
+            "embedding": pa.array([[3 * x for x in d]], pa.list_(pa.float32())),
+            "label": pa.array([0], pa.int32()),
+        }
+    )
+    out = tmp_path_factory.mktemp("colinear_neg")
+    pq.write_table(pa.concat_tables([t, extra]), str(out / "embeddings.parquet"))
+    return str(out)
+
+
+def _candidate_sets(spark, sf_dir: str) -> dict:
+    """Each ANN candidate generator over the whole corpus as query panel:
+    the scan, the IVF cells and the Hamming-1 ring."""
+    from ma_anonymization_etl_spark.operators.similarity import (
+        _ivf_assign,
+        _mp_sign,
+        _vectors,
+        cell_candidates,
+        multiprobe_cell_bits,
+        query_panel,
+        ring_candidates,
+        scan_candidates,
+    )
+
+    e = _vectors(spark, sf_dir, "label")
+    bits = multiprobe_cell_bits(e.count())
+    idx, sig = _ivf_assign(e), _mp_sign(e, bits)
+    return {
+        "scan": scan_candidates(e, query_panel(e, 1000)),
+        "ivf": cell_candidates(idx, query_panel(idx, 1000)),
+        "ring": ring_candidates(sig, query_panel(sig, 1000), bits),
+    }
+
+
+def test_rerank_topk_is_exact_topk_of_every_generator(spark, colinear_sf, colinear_neg_sf):
+    """For each candidate generator, ``rerank_topk`` releases exactly the
+    top-k of the generator's own candidates ranked in Python by the
+    sequential-fold cosine (``_exact_cos_py``), ties to the smaller
+    vec_id — on corpora whose colinear copies tie up to the last ulps at
+    the rank-k boundary, at k = 3 and k = 5."""
+    from ma_anonymization_etl_spark.operators.similarity import rerank_topk
+
+    for sf_dir in (colinear_sf, colinear_neg_sf):
+        for gen, cand in _candidate_sets(spark, sf_dir).items():
+            rows = cand.select("query_id", "vec_id", "qv", "v").collect()
+            by_q: dict = {}
+            for r in rows:
+                by_q.setdefault(r.query_id, []).append((-_exact_cos_py(r.qv, r.v), r.vec_id))
+            assert len(by_q) > 1, (gen, sf_dir)
+            for k in (3, 5):
+                want = sorted(
+                    (q, vid, -negc)
+                    for q, scored in by_q.items()
+                    for negc, vid in sorted(scored)[:k]
+                )
+                got = sorted(
+                    tuple(r)
+                    for r in rerank_topk(cand, k).select("query_id", "vec_id", "cos_raw").collect()
+                )
+                assert got == want, (gen, k, sf_dir)
+
+
+def test_ann_panels_keep_their_lower_bounds(spark, colinear_neg_sf):
+    """vec_id -1 is a query of exact_topk, ivf_topk and j10 (their
+    oracles select ``vec_id < n``) and not of ivf_probe or
+    multiprobe_probe with lo = 0 (``lo <= vec_id < hi``)."""
+    from ma_anonymization_etl_spark.operators.similarity import (
+        _ivf_assign,
+        _mp_sign,
+        _vectors,
+        exact_topk,
+        ivf_probe,
+        ivf_topk,
+        j10_knn_classify,
+        multiprobe_cell_bits,
+        multiprobe_probe,
+    )
+
+    e = _vectors(spark, colinear_neg_sf, "label")
+    bits = multiprobe_cell_bits(e.count())
+
+    for name, df, neg_is_query in (
+        ("exact_topk", exact_topk(e, 3, 20), True),
+        ("ivf_topk", ivf_topk(e, 3, 20), True),
+        ("j10", j10_knn_classify(spark, colinear_neg_sf), True),
+        ("ivf_probe", ivf_probe(_ivf_assign(e), 3, 0, 20), False),
+        ("multiprobe_probe", multiprobe_probe(_mp_sign(e, bits), bits, 3, 0, 20), False),
+    ):
+        got = {r.query_id for r in df.select("query_id").distinct().collect()}
+        assert 0 in got and (-1 in got) == neg_is_query, name
+
+
 def _ranked(sf_dir: str, qid: int) -> list[tuple[float, int, int]]:
     """Pure-Python replica of the exact neighbour order for one query:
     (cos, vec_id, label) by (cos desc, vec_id), self excluded, cos by

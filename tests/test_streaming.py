@@ -170,6 +170,33 @@ def test_calls_own_their_scratch(spark, name):
     assert got == canon_rows(second.columns, second.collect())
 
 
+def test_scratch_removed_at_exit():
+    """A process that ran a scratch query leaves no application
+    directory under the scratch root once it has exited."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os, sys\n"
+        "from ma_anonymization_etl_spark.registry import load_all\n"
+        "from ma_anonymization_etl_spark.session import get_spark\n"
+        "from ma_anonymization_etl_spark.sources.io import scratch_dir\n"
+        "spark = get_spark(app_name='scratch-exit', master='local[1]')\n"
+        "load_all()['a4_parquet_sink'].fn(spark, sys.argv[1]).collect()\n"
+        "app_dir = scratch_dir(spark)\n"
+        "print(app_dir, bool(os.listdir(app_dir)))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", code, SF_SMOKE],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600, check=True,
+    )
+    app_dir, populated = out.stdout.split()[-2:]
+    assert populated == "True", out.stdout
+    assert not os.path.exists(app_dir), f"{app_dir} outlived its process"
+
+
 def test_stream_tumbling_equals_batch(spark):
     """Direct stream-vs-batch equivalence for the k1 transform (complete
     mode, no watermark)."""
