@@ -646,20 +646,25 @@ def j13_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lang_id(d)
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """j13's engine: script/diacritic-marker language ID over any
-    (doc_id, text) DataFrame — returns (doc_id, lang_pred)."""
+def lang_pred(text_col: str = "text") -> Column:
+    """j13's per-row prediction as one column expression: the first
+    marker class that ``text_col`` matches, else 'und'.  ``lang_id``
+    and the ``lang_filter`` route step both build on it."""
     t = F.col(text_col)
-    return docs.select(
-        "doc_id",
+    return (
         F.when(t.rlike("[一-鿿]"), "zh")
         .when(F.lower(t).rlike("[äöüß]"), "de")
         .when(F.lower(t).rlike("[ñ¿¡]"), "es")
         .when(F.lower(t).rlike("[àâçèêî]"), "fr")
         .when(t.rlike("^[ -~]+$"), "en")
         .otherwise("und")
-        .alias("lang_pred"),
     )
+
+
+def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """j13's engine: script/diacritic-marker language ID over any
+    (doc_id, text) DataFrame — returns (doc_id, lang_pred)."""
+    return docs.select("doc_id", lang_pred(text_col).alias("lang_pred"))
 
 
 _STOPWORDS = ("a", "the", "of", "and", "in", "to", "is", "on")
@@ -694,14 +699,12 @@ def j14_text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_quality_score(d, stopwords=_STOPWORDS)
 
 
-def text_quality_score(docs: DataFrame, stopwords=_STOPWORDS) -> DataFrame:
-    """j14's engine, parameterized: per-doc word/char counts, average
-    word length, stopword ratio over ``stopwords``, and a logistic
-    length score — pure row-local expressions.  Works on any
-    (doc_id, text) DataFrame: n_chars is computed from the text when
-    the caller's table doesn't already carry it."""
-    if "n_chars" not in docs.columns:
-        docs = docs.withColumn("n_chars", F.length("text").cast("long"))
+def quality_signals(stopwords=_STOPWORDS) -> dict[str, Column]:
+    """j14's per-row signals over the ``text`` column as column
+    expressions, rounded as j14 releases them: n_words, avg_word_len,
+    stop_frac (stopword ratio over ``stopwords``) and length_score (a
+    logistic length score).  ``text_quality_score`` and the
+    ``quality_filter`` route step both build on them."""
     w = words_of()
     n_words = F.size(w)
     stop_arr = F.array(*[F.lit(s) for s in stopwords])
@@ -711,15 +714,30 @@ def text_quality_score(docs: DataFrame, stopwords=_STOPWORDS) -> DataFrame:
     avg_word_len = (
         F.length(F.regexp_replace("text", " ", "")).cast("double") / n_words
     )
+    return {
+        "n_words": n_words,
+        "avg_word_len": F.round(avg_word_len, 4),
+        "stop_frac": F.round(stop_frac, 6),
+        "length_score": F.round(
+            1.0 / (1.0 + F.exp(-(0.05 * n_words.cast("double") - 2.0))), 6
+        ),
+    }
+
+
+def text_quality_score(docs: DataFrame, stopwords=_STOPWORDS) -> DataFrame:
+    """j14's engine, parameterized: per-doc word/char counts, average
+    word length, stopword ratio over ``stopwords``, and a logistic
+    length score — pure row-local expressions (``quality_signals``).
+    Works on any (doc_id, text) DataFrame: n_chars is computed from the
+    text when the caller's table doesn't already carry it."""
+    if "n_chars" not in docs.columns:
+        docs = docs.withColumn("n_chars", F.length("text").cast("long"))
+    q = quality_signals(stopwords)
     return docs.select(
         "doc_id",
-        n_words.alias("n_words"),
+        q["n_words"].alias("n_words"),
         "n_chars",
-        F.round(avg_word_len, 4).alias("avg_word_len"),
-        F.round(stop_frac, 6).alias("stop_frac"),
-        F.round(1.0 / (1.0 + F.exp(-(0.05 * n_words.cast("double") - 2.0))), 6).alias(
-            "length_score"
-        ),
+        *(q[c].alias(c) for c in ("avg_word_len", "stop_frac", "length_score")),
     )
 
 

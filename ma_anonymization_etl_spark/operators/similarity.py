@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.functions.vectors import as_double, cosine, dot, norm
@@ -1996,8 +1996,8 @@ def j28_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lower cluster id) and recomputes integer-quantized per-dimension mean
 # centroids, so DuckDB can replay every round as an unrolled CTE chain.
 # ONE engine runs it for j43, j43b, j44/j44b and the
-# ``semantic_dedup_drop`` route step: ``_km_assign_arrow`` +
-# ``_km_recompute_arrow`` inside the loop ``_km_fit_arrow``.
+# ``semantic_dedup_drop`` route step: ``_km_round_arrow`` inside the
+# loop ``_km_fit_arrow``, then one final ``_km_assign_arrow``.
 # j44 layers SemDeDup (Abbas et al. 2023, arXiv:2303.09540) on top:
 # near-duplicate candidates are confined to k-means cells, giving the
 # cluster-bounded (never all-pairs) semantic-dedup shape.
@@ -2046,10 +2046,11 @@ def _km_sql_chain(k_expr: str = str(_KM_K)) -> str:
     return ",\n".join(parts)
 
 
-def _km_assign_arrow(corpus: DataFrame, cent_rows: list) -> DataFrame:
-    """The k-means assignment: argmax cosine against DRIVER-HELD
-    centroids, ties to the lower cluster id — one (batch × k) dgemm per
-    Arrow batch, no join, no window, no shuffle.
+def _km_assign_batch(M, cls_v, C, Cn):
+    """The k-means assignment of one batch ``M`` (n×d): argmax cosine
+    against the centroids ``C`` (``Cn`` row-normalized), ties to the
+    lower cluster id; returns the n cluster ids.  One (n × k) dgemm, no
+    join, no window, no shuffle.
 
     Decision-exactness: BLAS reduces dots in SIMD order, so its cosine
     can differ from the oracle's sequential fold by ~1e-14; any row
@@ -2061,106 +2062,127 @@ def _km_assign_arrow(corpus: DataFrame, cent_rows: list) -> DataFrame:
     in BLAS.  Rows with a wider gap cannot flip: the BLAS error bound
     for 64-dim unit-vector dots is ~64·eps ≈ 1.4e-14 << 1e-9."""
     import numpy as np
-    import pandas as pd
 
-    rows = sorted(cent_rows, key=lambda r: r["cl"])
-    cls_arr = np.array([r["cl"] for r in rows], dtype=np.int64)
-    cmat = np.array([list(r["cent"]) for r in rows], dtype=np.float64)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((cls_arr, cmat))
-
-    def assign(batches):
-        cls_v, C = bc.value
-        Cn = C / np.linalg.norm(C, axis=1)[:, None]
-        k = len(cls_v)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            Mn = M / np.linalg.norm(M, axis=1)[:, None]
-            S = Mn @ Cn.T  # (n, k) BLAS cosines
-            best = S.argmax(axis=1)  # first max = lowest cl on exact ties
-            if k > 1:
-                top = S[np.arange(len(M)), best]
-                second = np.partition(S, k - 2, axis=1)[:, k - 2]
-                for i in np.where(top - second < 1e-9)[0]:
-                    cand = np.where(S[i] >= top[i] - 1e-9)[0]
-                    best[i] = min(
-                        cand,
-                        key=lambda j: (-_exact_cos_py(M[i], C[j]), cls_v[j]),
-                    )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cl": cls_v[best],
-                    "v": pdf["v"],
-                }
+    k = len(cls_v)
+    Mn = M / np.linalg.norm(M, axis=1)[:, None]
+    S = Mn @ Cn.T  # (n, k) BLAS cosines
+    best = S.argmax(axis=1)  # first max = lowest cl on exact ties
+    if k > 1:
+        top = S[np.arange(len(M)), best]
+        second = np.partition(S, k - 2, axis=1)[:, k - 2]
+        for i in np.where(top - second < 1e-9)[0]:
+            cand = np.where(S[i] >= top[i] - 1e-9)[0]
+            best[i] = min(
+                cand,
+                key=lambda j: (-_exact_cos_py(M[i], C[j]), cls_v[j]),
             )
-
-    return corpus.mapInPandas(
-        assign, "vec_id BIGINT, cl BIGINT, v ARRAY<DOUBLE>"
-    )
+    return cls_v[best]
 
 
-def _km_recompute_arrow(assign: DataFrame) -> DataFrame:
-    """The k-means centroid recompute (``_km_sql_recompute``'s
-    integer-quantized mean) with Arrow-batched int64 PARTIALS: each
-    batch pre-aggregates (cl, dim) → (int64 sum of the 1e-6-quantized
-    components, count) in numpy, so the shuffle carries k×64 rows PER
-    BATCH instead of a declarative posexplode's 64 rows per corpus
-    vector (sf10's 400k vectors: ~26M shuffled rows → tens of
-    thousands).
+def _km_partials(M, cl):
+    """One batch's centroid partials for ``_km_sql_recompute``'s
+    integer-quantized mean: (cl, pos0) → (int64 sum of the
+    1e-6-quantized components, count), so the shuffle carries k×d rows
+    PER BATCH instead of a posexplode's d rows per corpus vector (sf10's
+    400k vectors: ~26M shuffled rows → tens of thousands).
 
     BIT-IDENTICAL by integer associativity, not by a near-tie
     argument: the quantization replicates Spark ROUND (half away from
     zero — np.floor(s+0.5)/np.ceil(s−0.5) plus an exact-compare
     correction for the one-ulp case where the ±0.5 add itself crosses
-    an integer, e.g. s = 0.5−2⁻⁵⁴ where fl(s+0.5) = 1.0), partial
-    int64 sums add associatively to the same total, and the final
-    (double)sum / count / 1e6 divides the same two operands.  Pinned
-    bit-for-bit against the declarative referee in tests."""
+    an integer, e.g. s = 0.5−2⁻⁵⁴ where fl(s+0.5) = 1.0), and partial
+    int64 sums add associatively to the same total."""
     import numpy as np
     import pandas as pd
 
-    def partials(batches):
+    s = M * 1e6
+    r = np.where(s >= 0, np.floor(s + 0.5), np.ceil(s - 0.5))
+    r = np.where(r - s > 0.5, r - 1, r)  # add crossed the boundary up
+    r = np.where(s - r > 0.5, r + 1, r)  # (negative-side mirror)
+    q = r.astype(np.int64)
+    uniq, inv = np.unique(cl, return_inverse=True)
+    sums = np.zeros((len(uniq), q.shape[1]), dtype=np.int64)
+    np.add.at(sums, inv, q)
+    counts = np.bincount(inv).astype(np.int64)
+    k_, d_ = sums.shape
+    return pd.DataFrame(
+        {
+            "cl": np.repeat(uniq, d_),
+            "pos0": np.tile(np.arange(d_, dtype=np.int64), k_),
+            "s": sums.reshape(-1),
+            "c": np.repeat(counts, d_),
+        }
+    )
+
+
+def _km_assigned_map(corpus: DataFrame, cent_rows: list, emit, schema: str) -> DataFrame:
+    """One map-side pass over a (vec_id, v) corpus against DRIVER-HELD
+    centroids (broadcast): each Arrow batch is assigned
+    (``_km_assign_batch``) and ``emit(pdf, M, cl)`` turns it into the
+    output batch of ``schema``."""
+    import numpy as np
+
+    rows = sorted(cent_rows, key=lambda r: r["cl"])
+    cls_arr = np.array([r["cl"] for r in rows], dtype=np.int64)
+    cmat = np.array([list(r["cent"]) for r in rows], dtype=np.float64)
+    bc = corpus.sparkSession.sparkContext.broadcast((cls_arr, cmat))
+
+    def run(batches):
+        cls_v, C = bc.value
+        Cn = C / np.linalg.norm(C, axis=1)[:, None]
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            cl = pdf["cl"].to_numpy()
-            s = m * 1e6
-            r = np.where(s >= 0, np.floor(s + 0.5), np.ceil(s - 0.5))
-            r = np.where(r - s > 0.5, r - 1, r)  # add crossed the boundary up
-            r = np.where(s - r > 0.5, r + 1, r)  # (negative-side mirror)
-            q = r.astype(np.int64)
-            uniq, inv = np.unique(cl, return_inverse=True)
-            sums = np.zeros((len(uniq), q.shape[1]), dtype=np.int64)
-            np.add.at(sums, inv, q)
-            counts = np.bincount(inv).astype(np.int64)
-            k_, d_ = sums.shape
-            yield pd.DataFrame(
-                {
-                    "cl": np.repeat(uniq, d_),
-                    "pos0": np.tile(np.arange(d_, dtype=np.int64), k_),
-                    "s": sums.reshape(-1),
-                    "c": np.repeat(counts, d_),
-                }
-            )
+            M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            yield emit(pdf, M, _km_assign_batch(M, cls_v, C, Cn))
 
-    per_dim = (
-        assign.mapInPandas(partials, "cl BIGINT, pos0 BIGINT, s BIGINT, c BIGINT")
-        .groupBy("cl", "pos0")
-        .agg(
-            (
-                F.sum("s").cast("double") / F.sum("c") / F.lit(1e6)
-            ).alias("av")
+    return corpus.mapInPandas(run, schema)
+
+
+def _km_assign_arrow(corpus: DataFrame, cent_rows: list) -> DataFrame:
+    """The k-means assignment (vec_id, cl, v) of a (vec_id, v) corpus,
+    one map-side pass, no shuffle."""
+    import pandas as pd
+
+    return _km_assigned_map(
+        corpus,
+        cent_rows,
+        lambda pdf, M, cl: pd.DataFrame(
+            {"vec_id": pdf["vec_id"].to_numpy(), "cl": cl, "v": pdf["v"]}
+        ),
+        "vec_id BIGINT, cl BIGINT, v ARRAY<DOUBLE>",
+    )
+
+
+def _km_round_arrow(corpus: DataFrame, cent_rows: list) -> DataFrame:
+    """One Lloyd round as one Arrow pass: each batch is assigned and
+    reduced to its int64 partials (``_km_partials``) in the same
+    ``mapInPandas``, then one ``groupBy(cl, pos0)`` divides the merged
+    sums — (cl, pos0, av) rows, av = (double)sum / count / 1e6, the same
+    two operands as the declarative recompute, so
+    ``_km_collect_centroids`` assembles centroids bit-identical to it."""
+    return (
+        _km_assigned_map(
+            corpus,
+            cent_rows,
+            lambda pdf, M, cl: _km_partials(M, cl),
+            "cl BIGINT, pos0 BIGINT, s BIGINT, c BIGINT",
         )
+        .groupBy("cl", "pos0")
+        .agg((F.sum("s").cast("double") / F.sum("c") / F.lit(1e6)).alias("av"))
     )
-    return per_dim.groupBy("cl").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos0", "av"))), lambda s: s.av
-        ).alias("cent")
-    )
+
+
+def _km_collect_centroids(per_dim: DataFrame) -> list:
+    """Collect a round's (cl, pos0, av) rows and assemble the (cl, cent)
+    centroid rows on the driver, ordered by cluster id."""
+    cents: dict = {}
+    for r in per_dim.collect():
+        cents.setdefault(r["cl"], {})[r["pos0"]] = r["av"]
+    return [
+        Row(cl=cl, cent=[dims[p] for p in sorted(dims)])
+        for cl, dims in sorted(cents.items())
+    ]
 
 
 def _km_fit_arrow(corpus: DataFrame, k: int = _KM_K, converge: bool = False):
@@ -2168,10 +2190,11 @@ def _km_fit_arrow(corpus: DataFrame, k: int = _KM_K, converge: bool = False):
     the ``semantic_dedup_drop`` route step).  Seeds are the k lowest
     SURVIVING vec_ids (the oracles' `vec_id < k` on the contiguous
     registered corpora; never empty on a non-empty corpus, whatever
-    its ids); a round is one ``_km_assign_arrow`` pass plus one
-    ``_km_recompute_arrow``, whose k×64 centroids come back to the
-    driver.  ``corpus`` (vec_id, v) must already be checkpointed: every
-    round re-reads it.  NOT spread (measured a LOSS: rounds over a
+    its ids); a round is one ``_km_round_arrow`` pass (assign and
+    partial sums in one ``mapInPandas``, one ``groupBy(cl, pos0)``),
+    whose k×64 (cl, pos0, av) rows come back to the driver.  ``corpus``
+    (vec_id, v) must already be checkpointed: every round re-reads it.
+    NOT spread (measured a LOSS: rounds over a
     tiny corpus are task-launch-bound; j43b went ~23 → ~35 s at sf0.1).
 
     Stop rule: ``_KM_ROUNDS`` rounds (what the j43/j44 oracles unroll),
@@ -2196,7 +2219,7 @@ def _km_fit_arrow(corpus: DataFrame, k: int = _KM_K, converge: bool = False):
     prev_q = quantized(cents)
     converged = saw_cluster_loss = False
     for rounds in range(1, (_KMB_MAX_ROUNDS if converge else _KM_ROUNDS) + 1):
-        cents = _km_recompute_arrow(_km_assign_arrow(corpus, cents)).collect()
+        cents = _km_collect_centroids(_km_round_arrow(corpus, cents))
         new_q = quantized(cents)
         move = max(
             (
@@ -2249,9 +2272,9 @@ def j43_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosines (order-independent — no float-sum drift), and the
     serialized centroid (the loop's collected doubles).
 
-    100 TB shape: centroids are a k-row broadcast; each assignment is
-    one map-side pass (one dgemm per Arrow batch, no shuffle); each
-    recompute shuffles only (k x 64) partial sums per batch.  Rounds
+    100 TB shape: centroids are a k-row broadcast; each round is one
+    map-side pass (one dgemm per Arrow batch) that shuffles only
+    (k x 64) partial sums per batch.  Rounds
     are a bounded driver loop on a checkpointed corpus — the classic
     distributed Lloyd layout."""
     e = _vectors(spark, sf_dir)
@@ -2752,8 +2775,8 @@ def j43b_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-steps optimize DIFFERENT objectives and assignments can
     2-cycle forever, observed on this very corpus.)
 
-    Scale: per round = one map-side Arrow assignment pass over N rows +
-    one (k x 64)-row partial aggregate + one k-row collect; driver
+    Scale: per round = one map-side Arrow pass over N rows (assign +
+    partial sums) + one (k x 64)-row aggregate + its collect; driver
     state is O(k x dims); rounds are data-bounded by the fixpoint
     (observed 15 / 19 / 35 at sf0.001 / 0.01 / 0.1).  At 100 TB the same
     loop holds: centroids always fit a broadcast."""

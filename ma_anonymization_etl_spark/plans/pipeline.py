@@ -3,9 +3,17 @@ classification) and i23 (the composer, the reference's raison d'être).
 
 The reference's lifecycle (SURVEY §3) is *read → classify DI/QI/SA →
 ordered transforms → metrics → write*.  Here the "route" is a plain
-JSON-able list of steps; folding it over a DataFrame builds ONE lazy
-Catalyst plan, so the whole pipeline optimizes as a unit (filters
-reordered around map-side transforms, etc.).
+JSON-able list of steps; folding it over a DataFrame builds one lazy
+Catalyst plan between cuts, so each stretch of steps optimizes as a
+unit (filters reordered around map-side transforms, etc.).
+
+The cut rule: the fold cuts the lineage (``sources.io.materialize``, a
+local checkpoint) before each step in ``REREADS_INPUT`` that is not the
+route's first step, and nowhere else.  Those dedup steps read their
+input more than once (a self-join, an eager job while planning, then
+the anti-join back), so without a cut every read re-runs every step
+before them.  A cut costs one job, so row-local and map-side steps
+stay in one plan.
 
 Ordering caveat encoded by design (SURVEY §4): suppression does NOT
 commute with joins/aggregations — anonymize-then-join ≠
@@ -22,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.operators import anonymize as A
+from ma_anonymization_etl_spark.sources.io import materialize
 
 ROLES = ("di", "qi", "sa", "keep")
 
@@ -306,28 +315,29 @@ def _step_domain_quota_filter(df, host_col, id_col="doc_id", quota=10, salt="quo
 
 
 def _step_quality_filter(df, id_col="doc_id", min_words=30, min_stop_frac=0.0):
-    from ma_anonymization_etl_spark.operators.llm import text_quality_score
+    """Keep rows whose j14 signals (``quality_signals`` over ``text``)
+    reach ``min_words`` words and ``min_stop_frac`` stopword share — a
+    filter in place, each row judged alone.  ``id_col`` is accepted for
+    route compatibility; as under the earlier id semi-join, a row whose
+    id is NULL drops."""
+    from ma_anonymization_etl_spark.operators.llm import quality_signals
 
-    # n_chars is optional: text_quality_score computes it from text when
-    # absent (round-7 review — a hard select here broke bare (id, text)
-    # inputs that the library function itself accepts).
-    cols = [F.col(id_col).alias("doc_id"), "text"] + (
-        ["n_chars"] if "n_chars" in df.columns else []
+    q = quality_signals()
+    return df.filter(
+        F.col(id_col).isNotNull()
+        & (q["n_words"] >= min_words)
+        & (q["stop_frac"] >= min_stop_frac)
     )
-    scores = text_quality_score(df.select(*cols))
-    keep = scores.filter(
-        (F.col("n_words") >= min_words) & (F.col("stop_frac") >= min_stop_frac)
-    ).select(F.col("doc_id").alias(id_col))
-    return df.join(keep, id_col, "left_semi")
 
 
 def _step_lang_filter(df, id_col="doc_id", keep_langs=("en",)):
-    from ma_anonymization_etl_spark.operators.llm import lang_id
+    """Keep rows whose j13 prediction (``lang_pred`` over ``text``) is
+    in ``keep_langs`` — a filter in place, each row judged alone.
+    ``id_col`` is accepted for route compatibility; as under the
+    earlier id semi-join, a row whose id is NULL drops."""
+    from ma_anonymization_etl_spark.operators.llm import lang_pred
 
-    keep = lang_id(df.select(F.col(id_col).alias("doc_id"), "text")).filter(
-        F.col("lang_pred").isin(*keep_langs)
-    ).select(F.col("doc_id").alias(id_col))
-    return df.join(keep, id_col, "left_semi")
+    return df.filter(F.col(id_col).isNotNull() & lang_pred().isin(*keep_langs))
 
 
 def _step_decontaminate_filter(
@@ -510,6 +520,15 @@ STEPS = {
     "enrich_join": _step_enrich_join,
 }
 
+# Dedup steps that read their input more than once: the fold cuts the
+# lineage before them (see the module docstring).  semantic_dedup_drop
+# and knn_label are left out on purpose: they read the working table
+# only for its ids (a semi-join into the aux vectors, then the join
+# back), so a map-side chain before them is cheap to re-run, and a cut
+# there measured two more jobs and no gain on the embedding-curation
+# route.
+REREADS_INPUT = frozenset({"near_dedup_drop", "fuzzy_dedup_drop", "substring_dedup"})
+
 # Steps that may consume SEVERAL named aux tables; anonymize_pipeline
 # hands them the full `tables` mapping so per-item references
 # (constraint_report's parent_aux) resolve at run time.
@@ -530,7 +549,9 @@ def anonymize_pipeline(
     """i23: fold an ordered list of anonymization steps over a DataFrame.
 
     Each step is ``{"op": <name>, **params}``; predicates are SQL
-    strings so routes serialize to JSON.  Returns ONE lazy plan.
+    strings so routes serialize to JSON.  Returns one lazy plan from
+    the last cut on: before each ``REREADS_INPUT`` step after the first,
+    the working table is materialized (``sources.io.materialize``).
 
     ``tables`` holds named AUXILIARY DataFrames (the route JSON's
     ``aux_inputs``); a step whose params include ``"aux": "<name>"``
@@ -563,8 +584,10 @@ def anonymize_pipeline(
             inspect.signature(STEPS[op]).bind(df, **params)
         except TypeError as err:
             raise ValueError(f"route step {i} ({op!r}): {err}") from None
-        bound.append((STEPS[op], params))
+        bound.append((i, op, params))
     out = df
-    for fn, params in bound:
-        out = fn(out, **params)
+    for i, op, params in bound:
+        if op in REREADS_INPUT and i > 1:
+            out = materialize(out, f"route step {i} ({op}): cut before a re-reading step")
+        out = STEPS[op](out, **params)
     return out

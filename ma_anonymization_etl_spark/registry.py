@@ -46,6 +46,16 @@ _OPERATOR_MODULES = [
     "ma_anonymization_etl_spark.operators.quality",
 ]
 
+# Modules that a fresh interpreter registers INSIDE another module's
+# registration: the named query's oracle builder imports the module
+# (anonymize_queries' i41 imports dp, streaming_queries' k10 imports
+# llm), so its queries precede that query.  load_all replays this, so
+# its order is the same whichever operator module a process imports
+# first.
+_REGISTERED_INSIDE = {
+    "ma_anonymization_etl_spark.operators.dp": "i41_pram_categorical",
+    "ma_anonymization_etl_spark.operators.llm": "k10_stream_minhash_dedup",
+}
 
 # The driver's correctness gate samples the FIRST 50 queries in
 # registration order.  Rounds 1-3 registered the relational basics
@@ -186,15 +196,33 @@ def load_all() -> dict[str, Query]:
 
     Emission order is the order the driver samples its 50-query
     correctness window in, so the curated window list leads and the
-    remaining queries follow in module/decorator order.
+    remaining queries follow the order a fresh interpreter registers
+    them in: ``_OPERATOR_MODULES`` order, decorator order within a
+    module, and each ``_REGISTERED_INSIDE`` module just before the query
+    whose oracle builder imports it; queries of any other module come
+    last.  The order does not depend on which operator modules the
+    process imported first.
     """
     for mod in _OPERATOR_MODULES:
         importlib.import_module(mod)
     missing = [n for n in DRIVER_WINDOW if n not in _REGISTRY]
     if missing:
         raise RuntimeError(f"DRIVER_WINDOW names not registered: {missing}")
+    by_module: dict[str, list[Query]] = {}
+    for q in _REGISTRY.values():
+        by_module.setdefault(q.fn.__module__, []).append(q)
+    host_of = {name: mod for mod, name in _REGISTERED_INSIDE.items()}
+
+    def walk(mod):
+        for q in by_module.pop(mod, []):
+            if q.name in host_of:
+                yield from walk(host_of[q.name])
+            yield q
+
     ordered = {n: _REGISTRY[n] for n in DRIVER_WINDOW}
-    ordered.update((n, q) for n, q in _REGISTRY.items() if n not in ordered)
+    for mod in [*_OPERATOR_MODULES, *by_module]:
+        for q in walk(mod):
+            ordered.setdefault(q.name, q)
     return ordered
 
 

@@ -180,6 +180,24 @@ def session_reuse(spark: SparkSession, sf_dir: str, tag: str, build):
     return _SESSION_STORE[key]
 
 
+def materialize(df: DataFrame, reason: str) -> DataFrame:
+    """Cut ``df``'s lineage: run it once into executor storage
+    (``localCheckpoint(eager=True)``) and return the checkpointed frame,
+    so every later consumer reads the stored rows instead of re-running
+    the plan.  ``reason`` is the checkpoint job's Spark job description,
+    which names the cut in the UI and the status store.
+
+    The checkpoint is local: its blocks live on the executors, so
+    losing one fails the job that reads them."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(reason)
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        sc.setJobDescription(prev)
+
+
 def _unpersist_all(value) -> None:
     """Unpersist every DataFrame in a stored value (a DataFrame or a
     tuple holding some).  A frame of a stopped session raises on

@@ -1,7 +1,7 @@
 """The declarative k-means referee: the Spark SQL form of the Lloyd
 contract that j43/j44's DuckDB oracles replay (crossJoin + ROW_NUMBER
 argmax, posexplode recompute).  The engine runs the Arrow forms
-(``_km_assign_arrow`` / ``_km_recompute_arrow`` / ``_km_fit_arrow``);
+(``_km_round_arrow`` / ``_km_assign_arrow`` / ``_km_fit_arrow``);
 property tests pin them against these, decision for decision and bit
 for bit."""
 

@@ -4,6 +4,7 @@ session), DI-leak refusal, and output re-read."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,6 +12,8 @@ from pyspark.sql import functions as F
 from ma_anonymization_etl_spark.cli import main, run_route
 from ma_anonymization_etl_spark.operators.anonymize import k_anonymity_metric
 from tests.conftest import SF_ORACLE
+
+EXAMPLES = Path(__file__).resolve().parents[1] / "examples"
 
 
 def test_example_route_end_to_end(spark, tmp_path, capsys):
@@ -533,6 +536,62 @@ def test_route_dedup_stack_end_to_end(spark, tmp_path):
     assert out.select("text").distinct().count() == n
 
 
+def _jobs_and_stages(spark, group, fn):
+    """Run ``fn()`` under a Spark job group; return (jobs, stages, its
+    result), stages counted over every job of the group, skipped ones
+    included."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+        # Listener events arrive in order: once a later job in another
+        # group is visible, every job of this group is too.
+        sc.setJobGroup(group + "-sentinel", "sentinel")
+        spark.range(1).count()
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(group + "-sentinel"):
+            assert time.time() < deadline, "sentinel job never reported"
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    return len(jobs), len(stages), result
+
+
+def test_route_dedup_stack_cuts_only_before_rereading_steps(spark, tmp_path):
+    """The full dedup stack through ``run_route`` with its sink: the fold
+    cuts the lineage before near_dedup_drop, fuzzy_dedup_drop and
+    substring_dedup, so no step re-runs the steps before it.  On the
+    SF_ORACLE fixture its jobs and stages stay at or below the 26 / 40
+    measured with the cuts (the uncut fold ran 46 / 98–100), and it
+    releases the same doc ids as a plain uncut fold of the same steps."""
+    from ma_anonymization_etl_spark.plans.pipeline import STEPS
+    from ma_anonymization_etl_spark.sources.io import load
+
+    route = json.loads((EXAMPLES / "route_dedup_stack.json").read_text())
+    route["input"]["sf_dir"] = SF_ORACLE
+    route["output"]["path"] = str(tmp_path / "out")
+    jobs, stages, _ = _jobs_and_stages(
+        spark, "dedup-stack-shape", lambda: run_route(spark, route)
+    )
+    assert jobs <= 26 and stages <= 40, (jobs, stages)
+
+    # Referee: the uncut fold, every step planned on the one lineage.
+    ref = load(spark, SF_ORACLE, "documents")
+    for step in route["steps"]:
+        params = dict(step)
+        ref = STEPS[params.pop("op")](ref, **params)
+    got = spark.read.parquet(str(tmp_path / "out")).select("doc_id").collect()
+    want = ref.select("doc_id").collect()
+    assert got and sorted(r.doc_id for r in got) == sorted(r.doc_id for r in want)
+
+
 def test_route_enrich_join_reintroduction_needs_fresh_coverage(spark):
     """Order-aware gate, the re-introduction edge: a DI projected by an
     enrich_join, suppressed, then RE-introduced by a second enrich_join
@@ -708,17 +767,13 @@ def test_route_bad_step_key_fails_before_any_job(spark):
     fold starts: a misspelt key in step 2 raises a ValueError naming
     the step, the op and the key, and step 1 (semantic_dedup_drop,
     which counts and checkpoints while it is planned) runs no job."""
-    import time
-
     from ma_anonymization_etl_spark.plans.pipeline import anonymize_pipeline
     from ma_anonymization_etl_spark.sources.io import load
 
     docs = load(spark, SF_ORACLE, "documents")
     vecs = load(spark, SF_ORACLE, "embeddings")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup("route-bind-probe", "bad step key")
-    try:
+
+    def plan_bad_route():
         with pytest.raises(ValueError, match=r"step 2 \('knn_label'\).*'kk'"):
             anonymize_pipeline(
                 docs,
@@ -728,19 +783,9 @@ def test_route_bad_step_key_fails_before_any_job(spark):
                 ],
                 tables={"vectors": vecs},
             )
-        # Listener events arrive in order: once a later job in another
-        # group is visible, every job of the probe group is too.
-        sc.setJobGroup("route-bind-sentinel", "sentinel")
-        spark.range(1).count()
-        deadline = time.time() + 30
-        while not tracker.getJobIdsForGroup("route-bind-sentinel"):
-            assert time.time() < deadline, "sentinel job never reported"
-            time.sleep(0.05)
-        assert tracker.getJobIdsForGroup("route-bind-probe") == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+    jobs, _, _ = _jobs_and_stages(spark, "route-bind-probe", plan_bad_route)
+    assert jobs == 0
 
 
 def test_main_counts_the_sink_without_rerunning_the_route(

@@ -294,6 +294,30 @@ def test_quality_filter_step_accepts_bare_id_text(spark):
     assert [r.doc_id for r in out.collect()] == [1]
 
 
+def test_row_local_filter_steps_judge_each_row(spark):
+    """quality_filter and lang_filter filter rows in place, so with a
+    non-unique id each row is judged alone: the earlier id semi-join
+    kept every row of an id if any one of them passed.  A NULL id still
+    drops, as under the semi-join."""
+    from ma_anonymization_etl_spark.plans.pipeline import anonymize_pipeline
+
+    good = "the and is of to " * 10
+    df = spark.createDataFrame(
+        [(1, good, "pass"), (1, "x", "fail"), (None, good, "null id")],
+        "doc_id LONG, text STRING, tag STRING",
+    )
+    out = anonymize_pipeline(df, [{"op": "quality_filter", "min_words": 10}])
+    assert [r.tag for r in out.collect()] == ["pass"]
+
+    df = spark.createDataFrame(
+        [(2, "plain ascii words", "pass"), (2, "schöne grüße", "fail"),
+         (None, "plain ascii words", "null id")],
+        "doc_id LONG, text STRING, tag STRING",
+    )
+    out = anonymize_pipeline(df, [{"op": "lang_filter", "keep_langs": ["en"]}])
+    assert [r.tag for r in out.collect()] == ["pass"]
+
+
 def test_overlap_against_two_table_semantics(spark):
     """overlap_against must score docs against the REFERENCE's gram
     set only: a doc equal to a reference doc is fully contaminated, a

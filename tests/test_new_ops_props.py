@@ -758,8 +758,8 @@ def test_j43b_converges_to_monotone_fixpoint(spark):
     """The converge mode of the Lloyd loop must (a) actually converge
     with all k clusters surviving and non-empty, (b) follow the path an
     independent replay from the two primitives (``_km_assign_arrow`` /
-    ``_km_recompute_arrow``) takes — same round count, same final
-    assignment — along which the spherical objective
+    the fused round ``_km_round_arrow``) takes — same round count, same
+    final assignment — along which the spherical objective
     sum_i cos(v_i, c_a(i)) never decreases (both Lloyd half-steps
     maximize it; tolerance covers the 1e-6 centroid quantization), and
     (c) stop at a FIXPOINT: one more recompute and assign round changes
@@ -775,8 +775,9 @@ def test_j43b_converges_to_monotone_fixpoint(spark):
         _KMB_EPS_MICRO,
         _KMB_MAX_ROUNDS,
         _km_assign_arrow,
+        _km_collect_centroids,
         _km_fit_arrow,
-        _km_recompute_arrow,
+        _km_round_arrow,
     )
 
     def cos(x, y):
@@ -796,7 +797,7 @@ def test_j43b_converges_to_monotone_fixpoint(spark):
             assign = _km_assign_arrow(corpus, cents)
             by_cl = {r.cl: r.cent for r in cents}
             trace.append(sum(cos(r.v, by_cl[r.cl]) for r in assign.collect()))
-            new = _km_recompute_arrow(assign).collect()
+            new = _km_collect_centroids(_km_round_arrow(corpus, cents))
             old_q, new_q = quantized(cents), quantized(new)
             move = max(
                 (
@@ -837,7 +838,9 @@ def test_j43b_converges_to_monotone_fixpoint(spark):
         for a, b in zip(trace, trace[1:]):
             assert b >= a - 1e-3, f"objective decreased: {trace}"
         # fixpoint: one more recompute+assign round leaves every cl unchanged
-        again = _km_assign_arrow(corpus, _km_recompute_arrow(assign).collect())
+        again = _km_assign_arrow(
+            corpus, _km_collect_centroids(_km_round_arrow(corpus, cents))
+        )
         assert {r.vec_id: r.cl for r in again.collect()} == got
 
 
@@ -2603,17 +2606,20 @@ def test_j56d_auto_passes_derivation(spark, monkeypatch):
     assert got_multi == base  # derived P>=2 -> bounded path, same release
 
 
-def test_km_recompute_arrow_bit_identical(spark):
-    """The Arrow partial-sum centroid recompute (j44b constant cut,
-    VERDICT r11 item 3) must produce BIT-IDENTICAL centroids to the
-    declarative posexplode recompute — including on adversarial
-    quantization values (exact .5 ties both signs, near-tie one-ulp
-    cases, negatives) where a wrong rounding replica would flip an
-    int64 partial."""
+def test_km_round_arrow_bit_identical(spark):
+    """The fused Lloyd round (assign and int64 partial sums in one Arrow
+    pass, then one groupBy) must produce BIT-IDENTICAL centroids to the
+    declarative referee's assign + posexplode recompute — including on
+    adversarial quantization values (exact .5 ties both signs, near-tie
+    one-ulp cases, negatives) where a wrong rounding replica would flip
+    an int64 partial.  Its plan is one MapInPandas and one Exchange."""
     import random
 
-    from ma_anonymization_etl_spark.operators.similarity import _km_recompute_arrow
-    from tests.km_referee import _km_recompute
+    from ma_anonymization_etl_spark.operators.similarity import (
+        _km_collect_centroids,
+        _km_round_arrow,
+    )
+    from tests.km_referee import _km_assign, _km_recompute
 
     rng = random.Random(61)
     adversarial = [
@@ -2629,13 +2635,19 @@ def test_km_recompute_arrow_bit_identical(spark):
         v = [rng.uniform(-2, 2) for _ in range(8)]
         if i < len(adversarial) * 8:
             v[i % 8] = adversarial[i % len(adversarial)]
-        rows.append((i, i % 5, v))
-    assign = spark.createDataFrame(
-        rows, "vec_id long, cl long, v array<double>"
-    ).repartition(7)  # several Arrow batches -> partials actually merge
+        rows.append((i, v))
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, v array<double>"
+    ).repartition(7).localCheckpoint(eager=True)  # several Arrow batches
+    cents = spark.createDataFrame(rows[100:105], "cl long, cent array<double>")
 
-    ref = {r.cl: list(r.cent) for r in _km_recompute(assign).collect()}
-    got = {r.cl: list(r.cent) for r in _km_recompute_arrow(assign).collect()}
+    ref = {r.cl: list(r.cent) for r in _km_recompute(_km_assign(corpus, cents)).collect()}
+    per_dim = _km_round_arrow(corpus, cents.collect())
+    plan = per_dim._jdf.queryExecution().executedPlan().toString()  # before it runs
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    got = {r.cl: list(r.cent) for r in _km_collect_centroids(per_dim)}
+    assert len(ref) > 1
     assert got == ref  # exact float equality: same bits
 
 

@@ -335,6 +335,23 @@ def test_route_steps_have_no_global_window(spark, step, src):
     assert not bad, f"global window in route step {step['op']}:\n" + "\n".join(bad)
 
 
+@pytest.mark.parametrize(
+    "step",
+    [{"op": "quality_filter", "min_words": 5}, {"op": "lang_filter", "keep_langs": ["en"]}],
+    ids=["quality_filter", "lang_filter"],
+)
+def test_row_local_filter_steps_do_not_join(spark, step):
+    """quality_filter and lang_filter are filters in place: scoring a
+    projection and joining it back would put the whole lineage before
+    the step into the plan twice."""
+    from ma_anonymization_etl_spark.plans.pipeline import anonymize_pipeline
+    from ma_anonymization_etl_spark.sources.io import load
+
+    out = anonymize_pipeline(load(spark, SF_ORACLE, "documents"), [step])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
+
+
 def test_demo_global_windows_stay_out_of_steps():
     """The three documented demo queries with global windows must not
     be reachable as route steps under any op name."""

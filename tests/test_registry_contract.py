@@ -21,20 +21,39 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_registry_matches_contract():
-    # A fresh interpreter: past DRIVER_WINDOW, load_all's order is the
-    # order the operator modules were first imported in, and other test
-    # modules import some of them early.
+def _emitted(first_import: str = "") -> list:
+    """The contract rows a fresh interpreter prints, after importing
+    ``first_import`` (a module) when one is given."""
+    code = "import runpy; runpy.run_module('tests.test_registry_contract', run_name='__main__')"
+    if first_import:
+        code = f"import {first_import}; {code}"
     out = subprocess.run(
-        [sys.executable, "-m", "tests.test_registry_contract"],
+        [sys.executable, "-c", code],
         cwd=ROOT, capture_output=True, text=True, check=True,
     )
-    got = json.loads(out.stdout)
+    return json.loads(out.stdout)
+
+
+def _contract() -> list:
     with open(os.path.join(ROOT, "tests", "registry_contract.json")) as f:
-        want = json.load(f)
+        return json.load(f)
+
+
+def test_registry_matches_contract():
+    # A fresh interpreter, so the check does not rest on what other
+    # test modules imported into this process.
+    got, want = _emitted(), _contract()
     assert [n for n, _ in got] == [n for n, _ in want]
     changed = [g[0] for g, w in zip(got, want) if g != w]
     assert not changed, f"oracle SQL changed for: {changed}"
+
+
+def test_registry_order_does_not_depend_on_import_order():
+    """A process that imports an operator module before its first
+    ``load_all()`` (here operators.llm, which a test module or a
+    notebook may import at the top) gets the contract order too."""
+    got = _emitted("ma_anonymization_etl_spark.operators.llm")
+    assert [n for n, _ in got] == [n for n, _ in _contract()]
 
 
 if __name__ == "__main__":
